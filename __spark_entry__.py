@@ -9,7 +9,7 @@ pixel/iterative paths.
 from __future__ import annotations
 
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +29,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
 
 
-def oracle_sql() -> dict[str, str]:
+def oracle_sql() -> Mapping[str, str]:
     from osml10n_spark.contract import resolve_oracles
     return resolve_oracles()

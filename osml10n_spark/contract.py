@@ -13,6 +13,7 @@ have no oracle → the driver records the weaker rows-only check.
 from __future__ import annotations
 
 import functools
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -3243,12 +3244,28 @@ def _resolve_oracle(name: str) -> str:
     return v() if callable(v) else v
 
 
-def resolve_oracles() -> dict[str, str]:
-    """ORACLES with every lazily-built (callable) entry resolved to its
-    SQL string — cached, so repeated callers (the per-query gate tests)
-    pay the replay-literal generation cost once per process instead of
-    at module import."""
-    return {k: _resolve_oracle(k) for k in ORACLES}
+class _Oracles(Mapping):
+    """ORACLES as a read-only mapping that resolves each callable entry
+    to its SQL string on first access (cached): the per-query gate pays
+    the replay-literal generation cost once per process, and a broken
+    builder fails only its own query."""
+
+    def __getitem__(self, name: str) -> str:
+        return _resolve_oracle(name)
+
+    def __contains__(self, name) -> bool:
+        return name in ORACLES
+
+    def __iter__(self):
+        return iter(ORACLES)
+
+    def __len__(self) -> int:
+        return len(ORACLES)
+
+
+def resolve_oracles() -> Mapping[str, str]:
+    """Oracle SQL by query name, built per query on access."""
+    return _Oracles()
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001"):

@@ -1,16 +1,17 @@
 """Batch job runner: localize → geo-partition → snapshot commit with
-lineage + metrics, resumable mid-run.
+lineage + metrics in the manifest, resumable mid-run.
 
 ``run_localization_job`` processes the input in partition groups keyed
-by a coarse cell prefix (parent cell at a low resolution).  Each group
-commits its own snapshot — killing the job between commits and rerunning
-resumes from the manifest and produces the identical final table
-(tests/test_snapshots.py proves it).
+by a coarse cell prefix (parent cell at a low resolution).  One
+aggregate over the localized frame yields every prefix's lineage row —
+it reads no ``caption_l10n``, so column pruning keeps the cascade UDF
+out of it.  Each group then commits its own snapshot with one Spark
+action, the data write: the ``cell_prefix`` filter sits below the UDF,
+so every row is localized once.  Killing the job between commits and
+rerunning resumes from the manifests and produces the identical final
+table (tests/test_snapshots.py proves it).
 """
 from __future__ import annotations
-
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -35,35 +36,25 @@ def run_localization_job(spark: SparkSession, images: DataFrame, store_root: str
                          max_commits: int | None = None) -> dict:
     """Returns a summary dict with snapshots committed and metrics."""
     store = SnapshotStore(store_root)
-    staged = add_cell_prefix(images)
+    localized = localize(add_cell_prefix(images), target_lang)
 
     done = store.completed_partitions()
-    prefixes = [r.cell_prefix for r in
-                staged.select("cell_prefix").distinct().collect()]
-    todo = sorted(p for p in prefixes if p not in done)
+    lineage_rows = {r.cell_prefix: r.asDict()
+                    for r in lineage(localized).collect()}
+    todo = sorted(p for p in lineage_rows if p not in done)
 
     committed = []
     for i in range(0, len(todo), groups_per_commit):
         if max_commits is not None and len(committed) >= max_commits:
             break
         batch_keys = todo[i:i + groups_per_commit]
-        batch = staged.filter(F.col("cell_prefix").isin(batch_keys))
-        out = localize(batch, target_lang, repartition_by_cell=False)
-        observed, obs = observe_localization(out)
-        result = observed.repartition(F.col("cell_prefix")) \
+        result = localized.filter(F.col("cell_prefix").isin(batch_keys)) \
+            .repartition(F.col("cell_prefix")) \
             .sortWithinPartitions("cell_id", "tile_id")
-        manifest = store.commit(result, batch_keys, metrics={})
-        # Observation values are available after the commit action ran;
-        # the store owns the manifest rewrite
-        manifest["metrics"] = {k: (int(v) if v is not None else None)
-                               for k, v in obs.get.items()}
-        store.update_metrics(manifest["snapshot_id"], manifest["metrics"])
-        # lineage from the JUST-WRITTEN files — identical rows without
-        # re-running the cascade a second time
-        committed_df = spark.read.parquet(manifest["data_dir"])
-        lineage(committed_df).write.mode("overwrite").parquet(
-            os.path.join(store_root, "lineage", manifest["snapshot_id"]))
-        committed.append(manifest)
+        observed, obs = observe_localization(result)
+        committed.append(store.commit(
+            observed, batch_keys, metrics=obs,
+            lineage=[lineage_rows[k] for k in batch_keys]))
     return {"snapshots": [m["snapshot_id"] for m in committed],
             "total_rows": sum(m["row_count"] for m in committed),
             "resumed_from": len(done)}

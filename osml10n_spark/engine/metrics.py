@@ -1,10 +1,10 @@
 """Observable metrics + per-partition lineage (north_rule requirement).
 
 - observe_localization: attaches a named Observation to the pipeline
-  DataFrame (rows, empty outputs, distinct countries, payload bytes) —
+  DataFrame (rows, empty outputs, approximate distinct cells) —
   collected for free with the action that materializes the plan.
-- lineage: one row per cell prefix (rows in/out, bytes, countries) —
-  written beside each snapshot by run_job.
+- lineage: one row per cell prefix (rows out, tiles, min/max id,
+  payload bytes) — recorded in each snapshot manifest by run_job.
 """
 from __future__ import annotations
 

@@ -4,7 +4,7 @@ No Iceberg jar ships in the sandbox, so snapshot isolation is emulated
 with the same contract (SURVEY.md §2.6 E4, §4): a snapshot directory
 holds immutable parquet data plus a manifest JSON recording the
 snapshot id, parent, completed partition keys (cell prefixes), row
-counts and metrics.  Resume semantics:
+count, metrics and one lineage row per partition key.  Resume semantics:
 
 - partition-level: completed cell prefixes are skipped wholesale (an
   anti-join against a tiny broadcast list — the cheap path);
@@ -21,7 +21,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 __all__ = ["SnapshotStore"]
 
@@ -42,7 +42,7 @@ class SnapshotStore:
         leave a truncated manifest that poisons every later resume."""
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
+            json.dump(manifest, f, separators=(",", ":"))
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, path)
@@ -74,25 +74,37 @@ class SnapshotStore:
         return snaps[-1] if snaps else None
 
     def commit(self, df: DataFrame, partition_keys: list[int],
-               metrics: dict | None = None) -> dict:
-        """Write a new immutable snapshot: data files first, manifest
-        last (the commit point — readers only see manifested data)."""
+               metrics: dict | Observation | None = None,
+               lineage: list[dict] | None = None) -> dict:
+        """Write a new immutable snapshot with one Spark action: data
+        files first, manifest last (the commit point — readers only see
+        manifested data).
+
+        The row count is an Observation wrapping the top of the written
+        plan: it is collected in the result stage, so a recomputed
+        shuffle-map stage below cannot count twice.  ``metrics`` may be
+        an Observation attached to ``df``, resolved after the write.
+        Metrics and ``lineage`` rows land in the same manifest write, so
+        a committed snapshot never lacks its run facts."""
         parent = self.last_snapshot()
         seq = (parent["seq"] + 1) if parent else 0
         snap_id = f"{seq:06d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self.root, "data", snap_id)
-        df.write.mode("overwrite").parquet(data_dir)
-        # count from the written files (parquet footer metadata), not by
-        # re-running the pipeline
-        row_count = df.sparkSession.read.parquet(data_dir).count()
+        counted = Observation()
+        df.observe(counted, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite").parquet(data_dir)
+        if isinstance(metrics, Observation):
+            metrics = {k: (int(v) if v is not None else None)
+                       for k, v in metrics.get.items()}
         manifest = {
             "snapshot_id": snap_id,
             "seq": seq,
             "parent": parent["snapshot_id"] if parent else None,
             "data_dir": data_dir,
             "completed_partitions": sorted(int(k) for k in partition_keys),
-            "row_count": row_count,
+            "row_count": int(counted.get["rows"]),
             "metrics": metrics or {},
+            "lineage": lineage or [],
             "committed_at": time.time(),
         }
         self._write_manifest(self._manifest_path(snap_id), manifest)
@@ -234,16 +246,6 @@ class SnapshotStore:
                 if ep is not None:
                     out.add(int(ep))
         return out, max_seq
-
-    def update_metrics(self, snapshot_id: str, metrics: dict) -> None:
-        """Attach post-commit metrics (e.g. observation results that
-        only materialize after the write action) to a manifest."""
-        path = self._manifest_path(snapshot_id)
-        manifest = self._read_manifest(path)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed manifest at {path}")
-        manifest["metrics"] = metrics
-        self._write_manifest(path, manifest)
 
     def completed_partitions(self) -> set[int]:
         done: set[int] = set()

@@ -94,7 +94,7 @@ def interval_join(left: DataFrame, right: DataFrame, key_col: str,
     only relabels buckets).  ``bucket_width=None`` derives W from one
     tiny aggregate over the left side (~2× the mean interval length:
     explode factor ≈ 1.5 while buckets stay selective).  A row-level
-    ``assert_true`` guard fails the job for any interval spanning more
+    ``raise_error`` guard fails the job for any interval spanning more
     than ``max_span_buckets`` buckets (an outlier interval against a
     mean-derived W would otherwise SILENTLY explode into ~len/W rows —
     Spark's ``sequence`` itself accepts hundreds of thousands of

@@ -13,6 +13,7 @@ the reference's filesystem iteration order.
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import pickle
 
@@ -20,9 +21,16 @@ import numpy as np
 
 from .geometry import PackedPolygon, pack_polygon
 
-__all__ = ["BoundaryIndex", "load_boundaries", "REFERENCE_BOUNDARY_DIR"]
+__all__ = ["BoundaryIndex", "load_boundaries", "boundary_dir",
+           "REFERENCE_BOUNDARY_DIR"]
 
 REFERENCE_BOUNDARY_DIR = "/root/reference/osml10n/boundaries"
+
+
+def boundary_dir() -> str:
+    """The boundary GeoJSON directory every loader uses:
+    ``OSML10N_BOUNDARIES`` when set, else the reference checkout's."""
+    return os.environ.get("OSML10N_BOUNDARIES", REFERENCE_BOUNDARY_DIR)
 
 
 class BoundaryIndex:
@@ -71,11 +79,17 @@ def _feature_rings(geometry: dict) -> list:
     return rings
 
 
-def load_boundaries(dirname: str = REFERENCE_BOUNDARY_DIR) -> BoundaryIndex:
-    """Read every *.geojson feature in ``dirname`` (loader semantics of
+def load_boundaries(dirname: str | None = None) -> BoundaryIndex:
+    """Read every *.geojson feature in ``dirname`` (default
+    :func:`boundary_dir`; loader semantics of
     geo-transcript-srv.py:186-199) and pack into a BoundaryIndex."""
+    d = pathlib.Path(dirname or boundary_dir())
+    if not d.is_dir():
+        raise FileNotFoundError(
+            f"boundary directory {d} not found: set OSML10N_BOUNDARIES to "
+            "a directory of *.geojson files")
     polys: list[PackedPolygon] = []
-    for path in sorted(pathlib.Path(dirname).iterdir()):
+    for path in sorted(d.iterdir()):
         if path.is_file() and path.suffix == ".geojson":
             with open(path) as f:
                 doc = json.load(f)

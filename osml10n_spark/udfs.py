@@ -14,8 +14,6 @@ Design rules:
 """
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -46,10 +44,7 @@ def _prepared():
     if "prep" not in _STATE:
         from .spatial.boundaries import load_boundaries
         from .spatial.prepared import PreparedLookup
-        dirname = os.environ.get("OSML10N_BOUNDARIES",
-                                 "/root/reference/osml10n/boundaries")
-        idx = load_boundaries(dirname)
-        _STATE["prep"] = PreparedLookup(idx, res=9)
+        _STATE["prep"] = PreparedLookup(load_boundaries(), res=9)
     return _STATE["prep"]
 
 

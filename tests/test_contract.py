@@ -113,3 +113,20 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["image_id", "caption_l10n", "cell_id", "tile_id"]
+
+
+def test_broken_oracle_fails_only_its_own_query(monkeypatch):
+    """Oracles resolve per query on access: a builder that raises (e.g.
+    missing boundaries) must not take the other queries' oracles down."""
+    from osml10n_spark import contract
+
+    def broken():
+        raise FileNotFoundError("no boundaries")
+
+    monkeypatch.setitem(contract.ORACLES, "q_broken", broken)
+    oracles = entrymod.oracle_sql()
+    assert "q_broken" in oracles and len(oracles) == len(contract.ORACLES)
+    assert oracles.get("q_abbrev_de") == contract.ORACLES["q_abbrev_de"]
+    with pytest.raises(FileNotFoundError):
+        oracles.get("q_broken")
+    assert oracles.get("q_no_such_query") is None

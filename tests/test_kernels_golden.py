@@ -108,6 +108,9 @@ def test_country_name_andorra():
 
 # ------------------------------------------------- abbreviation CSV corpus
 def _csv_cases():
+    if not REF_TESTS.is_dir():
+        return [pytest.param(None, None, None, marks=pytest.mark.skip(
+            reason=f"reference abbreviation CSVs not found at {REF_TESTS}"))]
     cases = []
     for lang in ("de", "en", "fr"):
         for row in csv.reader(open(REF_TESTS / f"{lang}_tests.csv")):

@@ -332,3 +332,33 @@ def test_add_gopher_flags_plan_shape(spark):
     assert python_eval_count(out) == 0
     from osml10n_spark.plans.inspect import physical_plan
     assert "Generate explode" in physical_plan(out, mode="simple")
+
+
+def _localized_job_input(spark, staged):
+    """The frame run_localization_job builds once per job."""
+    from osml10n_spark.engine.job import add_cell_prefix
+    from osml10n_spark.engine.localize import localize
+    return localize(add_cell_prefix(spark.read.parquet(staged)), "de")
+
+
+def test_job_lineage_scan_prunes_the_cascade(spark, staged):
+    """The job's one pre-commit scan (lineage rows + todo prefixes)
+    reads no caption_l10n, so column pruning drops the Python island."""
+    from osml10n_spark.engine.metrics import lineage
+    assert python_eval_count(lineage(_localized_job_input(spark, staged))) == 0
+
+
+def test_job_commit_filter_sits_below_the_cascade(spark, staged):
+    """Each commit filters the shared localized frame by cell_prefix;
+    Catalyst must push that Filter below ArrowEvalPython, so every row
+    is localized once per job, not once per commit."""
+    from osml10n_spark.plans import physical_plan
+    batch = _localized_job_input(spark, staged) \
+        .filter(F.col("cell_prefix").isin([1, 2])) \
+        .repartition(F.col("cell_prefix")).sortWithinPartitions("cell_id")
+    ops = [ln.strip().lstrip("+- :") for ln in
+           physical_plan(batch, "simple").splitlines()]
+    arrow = [i for i, op in enumerate(ops) if op.startswith("ArrowEvalPython")]
+    filters = [i for i, op in enumerate(ops) if op.startswith("Filter ")]
+    assert len(arrow) == 1 and filters, ops
+    assert min(filters) > arrow[0]          # printed below = runs before

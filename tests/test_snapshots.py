@@ -1,8 +1,5 @@
 """Snapshot/resume + streaming tests: kill-after-snapshot resume
 produces the identical final table with no duplicates (north_rule)."""
-import glob
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,10 +54,25 @@ def test_manifest_metrics_and_lineage(spark, tmp_path):
     assert man["row_count"] == 120
     assert man["metrics"]["rows"] == 120
     assert man["metrics"]["empty_out"] == 0
-    lineage_files = glob.glob(os.path.join(root, "lineage", "*", "*.parquet"))
-    assert lineage_files
-    lin = spark.read.parquet(os.path.join(root, "lineage", man["snapshot_id"]))
-    assert lin.agg(F.sum("rows_out")).collect()[0][0] == 120
+    assert sum(r["rows_out"] for r in man["lineage"]) == 120
+
+
+def test_manifest_lineage_matches_committed_data(spark, tmp_path):
+    """A killed run's only manifest carries the lineage of exactly the
+    partitions it completed, equal to a groupBy over its own data."""
+    images = generate_images(spark, 120, seed=13, with_images=False)
+    root = str(tmp_path / "ml")
+    run_localization_job(spark, images, root, "en", groups_per_commit=2,
+                         max_commits=1)
+    man = SnapshotStore(root).last_snapshot()
+    lin = {r["cell_prefix"]: r for r in man["lineage"]}
+    assert len(lin) == 2 and sorted(lin) == man["completed_partitions"]
+    data = spark.read.parquet(man["data_dir"]).groupBy("cell_prefix").agg(
+        F.count(F.lit(1)).alias("rows"), F.min("image_id").alias("lo"),
+        F.max("image_id").alias("hi")).collect()
+    assert {r.cell_prefix: (r.rows, r.lo, r.hi) for r in data} == {
+        k: (r["rows_out"], r["min_id"], r["max_id"]) for k, r in lin.items()}
+    assert man["row_count"] == sum(r["rows_out"] for r in lin.values())
 
 
 def test_row_level_pending(spark, tmp_path):

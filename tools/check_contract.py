@@ -59,7 +59,12 @@ for name in sorted(qs):
         fails.append(name)
         print(f"FAIL  {name}: spark error {e}")
         continue
-    sql = oracles.get(name)
+    try:
+        sql = oracles.get(name)
+    except Exception as e:
+        fails.append(name)
+        print(f"FAIL  {name}: oracle error {e}")
+        continue
     if sql is None:
         status = "rows-only" if len(srows) > 0 else "FAIL-empty"
         if status != "rows-only":
