@@ -2,7 +2,7 @@
 
 Thin wrapper over osml10n_spark.contract — one queries() entry per
 implemented operator from SURVEY.md §2.  Every query carries a DuckDB
-oracle (77/77 as of round 5): SQL re-derivation where expressible,
+oracle (79/79): SQL re-derivation where expressible,
 replay-literal pinning (driver-side kernel replay, no Spark) for the
 pixel/iterative paths.
 """

@@ -24,7 +24,7 @@ from .operators.spatial import (assign_cells, cell_histogram, knn_cells,
                                 pip_join_rects)
 from .operators.textops import (add_script_flags, fingerprint, lang_id,
                                 quality_score, token_count)
-from .udfs import (udf_country_name, udf_placename, udf_street_abbrev,
+from .udfs import (make_cascade_udf, udf_country_name, udf_street_abbrev,
                    udf_unaccent)
 
 # ------------------------------------------------------------------ helpers
@@ -1155,9 +1155,8 @@ def q_placename_bilingual(spark, sf_dir):
         F.lit("name:it"), F.concat(F.lit("Bassa"), F.col("n_name")),
         F.lit("name"), F.concat(F.lit("Bassa"), F.col("n_name"),
                                 F.lit(" / Ober"), F.col("n_name")))
-    out = udf_placename(
-        F.col("n_nationkey").cast("string"), F.to_json(tags), F.lit("de"),
-        F.lit(False), F.lit("\n"), F.lit(None).cast("double"),
+    out = make_cascade_udf("placename", "de", False, "\n")(
+        F.to_json(tags), F.lit(None).cast("double"),
         F.lit(None).cast("double"))
     return n.select(F.col("n_nationkey").alias("id"),
                     out.alias("combined"))
@@ -1239,9 +1238,8 @@ def q_combined_quirks(spark, sf_dir):
             F.lit("name"), F.lit("Bolzano - Bozen"),
             F.lit("name:de"), F.lit("Bozen"),
             F.lit("name:it"), F.lit("Bolzano"))))
-    out = udf_placename(
-        F.col("n_nationkey").cast("string"), F.to_json(tags), F.lit("de"),
-        F.lit(False), F.lit("\n"), F.lit(None).cast("double"),
+    out = make_cascade_udf("placename", "de", False, "\n")(
+        F.to_json(tags), F.lit(None).cast("double"),
         F.lit(None).cast("double"))
     return n.select(F.col("n_nationkey").alias("id"),
                     out.alias("combined"))
@@ -1606,7 +1604,6 @@ def q_streetname_bilingual(spark, sf_dir):
     """C3a street variant of the combined-name heuristic: per-tag
     language dispatch abbreviates the de side (straße→str.) while the
     it side passes through — formatted with ' - ' and LTR marks."""
-    from .udfs import udf_streetname
     n = _t(spark, sf_dir, "nation")
     tags = F.create_map(
         F.lit("name:de"), F.concat(F.lit("Ober"), F.col("n_name"),
@@ -1616,9 +1613,8 @@ def q_streetname_bilingual(spark, sf_dir):
         F.lit("name"), F.concat(F.lit("Bassa"), F.col("n_name"),
                                 F.lit("gasse / Ober"), F.col("n_name"),
                                 F.lit("straße")))
-    out = udf_streetname(
-        F.col("n_nationkey").cast("string"), F.to_json(tags), F.lit("de"),
-        F.lit(False), F.lit(" - "), F.lit(None).cast("double"),
+    out = make_cascade_udf("streetname", "de", False, " - ")(
+        F.to_json(tags), F.lit(None).cast("double"),
         F.lit(None).cast("double"))
     return n.select(F.col("n_nationkey").alias("id"), out.alias("combined"))
 
@@ -1958,7 +1954,7 @@ def _micro_kernels_sql() -> str:
 
     from .kernels.names import get_country_name
     from .kernels.scripts import contains_cjk, contains_thai
-    from .udfs import _prepared
+    from .spatial.prepared import default_lookup
 
     def sq(s):
         return "'" + s.replace("'", "''") + "'"
@@ -1973,7 +1969,7 @@ def _micro_kernels_sql() -> str:
         "({}, {})".format(cid, "CAST(NULL AS DOUBLE[])" if bbox is None
                           else "[" + ", ".join(repr(v) for v in bbox) + "]")
         for cid, bbox in _MK_F22)
-    prep = _prepared()
+    prep = default_lookup()
     p7_rows = []
     for cid, nm, lon, lat in _MK_P7:
         if nm is not None and contains_cjk(nm):
@@ -2146,24 +2142,6 @@ def q_localize_documents(spark, sf_dir):
     staged = _staged_documents(spark, sf_dir)
     is_lat = ~F.col("caption").rlike(RE_NON_LATIN_SPARK)
     return localize(staged, "de").select(
-        "image_id",
-        F.when(is_lat, F.col("caption_l10n")).alias("latin_cap"),
-        (F.col("caption_l10n") != "").alias("nonempty"),
-        "cell_id", "tile_id")
-
-
-def q_localize_documents_fast(spark, sf_dir):
-    """localize(fast_path=True) through the gate: the physical
-    fast/slow split (filter + unionByName, engine/localize.py:67-74)
-    over the MIXED documents corpus — latin no-target rows resolve
-    entirely inside whole-stage codegen (the fast branch), non-latin
-    rows cross Arrow once (the slow branch) — matched against the SAME
-    oracle as q_localize_documents: one oracle, two physical plans
-    (the q_pip_cover technique)."""
-    from .engine.localize import localize
-    staged = _staged_documents(spark, sf_dir)
-    is_lat = ~F.col("caption").rlike(RE_NON_LATIN_SPARK)
-    return localize(staged, "de", fast_path=True).select(
         "image_id",
         F.when(is_lat, F.col("caption_l10n")).alias("latin_cap"),
         (F.col("caption_l10n") != "").alias("nonempty"),
@@ -3098,7 +3076,6 @@ QUERIES = {
     "q_antijoin_resume": q_antijoin_resume,
     "q_window_events": q_window_events,
     "q_localize_documents": q_localize_documents,
-    "q_localize_documents_fast": q_localize_documents_fast,
     "q_localize_mixed": q_localize_mixed,
     "q_simhash_pairs": q_simhash_pairs,
     "q_minhash_pairs": q_minhash_pairs,
@@ -3228,7 +3205,6 @@ ORACLES = {
     "q_simhash_pairs": Q_SIMHASH_PAIRS_SQL,
     "q_localize_mixed": Q_LOCALIZE_MIXED_SQL,
     "q_localize_documents": Q_LOCALIZE_DOCUMENTS_SQL,
-    "q_localize_documents_fast": Q_LOCALIZE_DOCUMENTS_SQL,
     "q_write_tiled": Q_WRITE_TILED_SQL,
     "q_percentiles": Q_PERCENTILES_SQL,
     "q_cube_revenue": Q_CUBE_REVENUE_SQL,

@@ -141,8 +141,7 @@ def curate(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         staged = kept.withColumn(
             "tags", F.create_map(F.lit("name"), c))
         kept = localize(staged, localize_to, tags_col="tags",
-                        id_col=id_col, lon_col=lon_col, lat_col=lat_col,
-                        add_cells=True)
+                        lon_col=lon_col, lat_col=lat_col, add_cells=True)
 
     if not with_metrics:
         return kept, None

@@ -8,22 +8,19 @@ Plan shape (all declarative; Catalyst handles pruning/codegen):
     combined-name heuristic + transliteration; country resolution uses
     the per-executor prepared cover lookup (no shuffle — the polygon
     index is broadcast state, a map-side spatial join).  Only the UDF's
-    input columns (id/tags/lon/lat) cross the Arrow boundary — payload
+    input columns (tags JSON, lon, lat) cross the Arrow boundary — payload
     bytes never leave the JVM.  Latin-name rows early-return inside the
     kernel at ~µs cost, so a single pass beats splitting (measured:
     0.56s vs 1.09s on 150k rows — the split's second scan of the source
     costs more than Python transfer saves at text-caption row widths).
- 2. ``fast_path=True`` switches to a physical fast/slow split (filter +
-    unionByName) where latin-no-target rows stay entirely inside
-    whole-stage codegen — the right trade when rows are wide or the
-    Python side is expensive per row.  NOTE: a mere
-    ``when(cond, fast).otherwise(udf)`` does NOT gate a pandas UDF —
-    ArrowEvalPython is hoisted and evaluated for every row — hence the
-    physical split.
- 3. cell_id / tile_id assignment as pure JVM bit-math expressions
-    (whole-stage codegen, bit-identical to the numpy kernels) and
-    optional repartition by cell prefix for write locality (z-order
-    clustering).
+ 2. cell_id / tile_id assignment as pure JVM bit-math expressions
+    (whole-stage codegen, bit-identical to the numpy kernels).
+
+A ``when(cond, fast).otherwise(udf)`` does NOT gate a pandas UDF —
+ArrowEvalPython is hoisted and evaluated for every row — so cheap rows
+are skipped inside the UDF instead: the ASCII single-name fast path and
+the per-worker memos of udfs._batch_localize.  Callers that want write
+locality repartition for themselves (engine/job.py, sources/sinks.py).
 
 The image payload columns (bytes/w/h/fmt/phash) are carried through
 untouched — integrity is asserted by tests/test_pipeline.py via PSNR
@@ -33,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernels.scripts import RE_NON_LATIN
 from ..udfs import make_cascade_udf
 
 __all__ = ["localize"]
@@ -42,18 +38,13 @@ __all__ = ["localize"]
 def localize(df: DataFrame, target_lang: str = "en", *,
              is_street: bool = False, localized_name_last: bool = False,
              separator: str | None = None, tags_col: str = "tags",
-             id_col: str = "image_id", lon_col: str = "lon",
-             lat_col: str = "lat", out_col: str = "caption_l10n",
-             cell_res: int = 9, tile_z: int = 8, tile_maxz: int = 16,
-             add_cells: bool = True, fast_path: bool = False,
-             repartition_by_cell: bool = False) -> DataFrame:
+             lon_col: str = "lon", lat_col: str = "lat",
+             out_col: str = "caption_l10n", cell_res: int = 9,
+             tile_z: int = 8, tile_maxz: int = 16,
+             add_cells: bool = True) -> DataFrame:
     """Append ``caption_l10n`` (+ ``cell_id``/``tile_id``) to ``df``."""
     if separator is None:
         separator = " - " if is_street else "\n"
-
-    tags = F.col(tags_col)
-    name = F.element_at(tags, "name")
-    target_tag = F.element_at(tags, F.lit("name:" + target_lang))
 
     # tags travel to Python as a JSON string: Arrow map-type writes
     # contend on the shared JVM allocator and anti-scale (see
@@ -62,18 +53,8 @@ def localize(df: DataFrame, target_lang: str = "en", *,
     # shipped per row — the Arrow stream is (tags_json, lon, lat) only.
     udf = make_cascade_udf("streetname" if is_street else "placename",
                            target_lang, localized_name_last, separator)
-    slow = udf(F.to_json(tags), F.col(lon_col), F.col(lat_col))
-
-    if fast_path and not is_street:
-        # physical fast/slow split (see module docstring point 2)
-        fast_cond = F.coalesce(
-            target_tag.isNull() & name.isNotNull()
-            & ~name.rlike(RE_NON_LATIN), F.lit(False))
-        fast_df = df.filter(fast_cond).withColumn(out_col, name)
-        slow_df = df.filter(~fast_cond).withColumn(out_col, slow)
-        out = fast_df.unionByName(slow_df)
-    else:
-        out = df.withColumn(out_col, slow)
+    out = df.withColumn(out_col, udf(F.to_json(F.col(tags_col)),
+                                     F.col(lon_col), F.col(lat_col)))
     if add_cells:
         # pure JVM bit math (whole-stage codegen) — no Python crossing
         from ..spatial.cellexpr import cell_expr, tile_expr
@@ -82,8 +63,4 @@ def localize(df: DataFrame, target_lang: str = "en", *,
         out = out.withColumn("tile_id",
                              tile_expr(F.col(lon_col), F.col(lat_col),
                                        tile_z, tile_maxz))
-    if repartition_by_cell:
-        # co-locate cells for write locality; z-order within partitions
-        out = (out.repartition(F.col("cell_id"))
-                  .sortWithinPartitions("cell_id", "tile_id"))
     return out

@@ -9,37 +9,36 @@ country resolution (:211-221) and country-routed transliteration
 semantics (cc_transcript_via_daemon.sql:21-47) rather than the
 reference's 3-field-frame protocol bug (divergence documented).
 
-The boundary index is memoized at module level so each Spark Python
-worker builds it exactly once (the executor-side analogue of the
-daemon's startup-time prepared-geometry cache).
+The boundary index comes from ``spatial.prepared.default_lookup``, the
+process's one boundary cache (built once per Spark Python worker — the
+executor-side analogue of the daemon's startup-time prepared-geometry
+cache).
 """
 from __future__ import annotations
 
-from ..spatial.boundaries import BoundaryIndex, load_boundaries
+from ..spatial.boundaries import BoundaryIndex
+from ..spatial.prepared import default_lookup
 from .translit import gate_cc, transcript
 
-__all__ = ["Transcriptor", "default_transcriptor"]
+__all__ = ["Transcriptor", "centroid", "default_transcriptor"]
+
+
+def centroid(place):
+    """bbox → centroid, with the reference's degenerate-input quirks
+    (geo_transcript.lua:19-35): callables are invoked; anything
+    without a numeric [0] (e.g. the string 'jp' passed by
+    get_localized_name_from_tags.lua:383) degrades to (0, 0)."""
+    if callable(place):
+        place = list(place())
+    try:
+        return (place[0] + place[2]) / 2.0, (place[1] + place[3]) / 2.0
+    except (TypeError, IndexError, KeyError):
+        return 0.0, 0.0
 
 
 class Transcriptor:
     def __init__(self, index: BoundaryIndex):
         self.index = index
-
-    def _centroid(self, place):
-        """bbox → centroid, with the reference's degenerate-input quirks
-        (geo_transcript.lua:19-35): callables are invoked; anything
-        without a numeric [0] (e.g. the string 'jp' passed by
-        get_localized_name_from_tags.lua:383) degrades to (0, 0)."""
-        if callable(place):
-            bx = list(place())
-        else:
-            bx = place
-        try:
-            lon = (bx[0] + bx[2]) / 2.0
-            lat = (bx[1] + bx[3]) / 2.0
-        except (TypeError, IndexError, KeyError):
-            lon, lat = 0.0, 0.0
-        return lon, lat
 
     def geo_transcript(self, rec_id: str, name: str, place=None) -> str:
         if name == "":
@@ -48,7 +47,7 @@ class Transcriptor:
             if place is None:
                 cc = ""
             else:
-                lon, lat = self._centroid(place)
+                lon, lat = centroid(place)
                 cc = gate_cc(name, lambda: self.index.lookup_one(lon, lat))
             return transcript(rec_id, cc, name)
         except Exception:
@@ -60,16 +59,5 @@ class Transcriptor:
         return transcript(rec_id, cc or "", name)
 
 
-_DEFAULT: Transcriptor | None = None
-
-
 def default_transcriptor() -> Transcriptor:
-    global _DEFAULT
-    if _DEFAULT is None:
-        _DEFAULT = Transcriptor(load_boundaries())
-    return _DEFAULT
-
-
-def set_default_transcriptor(t: Transcriptor) -> None:
-    global _DEFAULT
-    _DEFAULT = t
+    return Transcriptor(default_lookup().index)

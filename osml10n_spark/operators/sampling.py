@@ -44,12 +44,6 @@ def _rate_to_hex_threshold(rate: float) -> str:
     return format(t, f"0{_GATE_CHARS}x")
 
 
-def sample_gate_sql(id_expr: str, salt: str = "") -> str:
-    """The DuckDB-side gate expression for a given id column expression
-    (oracle helper; the Spark side is built by sample_stratified)."""
-    return f"substr(md5(CAST({id_expr} AS VARCHAR) || ':{salt}'), 1, {_GATE_CHARS})"
-
-
 def sample_stratified(df: DataFrame, id_col: str, strata_col: str,
                       rates: dict, default_rate: float = 0.0,
                       salt: str = "") -> DataFrame:

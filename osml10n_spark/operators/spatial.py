@@ -215,8 +215,8 @@ def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
 
 def knn_cells(queries: DataFrame, items: DataFrame, k: int,
               res: int = 7, qid_col: str = "qid", iid_col: str = "iid",
-              max_rounds: int = 4, initial_ring: int | None = None,
-              split_heavy: bool = False) -> DataFrame:
+              max_rounds: int = 4,
+              initial_ring: int | None = None) -> DataFrame:
     """Scalable kNN: k-ring candidate equi-join + exact refine (J5/W5).
 
     Each round joins queries against items in cells within Chebyshev
@@ -234,21 +234,6 @@ def knn_cells(queries: DataFrame, items: DataFrame, k: int,
     at the observed mean occupancy, so sparse corpora don't waste
     rounds climbing from ring 1.
 
-    ``split_heavy`` (opt-in) adds hierarchical skew handling beyond
-    AQE: queries whose ring-1 neighborhood touches a *heavy* cell
-    (> max(64k, 8·mean) items) re-run the SAME algorithm at a finer
-    resolution picked from the heaviest cell's population, capping the
-    candidates a dense cell contributes per query.  Both passes are
-    exact; results union.  Default OFF: measured A/B at sf0.1 (150k
-    items, 40k-item Tokyo cell, 1000 queries) the split's extra
-    orchestration (second core pass + histogram) costs ~3× more than
-    the 9.2M→1M candidate-row saving returns — it pays only when heavy
-    cells hold millions of rows so the window sort, not job overhead,
-    dominates.  (Round 3 trimmed the split path from 4 driver jobs to
-    2 — mean+heavy fused into one agg, the two isEmpty() probes into
-    one countDistinct pass — which shaves the fixed cost but does not
-    flip the A/B at sandbox scale.)
-
     Equi-join on cell ids shuffles by cell — co-located, broadcast-free.
     Output: (qid, iid, dist2, rank).
     """
@@ -257,63 +242,6 @@ def knn_cells(queries: DataFrame, items: DataFrame, k: int,
     i_pts = items.select(F.col(iid_col).alias("iid"),
                          F.col("lon"), F.col("lat")).persist()
 
-    if split_heavy:
-        import math
-
-        hist = assign_cells(i_pts, res).groupBy("cell_id") \
-            .agg(F.count("*").alias("n"))
-        # ONE driver job for mean occupancy + heavy candidates: cells
-        # with n > 64k are a superset of "heavy" for any mean (the
-        # final threshold is max(64k, 8·mean) ≥ 64k) and there are at
-        # most total/64k of them, so the collect_list stays bounded
-        agg = hist.agg(
-            F.avg("n").alias("m"),
-            F.collect_list(F.when(F.col("n") > 64 * k,
-                                  F.struct("cell_id", "n"))).alias("big"),
-        ).collect()[0]
-        mean_n = agg.m or 1.0
-        thresh = max(64 * k, 8 * mean_n)
-        heavy = [(r.cell_id, r.n) for r in agg.big if r.n > thresh]
-        if heavy:
-            heavy_ids = [h[0] for h in heavy]
-            max_n = max(h[1] for h in heavy)
-            # halving the cell side quarters its population: pick the
-            # res where the heaviest cell drops to ~32k per cell
-            extra = max(2, math.ceil(math.log(max_n / (32.0 * k), 4)))
-            res_fine = min(res + extra, 15)
-            qa = assign_cells(q_pts, res) \
-                .withColumnRenamed("cell_id", "q_cell") \
-                .withColumn("ring", F.lit(1)) \
-                .withColumnRenamed("lon", "q_lon") \
-                .withColumnRenamed("lat", "q_lat")
-            ring1 = _ring_cells_df(qa, res, 1)
-            near_heavy = (ring1.filter(F.col("n_cell").isin(heavy_ids))
-                          .select("qid").distinct())
-            # ONE job decides both splits (every query emits its own
-            # ring-1 cells, so n_q counts ALL queries) — replaces the
-            # two isEmpty() driver round-trips
-            counts = ring1.agg(
-                F.countDistinct("qid").alias("n_q"),
-                F.countDistinct(F.when(F.col("n_cell").isin(heavy_ids),
-                                       F.col("qid"))).alias("n_heavy"),
-            ).collect()[0]
-            q_heavy = q_pts.join(F.broadcast(near_heavy), "qid")
-            q_rest = q_pts.join(F.broadcast(near_heavy), "qid", "left_anti")
-            parts = []
-            if counts.n_heavy < counts.n_q:
-                parts.append(_knn_core(q_rest, i_pts, k, res, max_rounds,
-                                       initial_ring))
-            if counts.n_heavy > 0:
-                parts.append(_knn_core(q_heavy, i_pts, k, res_fine,
-                                       max_rounds, initial_ring))
-            if parts:                      # empty queries → default path
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                out = out.persist()
-                out.count()
-                i_pts.unpersist()
-                return out
     out = _knn_core(q_pts, i_pts, k, res, max_rounds, initial_ring)
     i_pts.unpersist()
     return out
@@ -321,7 +249,7 @@ def knn_cells(queries: DataFrame, items: DataFrame, k: int,
 
 def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
               max_rounds: int = 4, initial_ring: int | None = None) -> DataFrame:
-    """One resolution level of the adaptive k-ring kNN (see knn_cells).
+    """The adaptive k-ring kNN rounds behind knn_cells (see there).
     ``queries``/``items`` are (qid|iid, lon, lat) frames."""
     cell_h = 180.0 / (2 ** res)                   # cell size in degrees
 

@@ -3,9 +3,10 @@
 Loader parity with transcription-daemon/geo-transcript-srv.py:186-199
 (all ``*.geojson`` in a directory, features flattened, ``properties.cc``
 kept).  The index is small and is meant to be broadcast to executors;
-the per-executor "prepared geometry" cache lives in
-osml10n_spark.kernels.geo (module-level memoization inside the Python
-worker — built once per executor, not per batch).
+the per-executor "prepared geometry" cache is
+``osml10n_spark.spatial.prepared.default_lookup`` (module-level
+memoization inside the Python worker — built once per executor, not
+per batch).
 
 First-match-wins scan order is deterministic here (sorted cc), unlike
 the reference's filesystem iteration order.

@@ -12,15 +12,22 @@ chosen resolution.  Lookup then is:
 On a cluster this is what turns the theta-join into an equi-join: the
 interior map is broadcast state, and only boundary-cell rows pay for
 geometry.  The structure pickles compactly for sc.broadcast().
+
+``default_lookup`` is the process's one boundary cache: each Python
+process, every Spark Python worker included, builds it once — the
+executor-side analogue of the daemon's startup prepared-geometry cache
+(geo-transcript-srv.py:204-208).
 """
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
-from .boundaries import BoundaryIndex
+from .boundaries import BoundaryIndex, load_boundaries
 from .cellindex import DEFAULT_RES, cell_from_lonlat, polygon_cover
 
-__all__ = ["PreparedLookup"]
+__all__ = ["PreparedLookup", "default_lookup"]
 
 
 class PreparedLookup:
@@ -80,3 +87,10 @@ class PreparedLookup:
             if fallback >= 0 and unresolved.any():
                 out[rows_a[unresolved]] = self._cc[fallback]
         return out
+
+
+@functools.cache
+def default_lookup() -> PreparedLookup:
+    """The prepared lookup over :func:`load_boundaries`'s default
+    directory, built once per process."""
+    return PreparedLookup(load_boundaries(), res=9)

@@ -4,60 +4,64 @@ registration mirroring the reference API surface (SURVEY.md §2.10).
 Design rules:
 - every UDF is vectorized over Arrow batches (no per-row Python UDFs in
   any hot path — BASELINE.json input_hint);
-- heavy shared state (the boundary index / prepared covers) is built
-  lazily ONCE per executor Python worker via module-level memoization —
-  the executor-side analogue of the daemon's startup prepared-geometry
-  cache (geo-transcript-srv.py:204-208);
-- cheap predicates (script classes, target-tag probes) should be done
-  JVM-side with the regexes in kernels.scripts; these UDFs are the slow
-  path the JVM expressions route around.
+- the boundary index / prepared covers come from
+  ``spatial.prepared.default_lookup``, built once per executor Python
+  worker — the executor-side analogue of the daemon's startup
+  prepared-geometry cache (geo-transcript-srv.py:204-208);
+- one batch function (``_batch_localize``) serves every cascade UDF: an
+  in-UDF ASCII fast path, per-worker memos, and one country gate
+  (``_gate_ccs``) that resolves a batch's CJK rows with one vectorized
+  point-in-polygon call.
 """
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType)
+from pyspark.sql.types import ArrayType, BooleanType, StringType
 from pyspark.sql.functions import pandas_udf
 
 from .kernels import abbrev as _abbrev
 from .kernels import names as _names
 from .kernels import translit as _translit
+from .kernels.geo import Transcriptor, centroid
 from .kernels.scripts import contains_cjk, contains_thai, is_latin
 from .kernels.unaccent import unaccent as _unaccent
+from .spatial.prepared import default_lookup
 
 __all__ = [
     "udf_unaccent", "udf_street_abbrev", "udf_localized_name",
     "udf_is_latin", "udf_transliterate", "udf_country_name",
-    "make_cascade_udf",
-    "udf_placename", "udf_streetname", "udf_country_lookup",
-    "udf_country_gated", "udf_cell_id",
-    "udf_tile_id", "udf_zorder_key", "register_all",
+    "make_cascade_udf", "udf_placename", "udf_streetname",
+    "udf_country_lookup", "udf_country_gated", "register_all",
 ]
 
 # ------------------------------------------------------------------
-# per-executor prepared state
+# per-executor memos (the boundary cache is spatial.prepared's)
 _STATE: dict = {}
 
 
-def _prepared():
-    if "prep" not in _STATE:
-        from .spatial.boundaries import load_boundaries
-        from .spatial.prepared import PreparedLookup
-        _STATE["prep"] = PreparedLookup(load_boundaries(), res=9)
-    return _STATE["prep"]
-
-
-def _centroid_quirk(place):
-    """bbox → centroid with the reference degradation quirks
-    (geo_transcript.lua:19-35): callables invoked, non-indexable /
-    string bboxes collapse to (0, 0)."""
-    if callable(place):
-        place = list(place())
-    try:
-        return (place[0] + place[2]) / 2.0, (place[1] + place[3]) / 2.0
-    except (TypeError, IndexError, KeyError):
-        return 0.0, 0.0
+def _gate_ccs(names, lon, lat) -> list:
+    """The daemon XY gate, batch-wise (geo-transcript-srv.py:268-275):
+    one vectorized PiP call for the CJK names, 'th' for Thai names, ''
+    for everything else (None included) — the filter-before-join
+    optimization.  CJK takes precedence over Thai, as in
+    ``translit.gate_cc``."""
+    ccs, cjk_rows = [], []
+    for i, v in enumerate(names):
+        if v is not None and contains_cjk(v):
+            cjk_rows.append(i)
+            ccs.append("")
+        else:
+            ccs.append("th" if v is not None and contains_thai(v) else "")
+    if cjk_rows:
+        sel = np.asarray(cjk_rows)
+        res = default_lookup().lookup(np.asarray(lon, dtype=np.float64)[sel],
+                                      np.asarray(lat, dtype=np.float64)[sel])
+        for i, cc in zip(cjk_rows, res):
+            ccs[i] = str(cc)
+    return ccs
 
 
 class _DeferGeo(Exception):
@@ -70,36 +74,26 @@ class _DeferGeo(Exception):
         self.place = place
 
 
-class _DeferringTranscriptor:
-    def geo_transcript(self, rec_id, name, place):
+class _DeferringTranscriptor(Transcriptor):
+    def geo_transcript(self, rec_id, name, place=None):
         raise _DeferGeo(name, place)
 
-    def country_transcript(self, rec_id, name, cc=None):
-        if name == "":
-            return ""
-        return _translit.transcript(rec_id, cc or "", name)
 
-
-class _ResolvedTranscriptor:
+class _ResolvedTranscriptor(Transcriptor):
     """Replays a precomputed transliteration into the cascade rerun."""
 
     def __init__(self, result):
         self.result = result
 
-    def geo_transcript(self, rec_id, name, place):
+    def geo_transcript(self, rec_id, name, place=None):
         return self.result
 
-    def country_transcript(self, rec_id, name, cc=None):
-        if name == "":
-            return ""
-        return _translit.transcript(rec_id, cc or "", name)
 
-
-_DEFER = _DeferringTranscriptor()
+_DEFER = _DeferringTranscriptor(None)
 _MEMO_CAP = 200_000
 
 
-def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
+def _batch_localize(tags_list, targets, lasts, seps, lons, lats,
                     mode: str) -> list:
     """Shared batch driver for the cascade UDFs.
 
@@ -117,28 +111,26 @@ def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
     replays the cascade tail.  Location-independent rows are memoized
     per worker keyed by the raw JSON string (map-label corpora repeat
     captions heavily); geo-dependent rows are memoized by
-    (key, resolved cc), which captures their full location dependence."""
-    import json
-
-    import numpy as np
-
+    (key, resolved cc), which captures their full location dependence.
+    The record id only names a record in the daemon's log (SURVEY §1.1)
+    and never reaches the output, so the cascade runs with ''."""
     memo = _STATE.setdefault("memo_" + mode, {})
     # keys known to defer: key -> (name_for_translit, place_arg); lets
     # repeated geo rows skip the phase-1 cascade entirely
     defer_memo = _STATE.setdefault("defer_memo_" + mode, {})
-    n = len(rids)
+    n = len(tags_list)
     out = [None] * n
     deferred: list = []          # (i, tj, tags_or_None, tg, ll, sp, name, place, key)
 
     if mode == "localized":
-        def run(rid, t, tg, ll, sp, tr):
-            return _names.get_localized_name_from_tags(rid, t, tg, None, tr)
+        def run(t, tg, ll, sp, tr):
+            return _names.get_localized_name_from_tags("", t, tg, None, tr)
     elif mode == "placename":
-        def run(rid, t, tg, ll, sp, tr):
-            return _names.get_placename_from_tags(rid, t, ll, sp, tg, None, tr)
+        def run(t, tg, ll, sp, tr):
+            return _names.get_placename_from_tags("", t, ll, sp, tg, None, tr)
     else:
-        def run(rid, t, tg, ll, sp, tr):
-            return _names.get_streetname_from_tags(rid, t, ll, sp, tg, None, tr)
+        def run(t, tg, ll, sp, tr):
+            return _names.get_streetname_from_tags("", t, ll, sp, tg, None, tr)
 
     is_street_mode = mode == "streetname"
     for i in range(n):
@@ -171,7 +163,7 @@ def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
             continue
         try:
             t = json.loads(tj)
-            res = run(rids[i] or "", t, tg, ll, sp, _DEFER)
+            res = run(t, tg, ll, sp, _DEFER)
             out[i] = res
             if len(memo) < _MEMO_CAP:
                 memo[key] = res
@@ -183,32 +175,16 @@ def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
             out[i] = ""
 
     if deferred:
-        # gate + batch country resolution (one vectorized PiP call)
+        # gate + batch country resolution (one vectorized PiP call);
+        # place=None at the row level means "use the row's lon/lat"
+        pts = np.array([(lons[d[0]], lats[d[0]]) if d[7] is None
+                        else centroid(d[7]) for d in deferred],
+                       dtype=np.float64)
+        ccs = _gate_ccs([d[6] for d in deferred], pts[:, 0], pts[:, 1])
         geo_memo = _STATE.setdefault("geo_memo_" + mode, {})
         tl_memo = _STATE.setdefault("translit_memo", {})
-        cjk_rows, cents = [], []
-        ccs = [""] * len(deferred)
-        for j, (i, tj, t, tg, ll, sp, name, place, key) in enumerate(deferred):
-            # place=None at the row level means "use the row's lon/lat"
-            if place is None:
-                lon, lat = lons[i], lats[i]
-                if lon is None or lat is None:
-                    ccs[j] = None          # CC path: no geometry at all
-                    continue
-            else:
-                lon, lat = _centroid_quirk(place)
-            if _translit.contains_cjk(name):
-                cjk_rows.append(j)
-                cents.append((lon, lat))
-            elif _translit.contains_thai(name):
-                ccs[j] = "th"
-        if cjk_rows:
-            arr = np.asarray(cents, dtype=np.float64)
-            res = _prepared().lookup(arr[:, 0], arr[:, 1])
-            for j, cc in zip(cjk_rows, res):
-                ccs[j] = str(cc)
-        for j, (i, tj, t, tg, ll, sp, name, place, key) in enumerate(deferred):
-            cc = ccs[j] or ""
+        for (i, tj, t, tg, ll, sp, name, place, key), cc in zip(deferred,
+                                                                  ccs):
             # geo-dependence is fully captured by (tags key, cc): two
             # rows with identical tags/flags and the same resolved
             # country produce identical output wherever they sit
@@ -221,7 +197,7 @@ def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
             translit = tl_memo.get(tkey)
             if translit is None:
                 try:
-                    translit = _translit.transcript(rids[i] or "", cc, name)
+                    translit = _translit.transcript("", cc, name)
                 except Exception:
                     translit = ""
                 if len(tl_memo) < _MEMO_CAP:
@@ -232,7 +208,7 @@ def _batch_localize(rids, tags_list, targets, lasts, seps, lons, lats,
                 try:
                     if t is None:
                         t = json.loads(tj)
-                    out[i] = run(rids[i] or "", dict(t), tg, ll, sp,
+                    out[i] = run(dict(t), tg, ll, sp,
                                  _ResolvedTranscriptor(translit))
                 except Exception:
                     out[i] = ""
@@ -303,37 +279,31 @@ def make_cascade_udf(mode: str, target: str, last: bool = False,
     def _u(tags: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
         n = len(tags)
         return pd.Series(_batch_localize(
-            [""] * n, tags.tolist(), [target] * n,
+            tags.tolist(), [target] * n,
             None if mode == "localized" else [last] * n,
             None if mode == "localized" else [sep] * n,
             lon.tolist(), lat.tolist(), mode))
     return _u
 
 
-@pandas_udf(StringType())
-def udf_localized_name(rid: pd.Series, tags: pd.Series, target: pd.Series,
-                       lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(_batch_localize(
-        rid.tolist(), tags.tolist(), target.tolist(), None, None,
-        lon.tolist(), lat.tolist(), "localized"))
+def _sql_cascade_udf(mode: str):
+    """The SQL-surface cascade UDF (``register_all``): arguments are
+    columns in the reference order — record id, tags JSON, target,
+    then (except in localized mode) name order and separator, then
+    lon, lat.  The record id is accepted for API shape and ignored."""
+    @pandas_udf(StringType())
+    def _u(rid: pd.Series, tags: pd.Series, target: pd.Series,
+           *rest: pd.Series) -> pd.Series:
+        *order, lon, lat = (c.tolist() for c in rest)
+        last, sep = order or (None, None)
+        return pd.Series(_batch_localize(
+            tags.tolist(), target.tolist(), last, sep, lon, lat, mode))
+    return _u
 
 
-@pandas_udf(StringType())
-def udf_placename(rid: pd.Series, tags: pd.Series, target: pd.Series,
-                  last: pd.Series, sep: pd.Series,
-                  lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(_batch_localize(
-        rid.tolist(), tags.tolist(), target.tolist(), last.tolist(),
-        sep.tolist(), lon.tolist(), lat.tolist(), "placename"))
-
-
-@pandas_udf(StringType())
-def udf_streetname(rid: pd.Series, tags: pd.Series, target: pd.Series,
-                   last: pd.Series, sep: pd.Series,
-                   lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(_batch_localize(
-        rid.tolist(), tags.tolist(), target.tolist(), last.tolist(),
-        sep.tolist(), lon.tolist(), lat.tolist(), "streetname"))
+udf_localized_name = _sql_cascade_udf("localized")
+udf_placename = _sql_cascade_udf("placename")
+udf_streetname = _sql_cascade_udf("streetname")
 
 
 # ------------------------------------------------------------------
@@ -372,7 +342,7 @@ def udf_centroid_quirk10(b: pd.Series) -> pd.Series:
     so the oracle compare is exact-decimal (gate inputs are .5-steps)."""
     out = []
     for place in b:
-        lon, lat = _centroid_quirk(place)
+        lon, lat = centroid(place)
         out.append(f"{int(lon * 10)},{int(lat * 10)}")
     return pd.Series(out, dtype=object)
 
@@ -395,63 +365,16 @@ def udf_country_name(tags: pd.Series, target: pd.Series,
 # spatial UDFs (vectorized numpy inside)
 @pandas_udf(StringType())
 def udf_country_lookup(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    res = _prepared().lookup(lon.to_numpy(dtype=np.float64),
-                             lat.to_numpy(dtype=np.float64))
+    res = default_lookup().lookup(lon.to_numpy(dtype=np.float64),
+                                  lat.to_numpy(dtype=np.float64))
     return pd.Series(res, dtype=object)
 
 
 @pandas_udf(StringType())
 def udf_country_gated(name: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """The daemon XY gate, batch-wise: PiP only for CJK rows, Thai
-    charset short-circuits, everything else '' — the filter-before-join
-    optimization (geo-transcript-srv.py:268-275)."""
-    vals = name.tolist()
-    out = np.full(len(vals), "", dtype=object)
-    cjk_rows = [i for i, v in enumerate(vals) if v is not None and contains_cjk(v)]
-    cjk_set = set(cjk_rows)
-    if cjk_rows:
-        sel = np.asarray(cjk_rows)
-        res = _prepared().lookup(lon.to_numpy(dtype=np.float64)[sel],
-                                 lat.to_numpy(dtype=np.float64)[sel])
-        out[sel] = res
-    for i, v in enumerate(vals):
-        if i not in cjk_set and v is not None and contains_thai(v):
-            out[i] = "th"
-    return pd.Series(out, dtype=object)
-
-
-def _make_cell_udf(res: int):
-    from .spatial.cellindex import cell_from_lonlat
-
-    @pandas_udf(LongType())
-    def _u(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_from_lonlat(
-            lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), res))
-    return _u
-
-
-def udf_cell_id(lon, lat, res: int = 9):
-    return _make_cell_udf(res)(lon, lat)
-
-
-def udf_zorder_key(lon, lat, z: int = 16):
-    from .spatial.cellindex import zorder_key
-
-    @pandas_udf(LongType())
-    def _u(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(zorder_key(lo.to_numpy(dtype=np.float64),
-                                    la.to_numpy(dtype=np.float64), z))
-    return _u(lon, lat)
-
-
-def udf_tile_id(lon, lat, z: int = 8, maxz: int = 16):
-    from .spatial.cellindex import tile_from_lonlat
-
-    @pandas_udf(LongType())
-    def _u(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(tile_from_lonlat(lo.to_numpy(dtype=np.float64),
-                                          la.to_numpy(dtype=np.float64), z, maxz))
-    return _u(lon, lat)
+    """``_gate_ccs`` over a (name, lon, lat) batch."""
+    return pd.Series(_gate_ccs(name.tolist(), lon.to_numpy(dtype=np.float64),
+                               lat.to_numpy(dtype=np.float64)), dtype=object)
 
 
 # ------------------------------------------------------------------

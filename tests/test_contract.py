@@ -115,6 +115,14 @@ def test_entry_smoke(spark):
     assert df.columns == ["image_id", "caption_l10n", "cell_id", "tile_id"]
 
 
+def test_every_query_has_an_oracle():
+    """A query whose oracle entry goes missing would fall back to the
+    rows-only check above; the two registries must name the same
+    queries."""
+    from osml10n_spark import contract
+    assert set(contract.QUERIES) == set(contract.ORACLES)
+
+
 def test_broken_oracle_fails_only_its_own_query(monkeypatch):
     """Oracles resolve per query on access: a builder that raises (e.g.
     missing boundaries) must not take the other queries' oracles down."""

@@ -109,28 +109,6 @@ def test_knn_geo_bq_matches_window_plan(spark):
     assert a == b
 
 
-def test_knn_cells_split_heavy_matches_bruteforce(spark):
-    """split_heavy=True (hierarchical skew split) stays exact on a
-    corpus with one deliberately heavy cell, with queries on both
-    sides of the split (near-heavy → fine res, rest → base res);
-    also covers the fused single-job heavy/near-heavy detection."""
-    rng = np.random.default_rng(7)
-    dense = [(f"d{i}", float(10.0 + rng.uniform(-0.05, 0.05)),
-              float(50.0 + rng.uniform(-0.05, 0.05))) for i in range(300)]
-    sparse = [(f"s{i}", float(rng.uniform(-170, 170)),
-               float(rng.uniform(-80, 80))) for i in range(100)]
-    items = spark.createDataFrame(dense + sparse,
-                                  "iid string, lon double, lat double")
-    q = spark.createDataFrame(
-        [("q0", 10.0, 50.0), ("q1", 10.2, 49.9), ("q2", -60.0, -20.0),
-         ("q3", 120.0, 30.0)], "qid string, lon double, lat double")
-    brute = {(r.qid, r.rank): r.iid for r in knn_geo(q, items, 2).collect()}
-    out = knn_cells(q, items, 2, res=6, split_heavy=True)
-    split = {(r.qid, r.rank): r.iid for r in out.collect()}
-    out.unpersist()
-    assert brute == split
-
-
 def test_knn_cells_sparse_fallback(spark):
     # items far away from queries → forces the straggler path
     q = _points_df(spark, 5, 3, "q")

@@ -37,14 +37,6 @@ def test_localize_matches_pure_kernels(spark, images):
     assert not mismatches, mismatches[:5]
 
 
-def test_localize_fast_path_equals_slow_path(spark, images):
-    fast = localize(images, "de", fast_path=True, add_cells=False) \
-        .select("image_id", "caption_l10n").collect()
-    slow = localize(images, "de", fast_path=False, add_cells=False) \
-        .select("image_id", "caption_l10n").collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
-
-
 def test_payload_integrity(spark, images):
     out = localize(images, "en").select("image_id", "bytes", "w", "h", "fmt",
                                         "caption", "phash").collect()

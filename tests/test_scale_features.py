@@ -1,8 +1,13 @@
 """Scale-machinery tests: salting, SQL UDF registration, tiled sink,
 z-order write locality."""
+import json
+
 import numpy as np
 from pyspark.sql import functions as F
 
+from osml10n_spark.kernels.names import (get_localized_name_from_tags,
+                                         get_placename_from_tags,
+                                         get_streetname_from_tags)
 from osml10n_spark.operators.spatial import assign_cells, cell_histogram, \
     salted_key
 from osml10n_spark.sources.sinks import write_tiled
@@ -49,6 +54,33 @@ def test_sql_registration(spark):
               'name:sw','Tanzania','name:en','Tanzania'), 'de', false) AS names
     """).collect()[0]
     assert cn.names == ["Tansania"]
+
+    # the SQL cascade functions: a target-tag hit, a latin name and a
+    # CJK name at Tokyo, each equal to the pure kernel under the
+    # default transcriptor with the row's point as its bbox
+    tokyo = (139.69, 35.68)
+    cases = [("hit", {"name": "Roma", "name:de": "Rom"}, (12.5, 41.9)),
+             ("latin", {"name": "Besançon Hauptstraße"}, (6.0, 47.2)),
+             ("cjk", {"name": "東京"}, tokyo)]
+    spark.createDataFrame(
+        [(rid, json.dumps(t, ensure_ascii=False, separators=(",", ":")),
+          lon, lat) for rid, t, (lon, lat) in cases],
+        "id string, tags string, lon double, lat double",
+    ).createOrReplaceTempView("t_tags")
+    rows = spark.sql("""
+        SELECT id,
+          osml10n_placename(id, tags, 'de', false, '\\n', lon, lat) AS place,
+          osml10n_streetname(id, tags, 'de', false, ' - ', lon, lat) AS street,
+          osml10n_localized_name(id, tags, 'de', lon, lat) AS loc
+        FROM t_tags""").collect()
+    got = {r.id: (r.place, r.street, r.loc) for r in rows}
+    for rid, t, (lon, lat) in cases:
+        bbox = [lon, lat, lon, lat]
+        assert got[rid] == (
+            get_placename_from_tags(rid, t, False, "\n", "de", bbox),
+            get_streetname_from_tags(rid, t, False, " - ", "de", bbox),
+            get_localized_name_from_tags(rid, t, "de", bbox)), rid
+    assert got["cjk"][2] == "Toukyou"
 
 
 def test_write_tiled_layout(spark, tmp_path):
