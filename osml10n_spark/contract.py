@@ -6,9 +6,11 @@ ANSI-SQL re-derivation DuckDB can run on the same parquet tables.
 Column names and value derivations are kept bit-identical on both
 sides (deterministic point/rect synthesis from integer keys, exact
 decimal aggregation before double casts, floor-truncation instead of
-round, md5-based portable hashing).  Queries whose Spark side runs
-engine UDFs with no SQL equivalent (pixel decoding, FP-hyperplane ANN)
-have no oracle → the driver records the weaker rows-only check.
+round, md5-based portable hashing).  Every query has an oracle:
+where the Spark side runs a kernel with no SQL equivalent (pixel
+decoding, phash, audio fingerprints, transliteration) the oracle pins
+literal values — computed driver-side by the same pure-python kernels,
+or written as CASE literals — and re-derives the rest in SQL.
 """
 from __future__ import annotations
 
@@ -17,9 +19,9 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .kernels.scripts import RE_NON_LATIN
 from .operators.dedup import (exact_dedup, minhash_dup_pairs,
                               minhash_signature, simhash_dup_pairs)
-from .operators.similarity import cosine_topk, ivf_topk, lsh_topk
 from .operators.spatial import (assign_cells, cell_histogram, knn_cells,
                                 pip_join_rects)
 from .operators.textops import (add_script_flags, fingerprint, lang_id,
@@ -29,7 +31,6 @@ from .udfs import (make_cascade_udf, udf_country_name, udf_street_abbrev,
 
 # ------------------------------------------------------------------ helpers
 
-RE_NON_LATIN_SPARK = "[^\\x00-\\u024F]"
 RE_NON_LATIN_DUCK = r"[^\x{0000}-\x{024F}]"
 RE_CJK_DUCK = r"[\x{4E01}-\x{9FFE}]"
 RE_CYR_DUCK = r"[\x{0401}-\x{04FE}]"
@@ -91,7 +92,7 @@ def q_cascade(spark, sf_dir):
                       F.concat(F.lit("Intl "), F.col("n_name")))
     name_en = F.when(F.col("n_nationkey") % 2 == 0,
                      F.concat(F.lit("English "), F.col("n_name")))
-    latin = lambda c: F.when(~c.rlike(RE_NON_LATIN_SPARK), c)
+    latin = lambda c: F.when(~c.rlike(RE_NON_LATIN), c)
     cascade = F.coalesce(name_de, latin(gen_name), latin(int_name),
                          name_en, gen_name)
     return n.select(F.col("n_nationkey").alias("id"),
@@ -213,10 +214,10 @@ def q_gopher_quality(spark, sf_dir):
 
 def _gopher_sql(src: str) -> str:
     """CTE chain ``w``/``w2``/``m`` computing the Gopher quality signals
-    from ``src`` (must expose doc_id, text, t) — ONE source of truth
-    shared by Q_GOPHER_QUALITY_SQL and Q_CURATE_SQL.  Line metrics run
-    on \\r/LS/PS/NEL-stripped text, matching the engine (Java (?m)
-    anchors at those terminators, RE2 only at \\n)."""
+    from ``src`` (must expose doc_id, text, t), as used by
+    Q_GOPHER_QUALITY_SQL.  Line metrics run on \\r/LS/PS/NEL-stripped
+    text, matching the engine (Java (?m) anchors at those terminators,
+    RE2 only at \\n)."""
     return rf"""
 w AS (SELECT doc_id, text, t,
   CAST(CASE WHEN length(t) = 0 THEN 0
@@ -323,263 +324,6 @@ SELECT id, trim(regexp_replace(regexp_replace(regexp_replace(dirty,
   '\s+', ' ', 'g')) AS cleaned
 FROM c
 """
-
-
-def q_curate(spark, sf_dir):
-    """The composed curation pipeline (exact dedup → Gopher+repetition
-    quality gate → language profile) with a FULL oracle: every stage is
-    individually oracled, and this query proves the COMPOSITION — the
-    dedup keep-set, the gate predicate and the surviving rows' signals
-    are re-derived end-to-end in DuckDB.  The corpus plants one victim
-    per stage: exact duplicates (doc_id+100000), a high-repetition doc
-    (+200000) and a symbol-spam doc (+300000) — each must die in its
-    own stage on BOTH engines."""
-    from .engine.curate import curate
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.unionAll(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        .filter(F.col("doc_id") < 100030)) \
-        .unionAll(d.select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.lit("spam spam spam spam spam spam spam spam").alias("text"))
-        .filter(F.col("doc_id") < 200005)) \
-        .unionAll(d.select(
-            (F.col("doc_id") + 300000).alias("doc_id"),
-            F.lit("alpha # beta # gamma # # # #").alias("text"))
-        .filter(F.col("doc_id") < 300005))
-    out, _ = curate(planted, with_metrics=False)
-    return out.select("doc_id", F.col("quality.words").alias("words"),
-                      F.col("repetition").alias("repetition"), "lang")
-
-
-def q_curate_stream(spark, sf_dir):
-    """Streaming curation ≡ batch curation, contract-proven: the SAME
-    planted corpus as q_curate flows through curate_stream as TWO
-    micro-batches (file-per-trigger), lands in an epoch-keyed snapshot
-    store with exactly-once commits, and the committed output matches
-    the SAME DuckDB oracle as q_curate — one oracle, batch and
-    streaming plans.  Dedup is per-batch in the streaming twin
-    (cross-batch first-occurrence dedup lives in streaming.stateful),
-    so the epoch split keys each (doc, +100000-planted-dup) pair into
-    the same file via base-id parity (+100000 preserves parity).  The
-    spam (+200000) and symbol (+300005) plantings are INTRA-group
-    duplicates whose members DO straddle the parity split; streaming ≡
-    batch still holds only because the quality gate drops every member
-    of those groups regardless of which batch deduped them — if their
-    texts are ever edited to pass the gate, move them onto one parity
-    side (e.g. even ids) or the oracle will mismatch confusingly."""
-    import os
-    import tempfile
-    import uuid
-
-    from .engine.snapshots import SnapshotStore
-    from .streaming.incremental import curate_stream
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.unionAll(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        .filter(F.col("doc_id") < 100030)) \
-        .unionAll(d.select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.lit("spam spam spam spam spam spam spam spam").alias("text"))
-        .filter(F.col("doc_id") < 200005)) \
-        .unionAll(d.select(
-            (F.col("doc_id") + 300000).alias("doc_id"),
-            F.lit("alpha # beta # gamma # # # #").alias("text"))
-        .filter(F.col("doc_id") < 300005))
-    run = os.path.join(tempfile.gettempdir(),
-                       "osml10n_gate_cstream_" + uuid.uuid4().hex[:12])
-    src = os.path.join(run, "src")
-    # two explicit single-file writes → exactly two files → exactly two
-    # epochs at ANY scale (a range/hash repartition can collapse to one
-    # non-empty file on tiny inputs); duplicate pairs co-locate because
-    # +100000 preserves doc_id parity
-    par = F.pmod(F.col("doc_id"), F.lit(2))
-    planted.filter(par == 0).coalesce(1).write.parquet(src)
-    planted.filter(par == 1).coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(planted.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    sq = curate_stream(stream, os.path.join(run, "store"),
-                       checkpoint_dir=os.path.join(run, "ckpt"))
-    try:
-        sq.processAllAvailable()
-    finally:
-        sq.stop()
-    out = SnapshotStore(os.path.join(run, "store")).committed_output(spark)
-    return out.select("doc_id", F.col("quality.words").alias("words"),
-                      F.col("repetition").alias("repetition"), "lang")
-
-
-Q_CURATE_SQL = rf"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 30
-  UNION ALL SELECT doc_id + 200000,
-    'spam spam spam spam spam spam spam spam' FROM documents WHERE doc_id < 5
-  UNION ALL SELECT doc_id + 300000,
-    'alpha # beta # gamma # # # #' FROM documents WHERE doc_id < 5),
-n0 AS (SELECT doc_id, text, {_NORM_SQL} AS t FROM corpus),
-k AS (SELECT md5(t) AS dk, MIN(doc_id) AS keep_id FROM n0 GROUP BY 1),
-d AS (SELECT n0.doc_id, n0.text, n0.t FROM n0
-      JOIN k ON md5(n0.t) = k.dk AND n0.doc_id = k.keep_id),
-{_gopher_sql('d')},
-q AS (SELECT doc_id, text, t, words,
-  {_GOPHER_PASS_SQL} AS gopher_pass,
-  {_rep_sql('t', 2)} AS rep2
-  FROM m),
-h AS (SELECT doc_id, words, gopher_pass, rep2, text,
-  {_LANG_HITS_SQL}
-  FROM q)
-SELECT doc_id, words, rep2 AS repetition,
-  {_LANG_CASE_SQL} AS lang
-FROM h
-WHERE gopher_pass AND rep2 <= 0.3
-"""
-
-
-def q_curate_neardup(spark, sf_dir):
-    """curate(near_dup='minhash') — the full production dedup shape in
-    ONE composed pipeline: exact dedup → quality gate → LSH near-dup
-    pairs → connected-components closure → min-id survivor anti-join.
-    The corpus plants near-dup CHAINS on the real documents (doc <20:
-    variants +400000 = text||' zz' and +500000 = text||' zz zz'), so
-    base~v1 and v1~v2 pair while base~v2 may not — the closure must
-    still collapse each chain to its min id.  Every stage re-derives
-    in DuckDB: the minhash chain (q_minhash_pairs SQL), the recursive
-    CTE closure (q_dup_components SQL) and the curate gate compose into
-    one oracle.  The corpus is capped at doc_id < 500 (the full table
-    at the gate's sf0.01) so the SINGLE-NODE oracle's minhash — one
-    md5 per shingle × band — stays in memory at every sf: at sf0.1 the
-    uncapped derivation spilled >80 GB of DuckDB temp while the
-    distributed engine side ran fine, which is the scale asymmetry the
-    cap exists to absorb (the operator itself has no such limit)."""
-    from .engine.curate import curate
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text") \
-        .filter(F.col("doc_id") < 500)
-    planted = d.unionAll(
-        d.select((F.col("doc_id") + 400000).alias("doc_id"),
-                 F.concat(F.col("text"), F.lit(" zz")).alias("text"))
-        .filter(F.col("doc_id") < 400020)) \
-        .unionAll(
-        d.select((F.col("doc_id") + 500000).alias("doc_id"),
-                 F.concat(F.col("text"), F.lit(" zz zz")).alias("text"))
-        .filter(F.col("doc_id") < 500020))
-    out, _ = curate(planted, near_dup="minhash", with_metrics=False)
-    return out.select("doc_id", F.col("quality.words").alias("words"),
-                      F.col("repetition").alias("repetition"), "lang")
-
-
-Q_CURATE_NEARDUP_SQL = rf"""
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 500
-  UNION ALL SELECT doc_id + 400000, text || ' zz'
-    FROM documents WHERE doc_id < 20
-  UNION ALL SELECT doc_id + 500000, text || ' zz zz'
-    FROM documents WHERE doc_id < 20),
-n0 AS (SELECT doc_id, text, {_NORM_SQL} AS t FROM corpus),
-k AS (SELECT md5(t) AS dk, MIN(doc_id) AS keep_id FROM n0 GROUP BY 1),
-d AS (SELECT n0.doc_id, n0.text, n0.t FROM n0
-      JOIN k ON md5(n0.t) = k.dk AND n0.doc_id = k.keep_id),
-{_gopher_sql('d')},
-q AS (SELECT doc_id, text, t, words,
-  {_GOPHER_PASS_SQL} AS gopher_pass,
-  {_rep_sql('t', 2)} AS rep2
-  FROM m),
-h AS (SELECT doc_id, t, words, gopher_pass, rep2, text,
-  {_LANG_HITS_SQL}
-  FROM q),
-kept AS (SELECT doc_id, t, words, rep2,
-  {_LANG_CASE_SQL} AS lang
-  FROM h WHERE gopher_pass AND rep2 <= 0.3),
-ix AS (SELECT doc_id, t,
-  unnest(generate_series(1, GREATEST(length(t) - 4, 1))) AS i FROM kept),
-sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INTEGER), 5) AS sg
-       FROM ix),
-b AS (SELECT unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS band),
-sig AS (SELECT doc_id, band, MIN(md5(band::VARCHAR || '|' || sg)) AS mh
-        FROM sh CROSS JOIN b GROUP BY doc_id, band),
-cand AS (SELECT a.doc_id AS a_id, b2.doc_id AS b_id
-         FROM sig a JOIN sig b2 ON a.band = b2.band AND a.mh = b2.mh
-                               AND a.doc_id < b2.doc_id
-         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
--- intersections for CANDIDATE pairs only (the final join discards the
--- rest anyway, and the operator itself verifies candidates-only): the
--- unbounded all-pairs-sharing-a-shingle self-join spilled >80 GB of
--- DuckDB temp at sf0.1 (5k docs x ~1k shingles, hub shingles quadratic)
-inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS n_int
-          FROM cand c
-          JOIN sh s1 ON s1.doc_id = c.a_id
-          JOIN sh s2 ON s2.doc_id = c.b_id AND s2.sg = s1.sg
-          GROUP BY 1, 2),
-pairs AS (SELECT c.a_id, c.b_id FROM cand c
-          JOIN inter i ON i.a_id = c.a_id AND i.b_id = c.b_id
-          JOIN sizes sa ON sa.doc_id = c.a_id
-          JOIN sizes sb ON sb.doc_id = c.b_id
-          WHERE CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int)
-                >= 0.8),
-edges AS (SELECT a_id AS s, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs),
-reach(s, dst) AS (
-  SELECT s, dst FROM edges
-  UNION
-  SELECT r.s, e.dst FROM reach r JOIN edges e ON r.dst = e.s),
-losers AS (SELECT s AS doc_id FROM reach GROUP BY s HAVING MIN(dst) < s)
-SELECT doc_id, words, rep2 AS repetition, lang
-FROM kept WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-"""
-
-
-def q_curate_stream_neardup(spark, sf_dir):
-    """Streaming cross-batch NEAR-dup curation ≡ batch, contract-proven:
-    the SAME planted chain corpus as q_curate_neardup flows through
-    curate_stream(near_dup='minhash') as TWO micro-batches and the
-    committed output matches the SAME DuckDB oracle — one oracle, three
-    plans (batch, and now stream with the persistent NearDupStore).
-    The epoch split is an id THRESHOLD (epoch0: bases + v1 of doc<10;
-    epoch1: v1 of 10-19 + every v2), i.e. arrival-ordered ids — the
-    regime where first-survivor streaming semantics is EXACTLY the
-    batch min-id rule (streaming/neardup.py module doc) — and it cuts
-    the chains at every route: within-epoch closure (base~v1 both in
-    epoch0), store-taint (v1 arriving after its base committed), and
-    tainted-component (v2 pairing its same-epoch v1 which pairs the
-    store).  Cross-epoch EXACT dups need no separate stage here: they
-    are jaccard-1.0 near-dups and die in the store."""
-    import os
-    import tempfile
-    import uuid
-
-    from .engine.snapshots import SnapshotStore
-    from .streaming.incremental import curate_stream
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text") \
-        .filter(F.col("doc_id") < 500)
-    planted = d.unionAll(
-        d.select((F.col("doc_id") + 400000).alias("doc_id"),
-                 F.concat(F.col("text"), F.lit(" zz")).alias("text"))
-        .filter(F.col("doc_id") < 400020)) \
-        .unionAll(
-        d.select((F.col("doc_id") + 500000).alias("doc_id"),
-                 F.concat(F.col("text"), F.lit(" zz zz")).alias("text"))
-        .filter(F.col("doc_id") < 500020))
-    run = os.path.join(tempfile.gettempdir(),
-                       "osml10n_gate_csneardup_" + uuid.uuid4().hex[:12])
-    src = os.path.join(run, "src")
-    planted.filter(F.col("doc_id") < 400010).coalesce(1).write.parquet(src)
-    planted.filter(F.col("doc_id") >= 400010).coalesce(1) \
-        .write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(planted.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    sq = curate_stream(stream, os.path.join(run, "store"),
-                       checkpoint_dir=os.path.join(run, "ckpt"),
-                       near_dup="minhash")
-    try:
-        sq.processAllAvailable()
-    finally:
-        sq.stop()
-    out = SnapshotStore(os.path.join(run, "store")).committed_output(spark)
-    return out.select("doc_id", F.col("quality.words").alias("words"),
-                      F.col("repetition").alias("repetition"), "lang")
 
 
 def q_unaccent(spark, sf_dir):
@@ -907,25 +651,6 @@ SELECT a.n_nationkey AS a_id, b.n_nationkey AS b_id,
        levenshtein(a.n_name, b.n_name) AS dist
 FROM nation a JOIN nation b ON a.n_nationkey < b.n_nationkey
 WHERE levenshtein(a.n_name, b.n_name) <= 5
-"""
-
-
-def q_cosine_knn(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 20 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = e.select(F.col("vec_id").alias("iid"), "embedding")
-    return cosine_topk(q, items, 3).select("qid", "iid", "rank")
-
-
-Q_COSINE_KNN_SQL = """
-WITH q AS (SELECT vec_id AS qid, embedding FROM embeddings WHERE vec_id % 20 = 0),
-r AS (SELECT q.qid, i.vec_id AS iid,
-  ROW_NUMBER() OVER (PARTITION BY q.qid
-    ORDER BY list_cosine_similarity(q.embedding, i.embedding) DESC,
-             i.vec_id ASC) AS rank
-  FROM q CROSS JOIN embeddings i)
-SELECT qid, iid, rank FROM r WHERE rank <= 3
 """
 
 
@@ -1263,7 +988,7 @@ def q_localize_latin(spark, sf_dir):
     pure morton bit-math — end-to-end plumbing verified value-exact."""
     from .engine.localize import localize
     d = _t(spark, sf_dir, "documents") \
-        .filter(~F.substring(F.col("text"), 1, 48).rlike(RE_NON_LATIN_SPARK))
+        .filter(~F.substring(F.col("text"), 1, 48).rlike(RE_NON_LATIN))
     staged = d.select(
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("image_id"),
         F.substring(F.col("text"), 1, 48).alias("caption"),
@@ -2140,7 +1865,7 @@ def q_localize_documents(spark, sf_dir):
     exact morton math on both sides."""
     from .engine.localize import localize
     staged = _staged_documents(spark, sf_dir)
-    is_lat = ~F.col("caption").rlike(RE_NON_LATIN_SPARK)
+    is_lat = ~F.col("caption").rlike(RE_NON_LATIN)
     return localize(staged, "de").select(
         "image_id",
         F.when(is_lat, F.col("caption_l10n")).alias("latin_cap"),
@@ -2248,9 +1973,9 @@ cand AS (SELECT a.doc_id AS a_id, b2.doc_id AS b_id, COUNT(*) AS band_matches
                                AND a.doc_id < b2.doc_id
          GROUP BY 1, 2 HAVING COUNT(*) >= 2),
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
--- candidates-only intersections (same rewrite as Q_CURATE_NEARDUP_SQL:
--- the final join discards non-candidate rows, and the unbounded
--- self-join is quadratic in hub shingles at sf0.1)
+-- candidates-only intersections (the final join discards
+-- non-candidate rows, and the unbounded self-join is quadratic in
+-- hub shingles at sf0.1)
 inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS n_int
           FROM cand c
           JOIN sh s1 ON s1.doc_id = c.a_id
@@ -2264,39 +1989,6 @@ JOIN sizes sa ON sa.doc_id = c.a_id
 JOIN sizes sb ON sb.doc_id = c.b_id
 WHERE CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int) >= 0.8
 """
-
-
-def _ann_recall(ann: DataFrame, exact: DataFrame, k: int,
-                per_query_floor: float, mean_floor: float) -> DataFrame:
-    """Per-query ANN evidence in ORACLE-CHECKABLE form.  The ANN result
-    itself is not SQL-derivable (FP hyperplanes / centroid probing),
-    so the gate pins what IS derivable + what must INVARIANTLY hold:
-
-    - ``exact_nn``: the exact nearest NON-SELF neighbor (rank 2 — rank
-      1 is the query itself, queries being drawn from the item set),
-      value-matched against the oracle's own exact-cosine window SQL;
-    - ``recall_ok``: per-query recall ≥ ``per_query_floor`` against the
-      Spark-exact top-k — oracle emits literal true, so ANY query
-      falling under the floor hash-mismatches the gate;
-    - ``mean_recall_ok``: corpus-mean recall ≥ ``mean_floor``, same
-      mechanism.
-
-    Both floors are invariants of the DETERMINISTIC (data, seed)
-    pairing, not statistical hopes — measured with margin before being
-    pinned (see the per-query docstrings)."""
-    hits = (ann.select("qid", "iid")
-            .join(exact.select("qid", "iid"), ["qid", "iid"])
-            .groupBy("qid").agg(F.count("*").alias("hits")))
-    nn = exact.filter(F.col("rank") == 2) \
-        .select("qid", F.col("iid").alias("exact_nn"))
-    per = (nn.join(hits, "qid", "left").fillna({"hits": 0})
-           .withColumn("recall", F.col("hits") / float(k)))
-    w = Window.partitionBy(F.lit(1))
-    return (per.select(
-        "qid", "exact_nn",
-        (F.col("recall") >= per_query_floor).alias("recall_ok"),
-        (F.avg("recall").over(w) >= mean_floor).alias("mean_recall_ok"))
-        .orderBy("qid"))
 
 
 def q_dup_components(spark, sf_dir):
@@ -2365,139 +2057,6 @@ SELECT n.doc_id,
 FROM nodes n LEFT JOIN reach r ON r.s = n.doc_id
 GROUP BY n.doc_id
 ORDER BY doc_id
-"""
-
-
-def q_ann_lsh(spark, sf_dir):
-    """Random-hyperplane LSH ANN, VALUE-ORACLED: the exact non-self
-    nearest neighbor is cross-derived by DuckDB's own cosine window,
-    and per-query/mean recall floors are pinned as boolean invariants
-    (see _ann_recall).  Runs over the exact-decimal _clustered_vectors
-    derivation (same input as q_ann_ivf): the raw embeddings table is
-    clusterless, so its exact-NN ranking had near-ties where Spark's
-    aggregate()-summed dot/(norm·norm) and DuckDB's
-    list_cosine_similarity — different float derivations — could
-    disagree at some future sf/seed; on the clustered vectors the
-    rank-2 gap is STRUCTURAL (shared 4.0 components dominate), not
-    rounding-dependent.  Floors measured on the fixed derivation at
-    sf0.01: every query at recall 1.0 (the 16-dim cluster structure is
-    exactly what hyperplane sketches preserve); pinned at 0.9 per-query
-    and mean, leaving one-of-three headroom per query."""
-    e = _t(spark, sf_dir, "embeddings")
-    cl = _clustered_vectors(e)
-    q = cl.filter(F.col("vec_id") % 50 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = cl.select(F.col("vec_id").alias("iid"), "embedding")
-    ann = lsh_topk(q, items, 3, dim=16, n_bits=4, n_tables=12)
-    exact = cosine_topk(q, items, 3)
-    return _ann_recall(ann, exact, 3, per_query_floor=0.9, mean_floor=0.9)
-
-
-Q_ANN_LSH_SQL = """
-WITH cl AS (SELECT vec_id,
-  list_transform(range(0, 16), j ->
-    CASE WHEN j = (vec_id % 8) * 2 OR j = (vec_id % 8) * 2 + 1
-         THEN 4.0 ELSE 0.0 END
-    + ((vec_id * 31 + j * 17) % 7) * 0.05) AS embedding
-  FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding FROM cl WHERE vec_id % 50 = 0),
-r AS (SELECT q.qid, i.vec_id AS iid,
-  ROW_NUMBER() OVER (PARTITION BY q.qid
-    ORDER BY list_cosine_similarity(q.embedding, i.embedding) DESC,
-             i.vec_id ASC) AS rank
-  FROM q CROSS JOIN cl i)
-SELECT qid, iid AS exact_nn, true AS recall_ok, true AS mean_recall_ok
-FROM r WHERE rank = 2 ORDER BY qid
-"""
-
-
-def _clustered_vectors(e: DataFrame) -> DataFrame:
-    """Deterministic clustered embeddings derived from vec_id alone —
-    SQL-expressible, so the IVF oracle re-derives the SAME vectors and
-    the exact top-k over them: 8 clusters keyed vec_id % 8, two strong
-    components (4.0 at 2c, 2c+1) over a 16-dim base of small arithmetic
-    pseudo-noise ((vec_id·31 + j·17) mod 7)·0.05.  The raw synthetic
-    embeddings table is clusterless (intra ≈ inter cosine), which
-    bounds ANY cluster-probing index by its probe fraction — this
-    derivation gives IVF real structure to find while keeping every
-    value portable."""
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda j: F.when((j == (F.col("vec_id") % 8) * 2)
-                         | (j == (F.col("vec_id") % 8) * 2 + 1),
-                         F.lit(4.0)).otherwise(F.lit(0.0))
-        + ((F.col("vec_id") * 31 + j * 17) % 7).cast("double") * F.lit(0.05))
-    return e.select("vec_id", vec.alias("embedding"))
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-bucketed ANN (inverted lists on deterministic coarse
-    centroids, nprobe cluster probing), VALUE-ORACLED over the
-    _clustered_vectors derivation (the oracle recomputes the vectors
-    AND the exact neighbors in SQL).  Floors measured on the fixed
-    derivation: every query at recall 1.0 across n_centroids ∈ {8,16,
-    24}, nprobe ∈ {3,4,6} → per-query floor 0.9 pinned with full
-    margin; mean floor 0.9 likewise."""
-    e = _t(spark, sf_dir, "embeddings")
-    cl = _clustered_vectors(e)
-    q = cl.filter(F.col("vec_id") % 50 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = cl.select(F.col("vec_id").alias("iid"), "embedding")
-    ann = ivf_topk(q, items, 3, n_centroids=16, nprobe=4)
-    exact = cosine_topk(q, items, 3)
-    return _ann_recall(ann, exact, 3, per_query_floor=0.9, mean_floor=0.9)
-
-
-def q_ann_ivf_persist(spark, sf_dir):
-    """Persistent IVF index (build → parquet inverted lists partitioned
-    by centroid id → load → partition-pruned search): the on-disk path
-    must return IDENTICAL neighbors to the one-shot ivf_topk (same
-    deterministic centroid pick, assignment, refine), so it shares
-    q_ann_ivf's oracle — DuckDB re-derives the _clustered_vectors AND
-    the exact top-k, and the recall floors are value-pinned.  The
-    load() leg additionally proves the round-trip through parquet
-    (centroid literals + cid-partitioned lists) loses nothing."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from .operators.similarity import IVFIndex
-    e = _t(spark, sf_dir, "embeddings")
-    cl = _clustered_vectors(e)
-    q = cl.filter(F.col("vec_id") % 50 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = cl.select(F.col("vec_id").alias("iid"), "embedding")
-    path = os.path.join(tempfile.gettempdir(),
-                        "osml10n_gate_ivfidx_" + uuid.uuid4().hex[:12])
-    try:
-        IVFIndex.build(items, path, n_centroids=16)
-        idx = IVFIndex.load(spark, path)
-        ann = idx.search(q, 3, nprobe=4)
-        exact = cosine_topk(q, items, 3)
-        out = _ann_recall(ann, exact, 3, per_query_floor=0.9,
-                          mean_floor=0.9)
-        out = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-    return out
-
-
-Q_ANN_IVF_SQL = """
-WITH cl AS (SELECT vec_id,
-  list_transform(range(0, 16), j ->
-    CASE WHEN j = (vec_id % 8) * 2 OR j = (vec_id % 8) * 2 + 1
-         THEN 4.0 ELSE 0.0 END
-    + ((vec_id * 31 + j * 17) % 7) * 0.05) AS embedding
-  FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding FROM cl WHERE vec_id % 50 = 0),
-r AS (SELECT q.qid, i.vec_id AS iid,
-  ROW_NUMBER() OVER (PARTITION BY q.qid
-    ORDER BY list_cosine_similarity(q.embedding, i.embedding) DESC,
-             i.vec_id ASC) AS rank
-  FROM q CROSS JOIN cl i)
-SELECT qid, iid AS exact_nn, true AS recall_ok, true AS mean_recall_ok
-FROM r WHERE rank = 2 ORDER BY qid
 """
 
 
@@ -2610,44 +2169,6 @@ SELECT cell_prefix, COUNT(*) AS n,
   TRUE AS zorder_ok
 FROM t5 GROUP BY cell_prefix
 """
-
-
-def q_cell_embedding_profile(spark, sf_dir):
-    """Grouped-map (applyInPandas) per-cell embedding profile: count,
-    mean norm, dominant-eigenvalue share via power iteration — the
-    genuinely-iterative per-group computation built-ins can't express
-    (SURVEY §2.10).  FULL replay-literal oracle since round 4: the
-    500-vector input is built from exact-decimal arithmetic (quarter
-    steps and x.5 lattice coordinates are exactly representable, so the
-    JVM column expressions and the numpy replay produce bit-identical
-    float64 inputs), the cell assignment replays through the
-    pure-numpy cell kernel (property-tested bit-equal to the JVM
-    expression), and the per-group power iteration replays through the
-    SAME _profile_stats function driver-side — the grouped-map
-    machinery (grouping, Arrow transport, in-group sort) is the thing
-    on trial.  ``profile_ok`` (n≥1, mean_norm>0, eig-share ∈ [0,1]) is
-    re-derived in SQL."""
-    from .operators.similarity import cell_embedding_profile
-    dim = 16
-    emb = F.array(*[
-        ((((F.col("vec_id") * 31 + 17 * j) % 7) * F.lit(0.25))
-         + F.when((F.col("vec_id") % dim) == j,
-                  F.lit(4.0)).otherwise(F.lit(0.0)))
-        for j in range(dim)]).alias("embedding")
-    e = spark.range(500).select(
-        F.col("id").alias("vec_id"),
-        (((F.col("id") * 37) % 360) - 180 + F.lit(0.5)).cast("double")
-        .alias("lon"),
-        (((F.col("id") * 7) % 160) - 80 + F.lit(0.5)).cast("double")
-        .alias("lat"),
-        emb)
-    c = assign_cells(e, res=3)
-    ok = ((F.col("n") >= 1) & (F.col("mean_norm") > 0)
-          & (F.col("top_eig_share") >= 0)
-          & (F.col("top_eig_share") <= 1.0 + 1e-9))
-    return cell_embedding_profile(c) \
-        .select("cell", "n", "mean_norm", "top_eig_share",
-                ok.alias("profile_ok"))
 
 
 def q_image_features(spark, sf_dir):
@@ -2849,43 +2370,7 @@ FROM t
 """
 
 
-def _cell_profile_sql() -> str:
-    """Oracle for q_cell_embedding_profile: replay the exact-decimal
-    vector construction in numpy, assign cells with the pure-python
-    kernel (bit-equal to the JVM expr by property test), group, and run
-    the SAME _profile_stats per group — full-precision doubles pinned
-    as string-cast literals; profile_ok re-derived in SQL."""
-    import numpy as np
-
-    from .operators.similarity import _profile_stats
-    from .spatial.cellindex import cell_from_lonlat
-    n, dim = 500, 16
-    ids = np.arange(n, dtype=np.int64)
-    lon = (((ids * 37) % 360) - 180).astype(np.float64) + 0.5
-    lat = (((ids * 7) % 160) - 80).astype(np.float64) + 0.5
-    cells = cell_from_lonlat(lon, lat, 3)
-    emb = np.empty((n, dim), dtype=np.float64)
-    for j in range(dim):
-        emb[:, j] = (((ids * 31 + 17 * j) % 7) * 0.25
-                     + np.where(ids % dim == j, 4.0, 0.0))
-    rows = []
-    for cell in np.unique(cells):
-        mat = emb[cells == cell]          # ids ascending already
-        n_g, mean_norm, share = _profile_stats(mat)
-        rows.append(f"({int(cell)}::BIGINT, {n_g}::BIGINT, "
-                    f"CAST('{mean_norm!r}' AS DOUBLE), "
-                    f"CAST('{share!r}' AS DOUBLE))")
-    vals = ",\n".join(rows)
-    return f"""
-WITH t(cell, n, mean_norm, top_eig_share) AS (VALUES {vals})
-SELECT cell, n, mean_norm, top_eig_share,
-  (n >= 1 AND mean_norm > 0 AND top_eig_share >= 0
-   AND top_eig_share <= 1.0 + 1e-9) AS profile_ok
-FROM t
-"""
-
-
-# NOTE: the five replay-literal oracles above are NOT built here —
+# NOTE: the four replay-literal oracles above are NOT built here —
 # each costs hundreds of deterministic image/audio generations plus
 # encode/decode (including the zlib PNG round-trip), which importing
 # contract.py for bench/tests/entry must not pay.  Their builder
@@ -3055,8 +2540,6 @@ QUERIES = {
     "q_gopher_quality": q_gopher_quality,
     "q_repetition": q_repetition,
     "q_clean_text": q_clean_text,
-    "q_curate": q_curate,
-    "q_curate_stream": q_curate_stream,
     "q_unaccent": q_unaccent,
     "q_abbrev_ru": q_abbrev_ru,
     "q_pip_squares": q_pip_squares,
@@ -3069,7 +2552,6 @@ QUERIES = {
     "q_exact_dedup": q_exact_dedup,
     "q_minhash": q_minhash,
     "q_levenshtein_pairs": q_levenshtein_pairs,
-    "q_cosine_knn": q_cosine_knn,
     "q_agg_pricing": q_agg_pricing,
     "q_topk_orders": q_topk_orders,
     "q_dim_rollup": q_dim_rollup,
@@ -3079,7 +2561,6 @@ QUERIES = {
     "q_localize_mixed": q_localize_mixed,
     "q_simhash_pairs": q_simhash_pairs,
     "q_minhash_pairs": q_minhash_pairs,
-    "q_ann_lsh": q_ann_lsh,
     "q_abbrev_de": q_abbrev_de,
     "q_abbrev_en": q_abbrev_en,
     "q_abbrev_fr": q_abbrev_fr,
@@ -3091,12 +2572,9 @@ QUERIES = {
     "q_ngram_jaccard": q_ngram_jaccard,
     "q_embedding_dups": q_embedding_dups,
     "q_session_events": q_session_events,
-    "q_ann_ivf": q_ann_ivf,
-    "q_ann_ivf_persist": q_ann_ivf_persist,
     "q_image_features": q_image_features,
     "q_payload_audit": q_payload_audit,
     "q_write_tiled": q_write_tiled,
-    "q_cell_embedding_profile": q_cell_embedding_profile,
     "q_image_resize": q_image_resize,
     "q_frame_sample": q_frame_sample,
     "q_asof_join": q_asof_join,
@@ -3121,8 +2599,6 @@ QUERIES = {
     "q_frame_dups": q_frame_dups,
     "q_audio_dups": q_audio_dups,
     "q_dup_components": q_dup_components,
-    "q_curate_neardup": q_curate_neardup,
-    "q_curate_stream_neardup": q_curate_stream_neardup,
     "q_stratified_sample": q_stratified_sample,
     "q_pack_shards": q_pack_shards,
     "q_quantile_gate": q_quantile_gate,
@@ -3131,14 +2607,9 @@ QUERIES = {
 
 ORACLES = {
     "q_dup_components": Q_DUP_COMPONENTS_SQL,
-    "q_curate_neardup": Q_CURATE_NEARDUP_SQL,
-    "q_curate_stream_neardup": Q_CURATE_NEARDUP_SQL,  # stream ≡ batch
     "q_stratified_sample": Q_STRATIFIED_SAMPLE_SQL,
     "q_pack_shards": Q_PACK_SHARDS_SQL,
     "q_quantile_gate": Q_QUANTILE_GATE_SQL,
-    "q_ann_lsh": Q_ANN_LSH_SQL,
-    "q_ann_ivf": Q_ANN_IVF_SQL,
-    "q_ann_ivf_persist": Q_ANN_IVF_SQL,  # search ≡ ivf_topk by design
     "q_image_dups": Q_IMAGE_DUPS_SQL,
     "q_frame_dups": Q_FRAME_DUPS_SQL,
     "q_audio_dups": Q_AUDIO_DUPS_SQL,
@@ -3148,7 +2619,6 @@ ORACLES = {
     "q_payload_audit": _payload_audit_sql,
     "q_image_resize": _image_resize_sql,
     "q_frame_sample": _frame_sample_sql,
-    "q_cell_embedding_profile": _cell_profile_sql,
     "q_cascade": Q_CASCADE_SQL,
     "q_script_flags": Q_SCRIPT_FLAGS_SQL,
     "q_lang_profile": Q_LANG_PROFILE_SQL,
@@ -3156,8 +2626,6 @@ ORACLES = {
     "q_gopher_quality": Q_GOPHER_QUALITY_SQL,
     "q_repetition": Q_REPETITION_SQL,
     "q_clean_text": Q_CLEAN_TEXT_SQL,
-    "q_curate": Q_CURATE_SQL,
-    "q_curate_stream": Q_CURATE_SQL,
     "q_unaccent": Q_UNACCENT_SQL,
     "q_abbrev_ru": Q_ABBREV_RU_SQL,
     "q_pip_squares": Q_PIP_SQUARES_SQL,
@@ -3170,7 +2638,6 @@ ORACLES = {
     "q_exact_dedup": Q_EXACT_DEDUP_SQL,
     "q_minhash": Q_MINHASH_SQL,
     "q_levenshtein_pairs": Q_LEVENSHTEIN_SQL,
-    "q_cosine_knn": Q_COSINE_KNN_SQL,
     "q_agg_pricing": Q_AGG_PRICING_SQL,
     "q_topk_orders": Q_TOPK_ORDERS_SQL,
     "q_dim_rollup": Q_DIM_ROLLUP_SQL,

@@ -1,19 +1,22 @@
-"""Deduplication operators for large-scale training-data pipelines.
+"""Deduplication operators.
 
 All operators take/return DataFrames and are built from JVM expressions
-wherever possible (md5/xxhash64/regexp are whole-stage-codegen native);
-hashing choices are deliberately SQL-portable so the DuckDB oracle can
-replicate them bit-for-bit (md5 exists in both engines with identical
-output; Spark's xxhash64/hash do NOT exist in DuckDB and are avoided
-everywhere an oracle needs to re-derive values).
+(md5/regexp/bit ops are whole-stage-codegen native); hashing choices
+are deliberately SQL-portable so the DuckDB oracle can replicate them
+bit-for-bit (md5 exists in both engines with identical output; Spark's
+xxhash64/hash do NOT exist in DuckDB and are avoided everywhere an
+oracle needs to re-derive values).
 
 - exact_dedup:        md5(normalized text) group-by, keep min id
-- minhash_signature:  k-shingles → per-band min of md5-derived 64-bit
-                      integers → LSH band buckets
+- minhash_signature:  k-shingles → per-band min of md5-derived hex
+                      hashes
 - minhash_dup_pairs:  band-bucket equi-join → candidate pairs →
                       verified n-gram Jaccard
 - simhash64:          64-bit sign-aggregated token hash + hamming pairs
+- hash_dup_pairs:     banded Hamming pairs over a precomputed 64-bit
+                      signature (simhash, image phash, audio fingerprint)
 - embedding_dups:     cosine-similarity near-dup pairs over embeddings
+- dup_components:     near-dup pairs → connected components
 """
 from __future__ import annotations
 
@@ -21,8 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
     "normalize_text", "exact_dedup", "shingles", "minhash_signature",
-    "minhash_dup_pairs", "minhash_pairs_incremental",
-    "ngram_jaccard_pairs", "simhash64",
+    "minhash_dup_pairs", "ngram_jaccard_pairs", "simhash64",
     "simhash_dup_pairs", "hash_dup_pairs", "embedding_dups",
     "dup_components",
 ]
@@ -149,78 +151,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("jaccard") >= threshold))
 
 
-def minhash_pairs_incremental(new_df: DataFrame, all_df: DataFrame,
-                              id_col: str, text_col: str,
-                              n: int = 5, bands: int = 8,
-                              min_band_matches: int = 2,
-                              jaccard_threshold: float = 0.6,
-                              sig_all: DataFrame | None = None) -> DataFrame:
-    """LSH near-dup pairs INVOLVING AT LEAST ONE row of ``new_df``
-    (which must be a subset of ``all_df`` by id) — the streaming /
-    incremental-ingest shape: each epoch band-joins only its NEW docs
-    against the corpus instead of recomputing the full all-vs-all
-    join, and the union of per-epoch results over a growing corpus
-    equals ``minhash_dup_pairs`` over the final corpus (every pair is
-    found exactly once, when its later-arriving member lands —
-    tests/test_streaming_neardup.py pins the equivalence).
-
-    Join condition: for new-vs-new candidates only the a<b side
-    survives (both sides appear in ``new_df``, so the mirrored match
-    would double band_matches); new-vs-old candidates match in either
-    id order and are emitted as (least, greatest).  Scale shape: one
-    band-bucket equi-join whose left side is the epoch only;
-    verification touches candidate pairs only.
-
-    ``sig_all`` (optional): precomputed (doc_id, band, minhash)
-    signatures covering every ``all_df`` row — a streaming job passes
-    its persisted SIGNATURE STORE here so the corpus side is a parquet
-    scan instead of an O(corpus) re-hash per epoch (the epoch's own
-    signatures are always recomputed — epoch-sized, cheap)."""
-    sig_new = minhash_signature(new_df, id_col, text_col, n, bands) \
-        .withColumnRenamed("doc_id", "n_id")
-    new_ids = new_df.select(F.col(id_col).alias("o_id")) \
-        .withColumn("o_is_new", F.lit(True))
-    if sig_all is None:
-        sig_all = minhash_signature(all_df, id_col, text_col, n, bands)
-    sig_all = (sig_all.select(F.col("doc_id").alias("o_id"),
-                              "band", "minhash")
-               .join(new_ids, "o_id", "left")
-               .withColumn("o_is_new",
-                           F.coalesce(F.col("o_is_new"), F.lit(False))))
-    cand = (sig_new.join(
-        sig_all,
-        (sig_new["band"] == sig_all["band"])
-        & (sig_new["minhash"] == sig_all["minhash"])
-        & ((F.col("n_id") < F.col("o_id"))
-           | (~F.col("o_is_new") & (F.col("n_id") != F.col("o_id")))))
-        .groupBy(F.least("n_id", "o_id").alias("a_id"),
-                 F.greatest("n_id", "o_id").alias("b_id"))
-        .agg(F.count("*").alias("band_matches"))
-        .filter(F.col("band_matches") >= min_band_matches))
-    # verification shingles ONLY for docs in a candidate pair: the
-    # batch operator shingles its whole (epoch-sized) input, but here
-    # all_df is the ENTIRE corpus — semi-joining the tiny candidate id
-    # set first (AQE broadcasts it) keeps the per-epoch verify cost
-    # proportional to candidates, not corpus
-    cand_ids = (cand.select(F.col("a_id").alias("doc_id"))
-                .union(cand.select(F.col("b_id").alias("doc_id")))
-                .distinct())
-    sh = (all_df.select(F.col(id_col).alias("doc_id"),
-                        F.col(text_col).alias("_t"))
-          .join(cand_ids, "doc_id", "left_semi")
-          .select("doc_id", shingles(F.col("_t"), n).alias("sh")))
-    withs = (cand
-             .join(sh.withColumnRenamed("doc_id", "a_id")
-                     .withColumnRenamed("sh", "a_sh"), "a_id")
-             .join(sh.withColumnRenamed("doc_id", "b_id")
-                     .withColumnRenamed("sh", "b_sh"), "b_id"))
-    inter = F.size(F.array_intersect(F.col("a_sh"), F.col("b_sh")))
-    union = F.size(F.array_union(F.col("a_sh"), F.col("b_sh")))
-    return (withs.withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("a_id", "b_id", "band_matches", "jaccard"))
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash over whitespace tokens: per bit, sign of the sum
     of ±1 contributions from a PORTABLE md5-derived token hash (bit b =
@@ -252,7 +182,7 @@ def hash_dup_pairs(df: DataFrame, id_col: str, hash_col: str,
                    max_hamming: int = 3,
                    n_bands: int | None = None) -> DataFrame:
     """Near-dup pairs by Hamming distance over ANY precomputed 64-bit
-    signature column (SimHash, image phash, audio fingerprint, …),
+    signature column (image phash, audio fingerprint, …),
     banded: split the 64 bits into ``n_bands`` equal bands — by
     pigeonhole, any pair within hamming ≤ n_bands-1 shares at least one
     exact band, so candidate generation is a pure equi-join (no
@@ -414,6 +344,16 @@ def simhash_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                           "doc_id", "simhash", max_hamming=max_hamming)
 
 
+def _dot(a, b):
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm(a):
+    return F.sqrt(F.aggregate(a, F.lit(0.0),
+                              lambda acc, x: acc + x.cast("double") * x.cast("double")))
+
+
 def embedding_dups(df: DataFrame, id_col: str, vec_col: str,
                    threshold: float = 0.95, band_width: int = 8,
                    n_bands: int = 8, brute: bool = False,
@@ -431,15 +371,14 @@ def embedding_dups(df: DataFrame, id_col: str, vec_col: str,
     t≈0.95, w=8, 8 bands the miss probability is <1% — and falls
     further with more bands.  Requires dim ≥ band_width·n_bands.
 
-    ``brute=True`` keeps the O(n²) baseline — the small-n oracle only.
-    Vector folds shared with operators.similarity so FP semantics
+    ``brute=True`` keeps the O(n²) baseline — the small-n oracle only;
+    both paths share the ``_dot``/``_norm`` folds so FP semantics
     cannot drift.
 
     ``dim`` is the embedding dimensionality.  Pass it explicitly at
     scale (and always on streaming DataFrames, where eager actions are
     illegal): when omitted, a bounded null-filtered ``.first()`` probe
     runs ONE driver job at plan-construction time to discover it."""
-    from .similarity import _dot, _norm
     v = df.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")) \
         .withColumn("nrm", _norm(F.col("vec")))
 

@@ -16,7 +16,7 @@ driver loops) chosen for their 100-TB shape:
   broadcast join back — per-group thresholds are tiny by construction.
 
 No reference analog (giggls/osml10n is per-record localization); these
-extend the engine the way the dedup/ANN suite does.
+extend the engine the way the dedup suite does.
 """
 from __future__ import annotations
 

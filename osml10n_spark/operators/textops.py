@@ -221,9 +221,8 @@ def repetition_ratio(col, n: int = 2):
     The UDF is deterministic in fact but MARKED nondeterministic: that
     stops CollapseProject/PushDownPredicates from substituting the
     aliased column into downstream filters, which duplicated the Arrow
-    island (two evaluations per kept row in curate(), measured as two
-    ArrowEvalPython nodes in the plan — tests/test_plans.py pins the
-    single-island shape)."""
+    island (two evaluations per kept row when a filter on the ratio
+    follows, measured as two ArrowEvalPython nodes in the plan)."""
     return _make_rep_udf(n).asNondeterministic()(normalize_text(col))
 
 

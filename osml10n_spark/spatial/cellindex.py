@@ -64,13 +64,23 @@ def _grid_shape(res: int) -> tuple[int, int]:
     return 2 ** (res + 1), 2 ** res          # nx (lon), ny (lat)
 
 
+def _clipped_idx(v, lo_shift: float, scale: float, n: int) -> np.ndarray:
+    """Grid index in [0, n-1], clipped in float space BEFORE the int64
+    cast — numpy twin of cellexpr._clipped_idx (the JVM saturates
+    floor() to the long range): ±inf and out-of-range doubles land on
+    the edge column instead of wrapping to INT64_MIN, and NaN maps to
+    0 (``minimum`` propagates it, ``fmax`` drops it)."""
+    f = (np.asarray(v, dtype=np.float64) + lo_shift) / scale * n
+    np.floor(f, out=f)
+    np.minimum(f, n - 1, out=f)
+    np.fmax(f, 0, out=f)
+    return f.astype(np.int64)
+
+
 def _xy_from_lonlat(lon, lat, res: int):
     nx, ny = _grid_shape(res)
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    ix = np.clip(np.floor((lon + 180.0) / 360.0 * nx).astype(np.int64), 0, nx - 1)
-    iy = np.clip(np.floor((lat + 90.0) / 180.0 * ny).astype(np.int64), 0, ny - 1)
-    return ix, iy
+    return (_clipped_idx(lon, 180.0, 360.0, nx),
+            _clipped_idx(lat, 90.0, 180.0, ny))
 
 
 def _pack(ix, iy, res: int) -> np.ndarray:
@@ -202,10 +212,8 @@ def zorder_key(lon, lat, z: int = 16) -> np.ndarray:
     """Raster z-order (Morton) key: 2^z × 2^z grid, y counted from north
     (raster-tile convention)."""
     n = 2 ** z
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    tx = np.clip(np.floor((lon + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    ty = np.clip(np.floor((90.0 - lat) / 180.0 * n).astype(np.int64), 0, n - 1)
+    tx = _clipped_idx(lon, 180.0, 360.0, n)
+    ty = _clipped_idx(-np.asarray(lat, dtype=np.float64), 90.0, 180.0, n)
     return (_spread(tx) | (_spread(ty) << np.uint64(1))).astype(np.int64)
 
 

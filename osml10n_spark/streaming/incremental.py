@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..engine.localize import localize
 from ..engine.snapshots import SnapshotStore
 
-__all__ = ["localize_stream", "curate_stream", "windowed_cell_counts"]
+__all__ = ["localize_stream", "windowed_cell_counts"]
 
 
 def localize_stream(stream_df: DataFrame, store_root: str,
@@ -62,67 +62,6 @@ def localize_stream(stream_df: DataFrame, store_root: str,
         keys = [r.cell_prefix for r in
                 staged.select("cell_prefix").distinct().collect()]
         store.commit(out, keys, metrics={"epoch": int(epoch_id)})
-        committed.add(int(epoch_id))
-
-    writer = stream_df.writeStream.foreachBatch(process).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
-def curate_stream(stream_df: DataFrame, store_root: str,
-                  checkpoint_dir: str | None = None, **curate_kwargs):
-    """Incremental corpus curation: the composed curate() pipeline
-    (dedup → quality gate → lang → optional localize) per micro-batch,
-    exactly-once via epoch-keyed snapshot commits — the streaming twin
-    of the batch pipeline.  EXACT dedup is scoped per batch
-    (cross-batch first-occurrence dedup lives in streaming.stateful) —
-    except under ``near_dup='minhash'``, which IS cross-batch: the
-    per-epoch gated docs run through a persistent
-    :class:`~..streaming.neardup.NearDupStore` under
-    ``{store_root}/_neardup`` (first-survivor semantics, exact-batch
-    equivalence on arrival-ordered ids; a cross-epoch EXACT dup is a
-    jaccard-1.0 near-dup, so it is dropped too).  The near-dup filter
-    runs BEFORE the manifest commit (its store appends are idempotent
-    per-epoch overwrites, the manifest stays the commit point), and its
-    eager intermediates inherit ``checkpoint_dir``'s sibling
-    ``{store_root}/_neardup_ckpt`` when the stream has a reliable
-    checkpoint.  Same concurrency contract as localize_stream: one
-    active committer per store root; the epoch cache re-validates on
-    miss."""
-    import os
-
-    from ..engine.curate import curate
-
-    store = SnapshotStore(store_root)
-    seen_files: set[str] = set()
-    committed = store.committed_epochs_tracked(seen_files)
-
-    nd_store = None
-    if curate_kwargs.pop("near_dup", None) is not None:
-        from .neardup import NearDupStore
-        nd_store = NearDupStore(
-            os.path.join(store_root, "_neardup"),
-            id_col=curate_kwargs.get("id_col", "doc_id"),
-            text_col=curate_kwargs.get("text_col", "text"),
-            jaccard_threshold=curate_kwargs.pop("near_dup_threshold", 0.8),
-            checkpoint_dir=(os.path.join(store_root, "_neardup_ckpt")
-                            if checkpoint_dir else None))
-
-    def process(batch_df: DataFrame, epoch_id: int):
-        if batch_df.isEmpty():
-            return
-        if int(epoch_id) in committed:
-            return
-        committed.update(store.committed_epochs_tracked(seen_files))
-        if int(epoch_id) in committed:
-            return
-        out, _ = curate(batch_df, with_metrics=False, **curate_kwargs)
-        if nd_store is not None:
-            out = nd_store.filter_epoch(out, int(epoch_id))
-        # partition bookkeeping is epoch-keyed for text streams (no
-        # spatial prefix unless the caller localizes)
-        store.commit(out, [int(epoch_id)], metrics={"epoch": int(epoch_id)})
         committed.add(int(epoch_id))
 
     writer = stream_df.writeStream.foreachBatch(process).outputMode("append")

@@ -19,21 +19,6 @@ Examples
   spark-submit --py-files osml10n_spark.zip run_job.py \
       --input /data/images.parquet --store /data/l10n_store --lang en
 
-  # corpus curation (dedup → quality gate → lang; + localization when
-  # the input carries lon/lat) over a documents table; add
-  # --near-dup minhash [--checkpoint-dir hdfs://...] for near-dup
-  # removal via LSH pairs → components → survivor
-  spark-submit --py-files osml10n_spark.zip run_job.py \
-      --mode curate --input /data/docs.parquet --output /data/kept
-
-  # persistent IVF ANN index: build once, probe many (partition-pruned)
-  spark-submit --py-files osml10n_spark.zip run_job.py \
-      --mode index --input /data/emb.parquet --id-col vec_id \
-      --output /data/ivf_index
-  spark-submit --py-files osml10n_spark.zip run_job.py \
-      --mode search --index /data/ivf_index --input /data/queries.parquet \
-      --id-col vec_id --k 5 --nprobe 2 --output /data/neighbors
-
 Build the zip with:  python run_job.py --make-zip osml10n_spark.zip
 """
 from __future__ import annotations
@@ -72,36 +57,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="snapshot store root (resumable)")
     ap.add_argument("--lang", default="en")
     ap.add_argument("--output", help="plain parquet output (no snapshots)")
-    ap.add_argument("--mode",
-                    choices=["localize", "curate", "index", "search"],
-                    default="localize",
-                    help="localize = flagship pipeline; curate = dedup → "
-                         "quality gate → lang (+ localization when the "
-                         "input has lon/lat); index = build a persistent "
-                         "IVF ANN index from an embeddings table; search "
-                         "= probe an index built by --mode index")
-    ap.add_argument("--id-col", default="doc_id",
-                    help="curate/index mode: id column")
-    ap.add_argument("--text-col", default="text",
-                    help="curate mode: text column")
-    ap.add_argument("--near-dup", choices=["minhash"], default=None,
-                    help="curate mode: also remove NEAR-duplicate docs "
-                         "(LSH pairs → connected components → min-id "
-                         "survivor)")
-    ap.add_argument("--checkpoint-dir", default=None,
-                    help="curate --near-dup: reliable checkpoint store "
-                         "for the components fixpoint (HDFS/S3 path on "
-                         "a cluster; default executor-local)")
-    ap.add_argument("--vec-col", default="embedding",
-                    help="index/search mode: embedding column")
-    ap.add_argument("--index", help="search mode: index path "
-                                    "(--output of --mode index)")
-    ap.add_argument("--n-centroids", type=int, default=16,
-                    help="index mode: coarse centroid count")
-    ap.add_argument("--k", type=int, default=5,
-                    help="search mode: neighbors per query")
-    ap.add_argument("--nprobe", type=int, default=2,
-                    help="search mode: probed centroids per query")
     ap.add_argument("--hex-res", type=int, default=None, metavar="RES",
                     help="also emit an H3-analog 'hexcell' column at this "
                          "resolution (0-24) on localize outputs")
@@ -113,13 +68,11 @@ def main(argv: list[str] | None = None) -> None:
         make_zip(args.make_zip)
         return
 
-    if args.hex_res is not None and not (args.mode == "localize"
-                                         and args.output
-                                         and not args.store):
-        # silently ignoring the flag on curate/index/search or the
-        # snapshot-store path would look like a no-op bug downstream
-        ap.error("--hex-res applies only to --mode localize with "
-                 "--output (plain parquet localize output)")
+    if args.hex_res is not None and not (args.output and not args.store):
+        # silently ignoring the flag on the snapshot-store path would
+        # look like a no-op bug downstream
+        ap.error("--hex-res applies only to --output (plain parquet "
+                 "localize output)")
 
     from pyspark import SparkConf
     from pyspark.sql import SparkSession
@@ -140,56 +93,6 @@ def main(argv: list[str] | None = None) -> None:
         images = spark.read.parquet(args.input)
     else:
         ap.error("need --input or --generate")
-
-    if args.mode == "index":
-        from osml10n_spark.operators.similarity import IVFIndex
-        if not args.output:
-            ap.error("--mode index needs --output (the index path)")
-        idx = IVFIndex.build(images, args.output,
-                             n_centroids=args.n_centroids,
-                             iid_col=args.id_col, vec_col=args.vec_col)
-        # build stats ride the write job (df.observe) — no re-scan
-        print(json.dumps({"index": args.output,
-                          "n_centroids": args.n_centroids,
-                          "items": int(idx.build_stats["items"]),
-                          "non_empty_lists": int(idx.build_stats["lists"])}))
-        spark.stop()
-        return
-
-    if args.mode == "search":
-        from osml10n_spark.operators.similarity import IVFIndex
-        if not args.index or not args.output:
-            ap.error("--mode search needs --index and --output")
-        idx = IVFIndex.load(spark, args.index)
-        res = idx.search(images, args.k, nprobe=args.nprobe,
-                         qid_col=args.id_col, vec_col=args.vec_col)
-        res.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"output": args.output,
-                          "rows": spark.read.parquet(args.output).count()}))
-        spark.stop()
-        return
-
-    if args.mode == "curate":
-        from osml10n_spark.engine.curate import curate
-        has_geo = "lon" in images.columns and "lat" in images.columns
-        kw = dict(id_col=args.id_col, text_col=args.text_col,
-                  checkpoint_dir=args.checkpoint_dir)
-        if args.near_dup:
-            kw.update(near_dup=args.near_dup)
-        if has_geo:
-            kw.update(localize_to=args.lang, lon_col="lon", lat_col="lat")
-        out, obs = curate(images, **kw)
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            print(json.dumps({"output": args.output,
-                              "metrics": {k: (float(v) if v is not None
-                                              else None)
-                                          for k, v in obs.get.items()}}))
-        else:
-            n = out.count()
-            print(json.dumps({"rows_kept": n}))
-        spark.stop()
-        return
 
     if args.store:
         summary = run_localization_job(spark, images, args.store,

@@ -62,10 +62,10 @@ def test_query_runs_and_matches_oracle(spark, duck, name):
 
 
 # queries that emit in-query self-check columns; the pytest gate pins
-# them ALL-TRUE / 1.0.  As of round 4 ALL of these also carry full
-# replay-literal oracles (70/70 gate queries oracled — none rows-only);
+# them ALL-TRUE / 1.0.  Every one of them also carries a full
+# replay-literal oracle (every query is oracled — none rows-only);
 # keeping the self-check pin makes the invariant fail loudly in pytest
-# too, not just as a gate hash mismatch
+# too, not just as an oracle mismatch
 ROWS_ONLY_SELF_CHECKS = {
     "q_payload_audit": {"bool": ["ok"], "frac": ["ok_frac"]},
     "q_image_features": {"bool": ["decoded", "stats_ok"],
@@ -73,7 +73,6 @@ ROWS_ONLY_SELF_CHECKS = {
     "q_image_resize": {"bool": ["ok", "dims_ok"], "frac": ["ok_frac"]},
     "q_frame_sample": {"bool": ["idx_ok", "dims_ok", "count_ok"],
                        "frac": []},
-    "q_cell_embedding_profile": {"bool": ["profile_ok"], "frac": []},
 }
 
 
@@ -138,3 +137,17 @@ def test_broken_oracle_fails_only_its_own_query(monkeypatch):
     with pytest.raises(FileNotFoundError):
         oracles.get("q_broken")
     assert oracles.get("q_no_such_query") is None
+
+
+def test_coverage_names_only_registered_queries():
+    """Doc drift guard (no Spark session): every bold **q_…** query
+    name in COVERAGE.md must be a key of contract.QUERIES, so a query
+    that leaves the registry takes its coverage rows with it."""
+    import re
+    from pathlib import Path
+
+    from osml10n_spark import contract
+    text = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
+    named = set(re.findall(r"\*\*(q_[a-z0-9_]+)\*\*", text))
+    assert named
+    assert sorted(named - set(contract.QUERIES)) == []

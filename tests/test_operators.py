@@ -1,5 +1,5 @@
 """Operator tests: kNN (cell path vs brute force), dedup family,
-similarity, textops, multimodal plumbing."""
+textops, sampling, temporal joins, multimodal plumbing."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -8,7 +8,6 @@ from osml10n_spark.operators.dedup import (
     exact_dedup, hash_dup_pairs, minhash_dup_pairs, ngram_jaccard_pairs,
     simhash_dup_pairs,
     embedding_dups)
-from osml10n_spark.operators.similarity import cosine_topk, lsh_topk
 from osml10n_spark.operators.spatial import (
     assign_cells, assign_country, cell_histogram, knn_cells, knn_geo)
 from osml10n_spark.operators.textops import add_script_flags, lang_id, \
@@ -349,22 +348,6 @@ def test_near_dup_generator_is_conservative_and_replayable():
         assert near <= 4
 
 
-def test_embedding_similarity(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.limit(5).select(F.col("vec_id").alias("qid"), "embedding")
-    items = emb.select(F.col("vec_id").alias("iid"), "embedding")
-    exact = cosine_topk(q, items, 3).collect()
-    assert len(exact) == 15
-    for r in exact:
-        if r.rank == 1:
-            assert r.qid == r.iid and r.cosine > 0.999999
-    dim = len(emb.first().embedding)
-    ann = lsh_topk(q, items, 3, dim=dim, n_bits=6, n_tables=6)
-    ann_top1 = {r.qid: r.iid for r in ann.collect() if r.rank == 1}
-    # self-match always lands in the same buckets → perfect top-1 recall
-    assert all(qid == iid for qid, iid in ann_top1.items())
-
-
 def test_embedding_dups(spark):
     rows = [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.001, 0.0]),
             (3, [0.0, 1.0, 0.0])]
@@ -450,24 +433,6 @@ def test_multimodal_stub_path(spark):
     assert rows["x1"].decoded is False and rows["x2"].decoded is False
 
 
-def test_ivf_self_match(spark):
-    """Every query is its own nearest neighbor: the query's nearest
-    centroid equals its item twin's centroid, so IVF must return the
-    identical vector at rank 1 with cosine 1.0."""
-    from osml10n_spark.operators.similarity import ivf_topk
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter(F.col("vec_id") % 40 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = e.select(F.col("vec_id").alias("iid"), "embedding")
-    top = ivf_topk(q, items, 3, n_centroids=8, nprobe=2).collect()
-    rank1 = {r.qid: (r.iid, r.cosine) for r in top if r.rank == 1}
-    n_q = q.count()
-    assert len(rank1) == n_q
-    for qid, (iid, cos) in rank1.items():
-        assert iid == qid
-        assert abs(cos - 1.0) < 1e-9
-
-
 def test_asof_join_semantics(spark):
     """Newest right row at-or-before each left ts, per key; 'left' keeps
     unmatched rows with nulls, 'inner' drops them."""
@@ -501,30 +466,6 @@ def test_radius_join_matches_bruteforce(spark):
     want = {(s.id, r.id) for s in sample for r in rows
             if (s.lon - r.lon) ** 2 + (s.lat - r.lat) ** 2 <= 9.0}
     assert got == want
-
-
-def test_ann_recall_on_clustered_data(spark):
-    """On clusterable data (10 tight clusters) the ANN paths must find
-    ≥90% of the exact top-3 — quality bar for lsh_topk/ivf_topk."""
-    import numpy as np
-    from osml10n_spark.operators.similarity import (cosine_topk, ivf_topk,
-                                                    lsh_topk)
-    rng = np.random.default_rng(7)
-    centers = rng.standard_normal((10, 32))
-    rows = []
-    for i in range(400):
-        c = centers[i % 10]
-        rows.append((i, (c + 0.05 * rng.standard_normal(32)).tolist()))
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = e.filter(F.col("vec_id") % 40 == 0) \
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    items = e.select(F.col("vec_id").alias("iid"), "embedding")
-    exact = {(r.qid, r.iid) for r in cosine_topk(q, items, 3).collect()}
-    for ann in (lsh_topk(q, items, 3, dim=32, n_bits=6, n_tables=6),
-                ivf_topk(q, items, 3, n_centroids=10, nprobe=3)):
-        got = {(r.qid, r.iid) for r in ann.collect()}
-        recall = len(got & exact) / len(exact)
-        assert recall >= 0.9, recall
 
 
 def test_localize_robust_to_degenerate_rows(spark):
@@ -760,65 +701,6 @@ def test_add_gopher_flags_matches_column_form(spark):
     assert set(a) == set(b) and len(a) > 100
     for k in a:
         assert a[k] == b[k], f"doc {k}: {a[k]} != {b[k]}"
-
-
-def test_cell_embedding_profile(spark):
-    """applyInPandas per-cell profile: anisotropic cell shows dominant
-    eigen-share ~1, and the computation is deterministic across runs."""
-    from osml10n_spark.operators.similarity import cell_embedding_profile
-    rows = ([(1, i, [float(i + 1), 0.0, 0.0]) for i in range(6)]
-            + [(2, 10 + i, v) for i, v in enumerate(
-                [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0],
-                 [-1.0, 0.0, 0.0], [0.0, -1.0, 0.0], [0.0, 0.0, -1.0]])])
-    df = spark.createDataFrame(
-        rows, "cell_id long, vec_id long, embedding array<double>")
-    out = {r.cell: r for r in cell_embedding_profile(df).collect()}
-    assert out[1].n == 6 and out[1].top_eig_share > 0.999
-    assert out[2].n == 6 and out[2].top_eig_share < 0.5
-    again = {r.cell: r for r in cell_embedding_profile(df).collect()}
-    assert all(again[k].top_eig_share == out[k].top_eig_share
-               and again[k].mean_norm == out[k].mean_norm for k in out)
-
-
-def test_curate_pipeline(spark):
-    """The composed curation flow: dedup drops exact copies, the
-    quality gate drops repetition/symbol spam, metrics observe the
-    kept set, and localization composes on top."""
-    from osml10n_spark.engine.curate import curate
-    rows = [
-        (1, "The quick brown fox jumps over the lazy dog by the river"),
-        (2, "The quick brown fox jumps over the lazy dog by the river"),
-        (3, "spam spam spam spam spam spam spam spam"),
-        (4, "# # alpha # # beta # #"),
-        (5, "Eine ganz normale Straße und ein Platz in der Stadt"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out, obs = curate(df)
-    got = {r.doc_id: r for r in out.collect()}
-    assert set(got) == {1, 5}                 # 2=dup, 3=repetition, 4=symbols
-    assert got[5].lang == "de"
-    m = obs.get
-    assert m["rows_kept"] == 2 and m["n_langs"] == 2
-
-    # localization composes: latin captions pass through unchanged
-    geo = df.withColumn("lon", F.lit(10.0)).withColumn("lat", F.lit(50.0))
-    loc, _ = curate(geo, localize_to="de", lon_col="lon", lat_col="lat",
-                    with_metrics=False)
-    lrows = {r.doc_id: r for r in loc.collect()}
-    assert lrows[1].caption_l10n == rows[0][1]
-    assert "cell_id" in loc.columns
-
-    # near-dup stage: chained variants collapse to the min-id survivor
-    # (1~6 and 6~7 pair via 5-gram minhash; the closure must merge all
-    # three even if 1~7 alone misses a band), unrelated rows survive
-    base = rows[0][1]
-    nd = df.unionByName(spark.createDataFrame(
-        [(6, base + " zz"), (7, base + " zz zz")],
-        "doc_id long, text string"))
-    out_nd, _ = curate(nd, near_dup="minhash", with_metrics=False)
-    assert {r.doc_id for r in out_nd.collect()} == {1, 5}
-    with pytest.raises(ValueError):
-        curate(df, near_dup="simhash")
 
 
 def test_multimodal_resize(spark):

@@ -220,20 +220,6 @@ def test_tiled_layout_prunes_partitions(spark, tmp_path_factory, staged):
     assert q.count() == tiled.filter(F.col("cell_prefix") == one_prefix).count()
 
 
-def test_curate_core_is_single_shuffle(spark):
-    """curate()'s dedup is min_by(struct, id) under one groupBy: ONE
-    exchange total for the whole dedup+gates+lang stage (the quality
-    gates and lang-id are map-side projections, the repetition filter
-    is an Arrow island, not a shuffle).  The previous narrow-groupBy +
-    left-semi-join shape cost a second full-row shuffle."""
-    from osml10n_spark.engine.curate import curate
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    out, _ = curate(docs, id_col="doc_id", text_col="text",
-                    with_metrics=False)
-    assert exchange_count(out) == 1
-    assert python_eval_count(out) == 1      # the repetition Arrow island
-
-
 def test_dup_components_round_is_equi_join_only(spark):
     """One connected-components round (neighbor-min + pointer jump)
     must plan as hash/sort-merge equi-joins — no CartesianProduct, no
@@ -304,17 +290,19 @@ def test_merge_intervals_single_exchange(spark):
 
 
 def test_headline_pipelines_compile_under_wholestage_codegen(spark):
-    """No silent interpreted fallback on headline pipelines: with
-    spark.sql.codegen.fallback=false a janino failure ("Code grows
+    """No silent interpreted fallback on the localization pipelines:
+    with spark.sql.codegen.fallback=false a janino failure ("Code grows
     beyond 64 KB") becomes a hard error instead of a silent
     constant-factor tax.  Regression this pins: the single-Column
-    gopher_flags expression inlined to ~500 KB of generated code in
-    the curate gate stage — every stage of the curate family (and the
-    flagship localization) must COMPILE, not merely run."""
+    gopher_flags expression inlined to ~500 KB of generated code, so
+    the Gopher quality stage (q_gopher_quality) must COMPILE, not
+    merely run — as must every stage of the mixed-script cascade
+    (q_localize_mixed) and of the flagship documents pipeline with
+    cell and tile ids (q_localize_documents)."""
     from osml10n_spark.contract import QUERIES
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        for q in ("q_gopher_quality", "q_curate", "q_curate_neardup",
+        for q in ("q_gopher_quality", "q_localize_mixed",
                   "q_localize_documents"):
             rows = QUERIES[q](spark, SF).collect()
             assert rows, f"{q} returned no rows"

@@ -1,7 +1,10 @@
 """Property-based tests (hypothesis) for the from-scratch kernels whose
 correctness SURVEY.md §7 flags as a hard part: the cell index bit-math
 and the text kernels.  These complement the golden suite with
-randomized invariants — no Spark session needed (pure numpy/python)."""
+randomized invariants in pure numpy/python; only the JVM ≡ numpy edge
+check at the end uses the shared Spark session."""
+import warnings
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
@@ -93,3 +96,47 @@ def test_levenshtein_metric_properties(a, b):
     assert (d == 0) == (a == b)
     # upper bound: byte length of the longer string
     assert d <= max(len(a.encode()), len(b.encode()))
+
+
+_EDGE = [float("inf"), float("-inf"), float("nan"), 0.0, -0.0,
+         180.0, -180.0, 90.0, -90.0, 1e300, -1e300,
+         np.nextafter(180.0, 0.0), np.nextafter(-180.0, 0.0),
+         np.nextafter(90.0, 0.0), np.nextafter(-90.0, 0.0),
+         179.999999, -179.999999, 89.999999, -89.999999, 12.5]
+
+
+def test_cell_tile_jvm_matches_numpy_at_edges(spark):
+    """cell_expr/tile_expr (JVM) ≡ cell_from_lonlat/tile_from_lonlat
+    (numpy) on every (lon, lat) pair of an adversarial list: ±inf, NaN,
+    ±0.0, the exact ±180/±90 edges, ±1e300 and values just inside the
+    edges, at two resolutions and two zooms.  The JVM saturates
+    floor() to the long range, so the numpy twin must clip before its
+    int cast — and must do so without a cast warning."""
+    from pyspark.sql import functions as F
+
+    from osml10n_spark.spatial.cellexpr import cell_expr, tile_expr
+
+    pairs = [(lon, lat) for lon in _EDGE for lat in _EDGE]
+    lon = np.array([p[0] for p in pairs])
+    lat = np.array([p[1] for p in pairs])
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(pairs)],
+        "i long, lon double, lat double")
+    cols = []
+    for res in (3, 9):
+        cols.append(cell_expr(F.col("lon"), F.col("lat"), res)
+                    .alias(f"cell{res}"))
+    for z in (0, 8):
+        cols.append(tile_expr(F.col("lon"), F.col("lat"), z)
+                    .alias(f"tile{z}"))
+    rows = sorted(df.select("i", *cols).collect())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        want = {f"cell{r}": cell_from_lonlat(lon, lat, r) for r in (3, 9)}
+        want.update({f"tile{z}": tile_from_lonlat(lon, lat, z)
+                     for z in (0, 8)})
+    for name, arr in want.items():
+        got = np.array([r[name] for r in rows], dtype=np.int64)
+        bad = np.flatnonzero(got != arr)
+        assert bad.size == 0, (name, [(pairs[i], int(got[i]), int(arr[i]))
+                                      for i in bad[:5]])

@@ -241,34 +241,6 @@ def test_snapshot_compaction(spark, tmp_path):
     assert store.compact(spark) is None
 
 
-def test_streaming_curate(spark, tmp_path):
-    """curate_stream: per-micro-batch dedup + quality gate with
-    epoch-keyed exactly-once snapshot commits."""
-    from osml10n_spark.streaming.incremental import curate_stream
-
-    src_dir = str(tmp_path / "cin")
-    rows = [(i, "A perfectly ordinary sentence about streets number "
-             + str(i)) for i in range(40)] \
-        + [(100 + i, "spam spam spam spam spam spam spam spam")
-           for i in range(5)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string") \
-        .repartition(3)
-    docs.write.parquet(src_dir)
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src_dir))
-    root = str(tmp_path / "csnap")
-    q = curate_stream(stream, root,
-                      checkpoint_dir=str(tmp_path / "cckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = SnapshotStore(root).committed_output(spark)
-    ids = {r.doc_id for r in out.select("doc_id").collect()}
-    assert all(i < 100 for i in ids)        # every spam row gated out
-    assert len(ids) == 40                   # all clean rows kept, no dups
-
-
 def test_committed_epochs_since_incremental_scan(spark, tmp_path):
     """The streaming replay filter's miss-path refresh reads only
     manifests NEWER than the last scanned seq (filename-filtered), and

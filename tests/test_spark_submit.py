@@ -51,78 +51,6 @@ def test_spark_submit_pyfiles_job_and_resume(tmp_path):
     assert summary2["resumed_from"] >= 1
 
 
-def test_run_job_index_and_search_modes(tmp_path):
-    """--mode index builds the persistent IVF index; --mode search
-    probes it.  Driven through the CLI as a user would (plain python =
-    same entry path spark-submit executes); self-queries must return
-    themselves at rank 1."""
-    import pyarrow.parquet as pq
-
-    emb = "/root/testdata/sf0.001/embeddings.parquet"
-    idx = tmp_path / "ivf_index"
-    out = tmp_path / "neighbors"
-
-    def run(*argv):
-        r = subprocess.run(
-            [sys.executable, str(REPO / "run_job.py"), *argv],
-            cwd=str(REPO), capture_output=True, text=True, timeout=420,
-            env={**__import__("os").environ,
-                 "PYSPARK_PYTHON": sys.executable})
-        assert r.returncode == 0, r.stderr[-3000:]
-        return json.loads([l for l in r.stdout.splitlines()
-                           if l.startswith("{")][-1])
-
-    built = run("--mode", "index", "--input", emb, "--id-col", "vec_id",
-                "--n-centroids", "8", "--output", str(idx))
-    assert built["non_empty_lists"] >= 1
-    assert (idx / "centroids").exists() and (idx / "lists").exists()
-
-    res = run("--mode", "search", "--index", str(idx), "--input", emb,
-              "--id-col", "vec_id", "--k", "2", "--nprobe", "2",
-              "--output", str(out))
-    t = pq.read_table(str(out)).to_pydict()
-    rank1 = {q: i for q, i, rk in zip(t["qid"], t["iid"], t["rank"])
-             if rk == 1}
-    n_queries = pq.read_table(emb, columns=["vec_id"]).num_rows
-    assert len(rank1) == n_queries == res["rows"] // 2
-    assert all(q == i for q, i in rank1.items())
-
-
-def test_run_job_curate_near_dup_flag(tmp_path):
-    """--mode curate --near-dup minhash removes near-duplicate docs
-    through the CLI: the real documents table with planted ' zz'
-    variants (the q_curate_neardup corpus shape) keeps at most one
-    member per pair, always the min id."""
-    import duckdb
-    import pyarrow.parquet as pq
-
-    src = tmp_path / "docs.parquet"
-    docs = "/root/testdata/sf0.001/documents.parquet"
-    planted = duckdb.sql(f"""
-        SELECT doc_id, text FROM read_parquet('{docs}') WHERE doc_id < 40
-        UNION ALL
-        SELECT doc_id + 1000, text || ' zz'
-        FROM read_parquet('{docs}') WHERE doc_id < 40
-    """).arrow()
-    pq.write_table(planted, str(src))
-
-    out = tmp_path / "kept"
-    r = subprocess.run(
-        [sys.executable, str(REPO / "run_job.py"), "--mode", "curate",
-         "--near-dup", "minhash", "--input", str(src),
-         "--output", str(out)],
-        cwd=str(REPO), capture_output=True, text=True, timeout=420)
-    assert r.returncode == 0, r.stderr[-3000:]
-    kept = set(pq.read_table(str(out),
-                             columns=["doc_id"]).to_pydict()["doc_id"])
-    assert kept
-    # never both members of a planted pair, and the survivor is the
-    # min id (the base, < 1000) whenever its pair was detected
-    assert all(k < 1000 or (k - 1000) not in kept for k in kept)
-    assert not any(k in kept and (k + 1000) in kept
-                   for k in list(range(40)))
-
-
 def test_run_job_hex_res_flag(tmp_path):
     """--hex-res adds the H3-analog cell column on the localize path,
     bit-identical to the numpy kernel on the written rows."""

@@ -4,8 +4,11 @@ Usage: python tools/check_contract.py [SF_DIR] [query ...]
 With query names given, only those are checked (fast iteration).
 """
 import math, os, sys, time
+from pathlib import Path
 import duckdb
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so the driver imports the same
+# package the executors load from the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entrymod
 from pyspark.sql import SparkSession
 
