@@ -1,22 +1,22 @@
 """Spatial DataFrame operators: country assignment (broadcast PiP),
-cell/tile assignment, kNN join with k-ring expansion + exact refine,
-and skew-aware helpers.
+cell/tile assignment, kNN join in one tile-grouped pass, and
+skew-aware helpers.
 
 All operators are DataFrame→DataFrame, shuffle-conscious:
 
 - assign_country / assign_cells / assign_tiles are map-side only (no
   shuffle): the polygon index is per-executor broadcast state.
 - knn_geo (brute-force) exists as the small-side baseline and oracle;
-  knn_cells is the scale path — equi-join on k-ring cell ids, exact
-  distance refinement, window top-k, iterative ring growth only for
-  queries whose k-th candidate isn't yet provably correct.
+  knn_cells is the scale path — queries fan out to the coarse tiles of
+  their k-ring, one numpy distance pass per tile, one window top-k,
+  brute force only for queries the ring cannot prove.
 - cell_histogram + salted_key implement heavy-cell detection/salting
   for skewed spatial data (dense urban cells), complementing AQE.
 """
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..udfs import udf_country_gated, udf_country_lookup
@@ -28,16 +28,16 @@ __all__ = [
     "polygon_cover_table", "KNN_LAST_RUN",
 ]
 
-# Observability for the iterative kNN (driver-side, overwritten per
-# call): rounds run, per-round still-pending counts, stragglers routed
-# to brute force, initial ring.  A production job logs/emits this dict
-# per stage — convergence-in-1-round vs 4 is THE constant factor of
-# this operator, and it is invisible in the physical plan.
+# Observability for knn_cells (driver-side, overwritten per call): the
+# density-derived ring, passes run (always 1) and the queries routed to
+# brute force — invisible in the physical plan.
 KNN_LAST_RUN: dict = {}
 
-# (items semanticHash, res, k) → density-derived initial ring; see
-# _knn_core.  Perf-only memo: the ring never affects results.
-_KNN_RING_CACHE: dict = {}
+# knn_cells groups by tile = cell_id >> _TILE_SHIFT (a 16×16 block of
+# cells), and one numpy distance matrix holds at most _CHUNK_CELLS
+# entries (32 MB of float64).
+_TILE_SHIFT = 8
+_CHUNK_CELLS = 4_000_000
 
 
 def assign_country(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
@@ -83,7 +83,7 @@ def hex_ring_join(points: DataFrame, seed_cells: list[int], k: int = 1,
     auto-broadcasts, so the probe is a pure broadcast equi-join on the
     already-assigned cell column: no distance math on the big side, no
     shuffle of the points.  This is the hex twin of the quad k-ring
-    candidate join inside knn_cells.
+    fan-out inside knn_cells and radius_join.
 
     Seeds are deduplicated (a repeated seed must not double-count) and
     every seed gets a row — a seed whose ring holds no points reports
@@ -213,317 +213,150 @@ def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
             .select("qid", "iid", "dist2", "rank"))
 
 
+def _has_coords() -> Column:
+    """True for rows whose lon and lat are both neither NULL nor NaN
+    (``isnan(NULL)`` is false, so both tests are needed)."""
+    return (F.col("lon").isNotNull() & F.col("lat").isNotNull()
+            & ~F.isnan("lon") & ~F.isnan("lat"))
+
+
 def knn_cells(queries: DataFrame, items: DataFrame, k: int,
-              res: int = 7, qid_col: str = "qid", iid_col: str = "iid",
-              max_rounds: int = 4,
-              initial_ring: int | None = None) -> DataFrame:
-    """Scalable kNN: k-ring candidate equi-join + exact refine (J5/W5).
+              res: int = 7, qid_col: str = "qid",
+              iid_col: str = "iid") -> DataFrame:
+    """Scalable kNN: one tile-grouped numpy pass + exact rank (J5/W5).
 
-    Each round joins queries against items in cells within Chebyshev
-    ring radius r (per query) of the query cell.  A query is DONE when
-    it has ≥k candidates and its k-th squared distance ≤ (ring·cell)² —
-    items outside the ring are provably farther.  Ring growth is
-    per-query adaptive: a query that already holds k candidates jumps
-    straight to ring' = ceil(sqrt(kth)/cell) — provably final next
-    round; candidate-starved queries grow 4×, and queries whose ring
-    would exceed MAX_RING route to the brute-force fallback instead of
-    exploding into thousands of candidate cells.
+    Items and queries meet in coarse tiles (``cell_id >> _TILE_SHIFT``
+    at ``res``), so each Python call amortizes over a whole tile:
+    - one occupancy aggregate picks the ring, the smallest whose
+      (2r+1)² cell neighbourhood holds ≥4k items at the mean cell
+      occupancy, +1 when occupancy is dispersed (sd > mean: hotspot
+      corpora such as the Tokyo cell);
+    - each query fans out to the tiles of its ring cells
+      (`_explode_neighbor_cells`), deduplicated per (qid, tile);
+    - one cogroup per tile computes the `_sq_dist` chain as a
+      queries × items numpy matrix and keeps, per query, the items
+      within the guard (ring·cell)² and at most its kth distance
+      (every tie at the kth is kept);
+    - one window by qid ranks the kept rows by (dist2, iid).
 
-    ``initial_ring`` defaults to a density-derived estimate: the ring
-    whose (2r+1)² cell neighborhood is expected to hold ≥4k candidates
-    at the observed mean occupancy, so sparse corpora don't waste
-    rounds climbing from ring 1.
+    A query holding k ranked rows is exact: every item within the
+    guard lies in its ring and so in its tiles, hence its true top-k,
+    ties included, was kept.  The unproven rest (sparse regions) goes
+    to brute force: `knn_geo_bq` for ≤1,024 queries, else `knn_geo`.
 
-    Equi-join on cell ids shuffles by cell — co-located, broadcast-free.
-    Output: (qid, iid, dist2, rank).
+    Rows with a NULL or NaN lon/lat are dropped on both sides first:
+    such a query returns no rows and such an item is nobody's
+    neighbour.  Output: (qid, iid, dist2, rank), persisted and
+    materialized; the caller unpersists it.
     """
-    q_pts = queries.select(F.col(qid_col).alias("qid"),
-                           F.col("lon"), F.col("lat"))
-    i_pts = items.select(F.col(iid_col).alias("iid"),
-                         F.col("lon"), F.col("lat")).persist()
+    import numpy as np
 
-    out = _knn_core(q_pts, i_pts, k, res, max_rounds, initial_ring)
-    i_pts.unpersist()
-    return out
+    q = assign_cells(queries.filter(_has_coords()).select(
+        F.col(qid_col).alias("qid"), F.col("lon").alias("q_lon"),
+        F.col("lat").alias("q_lat")),
+        res, lon_col="q_lon", lat_col="q_lat", out_col="q_cell").persist()
+    i = assign_cells(items.filter(_has_coords()).select(
+        F.col(iid_col).alias("iid"), F.col("lon").alias("i_lon"),
+        F.col("lat").alias("i_lat")),
+        res, lon_col="i_lon", lat_col="i_lat", out_col="i_cell") \
+        .withColumn("tile", F.shiftright("i_cell", _TILE_SHIFT)).persist()
 
+    occ = (i.groupBy("i_cell").agg(F.count("*").alias("cn"))
+           .agg(F.sum("cn").alias("n"), F.count("*").alias("c"),
+                F.stddev_pop("cn").alias("sd")).collect()[0])
+    avg = (occ.n or 0) / max(occ.c, 1) or 1.0
+    ring = 1
+    while (2 * ring + 1) ** 2 * avg < 4.0 * k and ring < 8:
+        ring += 1
+    if (occ.sd or 0.0) > avg:
+        ring += 1
+    guard = (ring * 180.0 / 2 ** res) ** 2
 
-def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
-              max_rounds: int = 4, initial_ring: int | None = None) -> DataFrame:
-    """The adaptive k-ring kNN rounds behind knn_cells (see there).
-    ``queries``/``items`` are (qid|iid, lon, lat) frames."""
-    cell_h = 180.0 / (2 ** res)                   # cell size in degrees
+    q_tiles = (_explode_neighbor_cells(q, "q_cell", res, ring)
+               .select("qid", "q_lon", "q_lat",
+                       F.shiftright("n_cell", _TILE_SHIFT).alias("tile"))
+               .distinct())
+    qt = queries.schema[qid_col].dataType.simpleString()
+    it = items.schema[iid_col].dataType.simpleString()
 
-    items_c = assign_cells(items, res).select(
-        F.col("iid"), F.col("lon").alias("i_lon"),
-        F.col("lat").alias("i_lat"), F.col("cell_id").alias("i_cell"))
-    items_c = items_c.persist()
+    def tile_top(qp: pd.DataFrame, ip: pd.DataFrame) -> pd.DataFrame:
+        qids, iids = qp["qid"].to_numpy(), ip["iid"].to_numpy()
+        parts = [pd.DataFrame({"qid": qids[:0], "iid": iids[:0],
+                               "dist2": np.empty(0)})]
+        if len(qids) == 0 or len(iids) == 0:
+            return parts[0]
+        qlon, qlat = qp["q_lon"].to_numpy(float), qp["q_lat"].to_numpy(float)
+        ilon, ilat = ip["i_lon"].to_numpy(float), ip["i_lat"].to_numpy(float)
+        step = max(1, _CHUNK_CELLS // len(iids))
+        for s in range(0, len(qids), step):
+            dx = qlon[s:s + step, None] - ilon[None, :]
+            dy = qlat[s:s + step, None] - ilat[None, :]
+            d = dx * dx + dy * dy               # same IEEE chain as _sq_dist
+            keep = d <= guard
+            if len(iids) > k:
+                keep &= d <= np.partition(d, k - 1, axis=1)[:, k - 1:k]
+            r, c = np.nonzero(keep)
+            parts.append(pd.DataFrame({"qid": qids[s + r], "iid": iids[c],
+                                       "dist2": d[r, c]}))
+        return pd.concat(parts, ignore_index=True)
 
-    pending = assign_cells(queries, res).select(
-        F.col("qid"), F.col("lon").alias("q_lon"),
-        F.col("lat").alias("q_lat"), F.col("cell_id").alias("q_cell"))
-
-    ring = initial_ring
-    ring_src = "explicit"
-    if ring is None:
-        # statistics cache: the density-derived ring depends only on
-        # (items plan, res, k) — engines cache table stats for the same
-        # reason.  semanticHash canonicalizes expression ids, so a
-        # rebuilt-but-identical plan (or a fresh read of the same path)
-        # hits; a different filter/source misses.  The ring is
-        # CORRECTNESS-NEUTRAL (adaptive growth + the kth≤guard proof
-        # make any initial ring exact) so even a stale hit after the
-        # underlying files changed costs at most one extra round.
-        # Measured: the occupancy job is ~0.7s of fixed overhead per
-        # call at sf0.1 (warm min 3.15s vs 4.0s with it) — repeat kNN
-        # calls against the same corpus skip it entirely.
-        stats_key = (items._jdf.queryExecution().analyzed().semanticHash(),
-                     res, k)
-        ring = _KNN_RING_CACHE.get(stats_key)
-        if ring is not None:            # hit-reinsert → LRU eviction order
-            _KNN_RING_CACHE[stats_key] = _KNN_RING_CACHE.pop(stats_key)
-        ring_src = "cached"
-    if ring is None:
-        ring_src = "computed"
-        # ONE job: per-cell histogram → mean + dispersion of occupancy
-        # (it also warms the items_c cache the round reuses).  The mean
-        # sizes the ring so a MEAN-density neighborhood holds ≥4k
-        # candidates; when occupancy is highly dispersed (cv > 1 —
-        # hotspot corpora like the Tokyo cell) the mean OVERSTATES what
-        # sparse-region queries will see, so +1 over-provisions their
-        # neighborhoods and the round-2/brute-force residue those few
-        # queries would otherwise trigger (a whole extra job chain for
-        # a handful of stragglers) never runs.  (A/B-ed and REJECTED:
-        # folding this aggregate into round 1 as a broadcast scalar
-        # subquery — the broadcast subtree executes before items_c is
-        # cached, so the histogram recomputes against raw input and the
-        # "saved" job comes back as an eager broadcast build; measured
-        # min-of-6 regressed 4.5s → 6.7s.  ALSO A/B-ed and REJECTED,
-        # round 5: PER-QUERY initial rings from a histogram join —
-        # probing each query's ring-1 neighborhood count and shrinking
-        # its ring to what local density supports.  It cut round-1
-        # candidates 9.5M → ~1.9M at sf0.1, but the machinery lost
-        # more than the smaller sort saved THREE separate ways: the
-        # hist join inflated size estimates and flipped ring_cells off
-        # the broadcast side into a hotspot-skewed shuffle join
-        # (6s → 20s, 63+1-task tails); fixing that with an eager
-        # localCheckpoint added a job and pinned pending to AQE's
-        # 1-partition coalesce, serializing the fan-out; and a
-        # 1-in-1000 shrunk query failed its guard, waking the whole
-        # brute-force-fallback job chain.  Best case 12s vs the 5.4s
-        # baseline in the same host window.  The guard-radius filter
-        # below gets the volume win with zero new jobs.)
-        occ = (items_c.groupBy("i_cell").agg(F.count("*").alias("cn"))
-               .agg(F.sum("cn").alias("n"), F.count("*").alias("c"),
-                    F.stddev_pop("cn").alias("sd")).collect()[0])
-        avg = (occ.n or 0) / max(occ.c, 1) or 1.0
-        ring = 1
-        while (2 * ring + 1) ** 2 * avg < 4.0 * k and ring < 8:
-            ring += 1
-        if (occ.sd or 0.0) > avg:
-            ring += 1
-        if len(_KNN_RING_CACHE) >= 64:      # bounded: drop oldest entry
-            _KNN_RING_CACHE.pop(next(iter(_KNN_RING_CACHE)))
-        _KNN_RING_CACHE[stats_key] = ring
-    pending = pending.withColumn("ring", F.lit(ring))
-    cur_max_ring = ring           # driver-tracked bound → static offsets
+    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
+                                          F.col("iid").asc())
+    ranked = (q_tiles.groupBy("tile").cogroup(i.drop("i_cell").groupBy("tile"))
+              .applyInPandas(tile_top, f"qid {qt}, iid {it}, dist2 double")
+              .withColumn("rank", F.row_number().over(w))
+              .filter(F.col("rank") <= k)).persist()
+    unproven = q.join(ranked.filter(F.col("rank") == k), "qid", "left_anti") \
+        .select("qid", F.col("q_lon").alias("lon"), F.col("q_lat").alias("lat"))
+    n_left = unproven.count()                   # also materializes ranked
     KNN_LAST_RUN.clear()
-    KNN_LAST_RUN.update({"initial_ring": ring, "ring_source": ring_src,
-                         "rounds": 0,
-                         "pending_after_round": [], "stragglers": 0,
-                         "fallback_queries": 0})
+    KNN_LAST_RUN.update(initial_ring=ring, rounds=1, fallback_queries=n_left)
 
-    MAX_RING = 24                          # beyond this → brute force
-    # below this many pending queries another cell round costs more in
-    # fixed job overhead than the bounded brute-force fallback (measured
-    # ~5s/round on tiny frames vs <1s cross join at local scale; at
-    # cluster scale ≤64 queries against items is a broadcast NLJ)
-    MIN_ROUND_PENDING = 64
-    round_results: list[DataFrame] = []
-    stragglers: list[DataFrame] = []
-    defer_unpersist: list[DataFrame] = []
-    pending = pending.persist()
-    n_pending = None
-    n_strag_total = 0
-    guard = (F.col("ring") * cell_h) ** 2
-    for rnd in range(max_rounds):
-        ring_cells = _ring_cells_df(pending, res, cur_max_ring)
-        # project to the 4 columns the window actually consumes BEFORE
-        # the qid exchange: scored is persisted below, and a cache
-        # materializes every column of its schema, so without this
-        # select the shuffle would carry the join's full row (both
-        # coordinate pairs + 2 cell ids ≈ 80 B/row instead of ~30) —
-        # Catalyst cannot prune through the persist boundary.  (A/B-ed
-        # and REJECTED: a per-query radius pre-prune that broadcasts the
-        # cell histogram onto the ring cells and keeps only candidates
-        # within r_q = R·sqrt(8k/n_q) — provably exact when ≥k survive —
-        # cut the window input 9.4M→3.5M on the clustered sf0.1 corpus
-        # but its own broadcast+join bookkeeping cost more than the
-        # smaller sort saved (stat job 2.3s→3.9s) and pushed ~1% of
-        # queries into an extra round; at this scale candidate
-        # GENERATION, not the qid exchange, is the floor.  Three more
-        # attacks on the window input, A/B-ed and REJECTED round 5, all
-        # at sf0.1/150k items/1000 queries, warm min-of-3: (a) Arrow
-        # mapInPandas per-partition partial top-k before the window —
-        # 9.4M→~300k exchange rows but the Arrow crossing of 9.4M
-        # candidate rows costs more than the JVM shuffle+sort it
-        # replaces, 6.4s vs 3.9s; (b) shuffle_hash-hinted cell join +
-        # an exchange-free (n_cell, qid) pre-window (HashPartitioning
-        # (n_cell) satisfies the clustered distribution) — the hotspot
-        # cell's ~7.6M join rows land in ONE task whose local sort
-        # serializes the stage, 14.2s vs 5.6s; the qid exchange is
-        # precisely what spreads the hotspot 32 ways; (c) prepending
-        # xxhash64(qid) to the window partition key to radix-ify the
-        # shared-prefix string sort — no measurable change (4.2s both):
-        # Tungsten's sort is not prefix-comparison-bound here.)
-        cand = (ring_cells.join(items_c, ring_cells.n_cell == items_c.i_cell)
-                .select(F.col("qid"), F.col("iid"), F.col("ring"),
-                        _sq_dist(F.col("q_lon"), F.col("q_lat"),
-                                 F.col("i_lon"), F.col("i_lat"))
-                        .alias("dist2"))
-                # guard-radius pre-filter: a candidate with dist2 >
-                # (ring·cell)² can never be part of a PROVEN top-k —
-                # done-ness requires kth ≤ guard, and then all true
-                # top-k members are ≤ kth ≤ guard, so none were
-                # dropped; an unproven query contributes nothing this
-                # round anyway.  Row-level filter inside the same
-                # codegen stage (no new job, no plan-shape change)
-                # that halves the window-sort input at sf0.1 (ring-2
-                # circle vs 5×5 square: π·4/25).  Cost: a query with
-                # <k in-guard candidates re-rings ×4 (the starved
-                # path) instead of the kth-informed jump — its true
-                # kth is no longer observable this round.
-                .filter(F.col("dist2") <= guard))
-        # ONE shuffle by qid serves rank, per-query count and kth: the
-        # unordered window reuses the rank window's partitioning (no
-        # extra exchange, no separate groupBy+join-back, no broadcast)
-        w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
-                                              F.col("iid").asc())
-        wq = Window.partitionBy("qid")
-        scored = (cand.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .withColumn("n", F.count("*").over(wq))
-                  .withColumn("kth", F.max("dist2").over(wq))).persist()
-        # a query is proven-complete when its worst kept distance fits
-        # inside its own guaranteed ring radius
-        done_rows = scored.filter((F.col("n") >= k) & (F.col("kth") <= guard)) \
-            .select("qid", "iid", "dist2", "rank")
-        round_results.append(done_rows)
-        defer_unpersist.append(scored)
-        # per-query stats ride the rank-1 row — already unique per qid
-        per_q = scored.filter(F.col("rank") == 1).select("qid", "n", "kth")
-        st = pending.join(per_q, "qid", "left").fillna({"n": 0})
-        # adaptive growth: a query that already holds k candidates only
-        # needs ring' ≥ sqrt(kth)/cell_h — round 2 is then provably
-        # final for it; candidate-starved queries grow 4×
-        new_ring = F.when(
-            F.col("n") >= k,
-            F.greatest(F.ceil(F.sqrt(F.col("kth")) / F.lit(cell_h)),
-                       F.col("ring") + 1)
-        ).otherwise(F.col("ring") * 4).cast("int")
-        unresolved = (st.filter((F.col("n") < k) | (F.col("kth") > guard))
-                      .select("qid", "q_lon", "q_lat", "q_cell",
-                              new_ring.alias("ring")).persist())
-        # ring overflow → isolated queries: route to the brute-force
-        # fallback instead of joining thousands of cells per query
-        stragglers.append(unresolved.filter(F.col("ring") > MAX_RING)
-                          .drop("ring"))
-        next_pending = unresolved.filter(F.col("ring") <= MAX_RING).persist()
-        # one agg over the persisted unresolved frame counts BOTH the
-        # still-pending and the overflow (straggler) sides, so the
-        # final leftovers isEmpty() probe becomes driver arithmetic
-        stat = unresolved.agg(
-            F.count(F.when(F.col("ring") <= MAX_RING, 1)).alias("n"),
-            F.max(F.when(F.col("ring") <= MAX_RING,
-                         F.col("ring"))).alias("mr"),
-            F.count(F.when(F.col("ring") > MAX_RING, 1)).alias("ns"),
-        ).collect()[0]
-        n_strag_total += int(stat.ns)
-        n_before, n_pending = n_pending, stat.n
-        KNN_LAST_RUN["rounds"] = rnd + 1
-        KNN_LAST_RUN["pending_after_round"].append(int(stat.n))
-        KNN_LAST_RUN["stragglers"] = n_strag_total
-        cur_max_ring = int(stat.mr) if stat.mr is not None else 1
-        pending.unpersist()
-        defer_unpersist.append(unresolved)   # stragglers still reference it
-        pending = next_pending
-        if n_pending == 0:
-            break
-        if n_pending <= MIN_ROUND_PENDING:
-            break                          # residue → brute-force fallback
-        if n_before is not None and n_pending == n_before:
-            break                          # ring growth isn't resolving: bail
-    leftovers = pending.select("qid", "q_lon", "q_lat")
-    for s in stragglers:
-        leftovers = leftovers.unionByName(s.select("qid", "q_lon", "q_lat"))
-    # counts tracked driver-side during the rounds (isEmpty would be an
-    # extra job); n_pending is None only if the loop never ran
-    n_left = None if n_pending is None else n_pending + n_strag_total
-    KNN_LAST_RUN["fallback_queries"] = n_left if n_left is not None else -1
-    if (n_left is None and not leftovers.isEmpty()) or (n_left or 0) > 0:
-        # isolated/sparse-region queries: brute-force against all items.
-        # A bounded residue takes the broadcast-queries partial-top-k
-        # plan (no q×n shuffle); an unbounded one (loop never ran /
-        # pathological straggler count) keeps the generic window plan.
-        lq = leftovers.select(F.col("qid"), F.col("q_lon").alias("lon"),
-                              F.col("q_lat").alias("lat"))
-        li = items_c.select(F.col("iid"), F.col("i_lon").alias("lon"),
-                            F.col("i_lat").alias("lat"))
-        if n_left is not None and n_left <= 1024:
-            round_results.append(knn_geo_bq(lq, li, k,
-                                            qid_col="qid", iid_col="iid"))
-        else:
-            round_results.append(knn_geo(lq, li, k, qid_col="qid",
-                                         iid_col="iid",
-                                         broadcast_items=False))
-    results = round_results[0]
-    for extra in round_results[1:]:
-        results = results.unionByName(extra)
-    # materialize before releasing the caches the plan depends on;
-    # results itself stays persisted for the caller
-    results = results.persist()
-    results.count()
-    pending.unpersist()
-    for df in defer_unpersist:
-        df.unpersist()
-    for df in round_results:
-        if df is not results:   # single-round case: results IS round 1
-            df.unpersist()      # (no-op for the unpersisted leftovers)
-    items_c.unpersist()
+    results = ranked
+    if n_left:
+        li = i.select("iid", F.col("i_lon").alias("lon"),
+                      F.col("i_lat").alias("lat"))
+        brute = (knn_geo_bq(unproven, li, k) if n_left <= 1024
+                 else knn_geo(unproven, li, k, broadcast_items=False))
+        results = (ranked.join(unproven.select("qid"), "qid", "left_anti")
+                   .unionByName(brute).persist())
+        results.count()
+        ranked.unpersist()
+    q.unpersist()
+    i.unpersist()
     return results
 
 
 def _explode_neighbor_cells(df: DataFrame, cell_col: str, res: int,
-                            max_ring: int,
-                            ring_col: str | None = None) -> DataFrame:
-    """Shared static-offset k-ring explode: append ``n_cell`` rows for
-    every cell within Chebyshev distance ``max_ring`` of ``cell_col``
-    — lon wraps (pmod), lat rows outside the grid drop
-    (cellindex.k_ring parity; property-tested).  With ``ring_col``,
-    each row is trimmed to its own per-row radius ≤ ``max_ring``.
+                            ring: int) -> DataFrame:
+    """Static-offset k-ring explode: append ``n_cell`` rows for every
+    cell within Chebyshev distance ``ring`` of ``cell_col`` — lon wraps
+    (pmod), lat rows outside the grid drop (cellindex.k_ring parity;
+    property-tested).  A ring that wraps the whole globe (2·ring+1 ≥
+    2^(res+1)) yields some cells twice; callers deduplicate or reject
+    such rings.
 
     Physical shape: a STATIC literal (2R+1)² offset array explode with
     flat post-explode bit math — pure JVM whole-stage codegen, zero
     Python/Arrow crossing (HOF-lambda formulations of the same ring
     fall into Catalyst's interpreted path at ~40 ms/row; a pandas UDF
     pays a per-row Python loop that caps throughput at scale).  The
-    ONE shared implementation backs both the kNN candidate fan-out
-    (`_ring_cells_df`) and the density convolution (`cell_density`) —
-    any fix to the wrap/trim/repack bit math lands in both."""
+    ONE shared implementation backs the kNN tile fan-out
+    (`knn_cells`), `radius_join` and the density convolution
+    (`cell_density`) — any fix to the wrap/repack bit math lands in
+    all three."""
     from ..spatial.cellexpr import _RES_SHIFT, _compact, _spread
 
     nx, ny = 2 ** (res + 1), 2 ** res
     offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dy in range(-max_ring, max_ring + 1)
-                     for dx in range(-max_ring, max_ring + 1)])
+                     for dy in range(-ring, ring + 1)
+                     for dx in range(-ring, ring + 1)])
     morton = F.col(cell_col).bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
     e = (df
          .withColumn("_nbx", _compact(morton))
          .withColumn("_nby", _compact(F.shiftrightunsigned(morton, 1)))
-         .withColumn("o", F.explode(offs)))
-    if ring_col is not None:
-        e = e.filter((F.abs(F.col("o.dx")) <= F.col(ring_col))
-                     & (F.abs(F.col("o.dy")) <= F.col(ring_col)))
-    e = (e.withColumn("n_y", F.col("_nby") + F.col("o.dy"))
+         .withColumn("o", F.explode(offs))
+         .withColumn("n_y", F.col("_nby") + F.col("o.dy"))
          .filter((F.col("n_y") >= 0) & (F.col("n_y") < ny))
          .withColumn("n_x", F.pmod(F.col("_nbx") + F.col("o.dx"),
                                    F.lit(nx))))
@@ -532,39 +365,6 @@ def _explode_neighbor_cells(df: DataFrame, cell_col: str, res: int,
             F.shiftleft(_spread(F.col("n_y")), 1))).cast("long")
     return (e.withColumn("n_cell", n_cell)
             .drop("_nbx", "_nby", "o", "n_y", "n_x"))
-
-
-def _ring_cells_df(pending: DataFrame, res: int,
-                   max_ring: int | None = None) -> DataFrame:
-    """Explode each pending query into the neighbor cell ids of its own
-    (per-row) ring radius — the `_explode_neighbor_cells` chain with
-    per-row trimming.  The numpy fallback only fires when 2R+1 ≥ nx (a
-    ring that wraps the whole globe — coarse res with huge radius),
-    where wrap-around would duplicate neighbor cells."""
-    nx = 2 ** (res + 1)
-    if max_ring is None:
-        max_ring = pending.agg(F.max("ring")).collect()[0][0] or 1
-    if 2 * max_ring + 1 >= nx:
-        return _ring_cells_py(pending)
-    return _explode_neighbor_cells(pending, "q_cell", res, max_ring,
-                                   ring_col="ring") \
-        .select("qid", "q_lon", "q_lat", "ring", "n_cell")
-
-
-def _ring_cells_py(pending: DataFrame) -> DataFrame:
-    """numpy k-ring fallback (handles lon wrap-around dedup exactly)."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    from ..spatial.cellindex import k_ring
-
-    @pandas_udf(ArrayType(LongType()))
-    def ring_udf(cells: pd.Series, rings: pd.Series) -> pd.Series:
-        return pd.Series([[int(x) for x in k_ring(int(c), int(r))]
-                          for c, r in zip(cells, rings)])
-
-    return (pending.withColumn(
-        "n_cell", F.explode(ring_udf(F.col("q_cell"), F.col("ring"))))
-        .select("qid", "q_lon", "q_lat", "ring", "n_cell"))
 
 
 def pip_join_rects(points: DataFrame, rects: list, lon_col: str = "lon",
@@ -599,7 +399,8 @@ def radius_join(left: DataFrame, right: DataFrame, radius_deg: float,
     Scale shape: pick the coarsest cell resolution whose cell edge ≥
     radius, so ring-1 neighborhoods are guaranteed to cover the radius;
     explode left into its 3×3 neighbor cells and equi-join right on
-    cell id (ONE shuffle, no cross join), then exact distance refine.
+    cell id (ONE shuffle, no cross join), then exact distance refine;
+    the final distinct absorbs duplicate cells of a globe-wrapping ring.
     Output: (lid, rid, dist2).
     """
     import math
@@ -613,9 +414,8 @@ def radius_join(left: DataFrame, right: DataFrame, radius_deg: float,
     ring = max(1, math.ceil(radius_deg / (180.0 / (2 ** res))))
     l = assign_cells(left, res).select(
         F.col(lid_col).alias("qid"), F.col("lon").alias("q_lon"),
-        F.col("lat").alias("q_lat"), F.col("cell_id").alias("q_cell"),
-        F.lit(ring).alias("ring"))
-    ring_cells = _ring_cells_df(l, res, ring)
+        F.col("lat").alias("q_lat"), F.col("cell_id").alias("q_cell"))
+    ring_cells = _explode_neighbor_cells(l, "q_cell", res, ring)
     r = assign_cells(right, res).select(
         F.col(rid_col).alias("rid"), F.col("lon").alias("r_lon"),
         F.col("lat").alias("r_lat"), F.col("cell_id").alias("r_cell"))
@@ -728,8 +528,8 @@ def cell_density(df: DataFrame, res: int = 7, k: int = 1,
 
     The smoothing convolution runs on the HISTOGRAM, not the rows: one
     shuffle aggregates rows to ≤ #occupied-cells counts, each count
-    scatters to its ring via the static-offset JVM explode (the
-    `_ring_cells_df` idiom — no Python, no join), and a second tiny
+    scatters to its ring via the static-offset JVM explode
+    (`_explode_neighbor_cells` — no Python, no join), and a second tiny
     aggregation sums contributions per receiving cell.  At 100 TB the
     expensive side is the first partial-aggregated histogram; the
     explode touches only cells² ≪ rows.  Output: (cell_id, density) —

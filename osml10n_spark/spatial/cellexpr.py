@@ -76,8 +76,8 @@ def _compact(x: Column) -> Column:
     k-ring over this (transform/filter lambdas) measured ~40 ms/row in
     Catalyst's interpreted HOF path — 30× slower than even a per-row
     pandas UDF; the fast JVM k-ring is the static-literal offset explode
-    in operators.spatial._ring_cells_df, which stays in whole-stage
-    codegen."""
+    in operators.spatial._explode_neighbor_cells, which stays in
+    whole-stage codegen."""
     x = x.bitwiseAND(F.lit(_M5))
     x = (x.bitwiseOR(F.shiftrightunsigned(x, 1))).bitwiseAND(F.lit(_M4))
     x = (x.bitwiseOR(F.shiftrightunsigned(x, 2))).bitwiseAND(F.lit(_M3))

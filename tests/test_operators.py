@@ -28,66 +28,84 @@ def _points_df(spark, n, seed, prefix):
 
 def test_ring_cells_static_matches_numpy_k_ring(spark):
     """The static-offset JVM k-ring explode is set-identical to the
-    numpy kernel, including antimeridian wrap and pole clamp, for mixed
-    per-row rings; globe-wrapping rings route to the numpy fallback."""
-    from osml10n_spark.operators.spatial import _ring_cells_df
+    numpy kernel, including antimeridian wrap and pole clamp; a ring
+    that wraps the whole globe repeats cells but covers the same set."""
+    from osml10n_spark.operators.spatial import _explode_neighbor_cells
     from osml10n_spark.spatial.cellindex import cell_from_lonlat, k_ring
     rng = np.random.default_rng(11)
-    # (res, max ring): last case has 2R+1 ≥ nx → exercises the fallback
-    for res, rmax in ((5, 4), (7, 4), (9, 4), (2, 5)):
+    # (res, ring): the last case has 2R+1 ≥ nx, a globe-wrapping ring
+    for res, ring in ((5, 4), (7, 1), (7, 3), (9, 2), (2, 5)):
         lon = np.concatenate([rng.uniform(-180, 180, 40), [179.99, -179.99]])
         lat = np.concatenate([rng.uniform(-90, 90, 40), [89.9, -89.9]])
         cells = cell_from_lonlat(lon, lat, res)
-        rings = (rng.integers(1, rmax + 1, len(cells))).astype(int)
-        df = spark.createDataFrame(
-            [(i, float(lon[i]), float(lat[i]), int(c), int(r))
-             for i, (c, r) in enumerate(zip(cells, rings))],
-            "qid long, q_lon double, q_lat double, q_cell long, ring int")
-        got = _ring_cells_df(df, res).groupBy("qid") \
+        df = spark.createDataFrame([(i, int(c)) for i, c in enumerate(cells)],
+                                   "qid long, q_cell long")
+        got = _explode_neighbor_cells(df, "q_cell", res, ring).groupBy("qid") \
             .agg(F.collect_set("n_cell").alias("nbrs")).collect()
         by_qid = {r.qid: set(r.nbrs) for r in got}
-        for i, (c, r) in enumerate(zip(cells, rings)):
-            expected = set(int(x) for x in k_ring(int(c), int(r)))
-            assert by_qid[i] == expected, (res, i, int(r))
+        for i, c in enumerate(cells):
+            expected = set(int(x) for x in k_ring(int(c), ring))
+            assert by_qid[i] == expected, (res, ring, i)
+
+
+def _knn_rows(df):
+    return {(r.qid, r.rank): (r.iid, r.dist2) for r in df.collect()}
 
 
 def test_knn_cells_matches_bruteforce(spark):
     q = _points_df(spark, 40, 1, "q")
     items = _points_df(spark, 400, 2, "i")
-    brute = {(r.qid, r.rank): r.iid
-             for r in knn_geo(q, items, 5).collect()}
-    cells = {(r.qid, r.rank): r.iid
-             for r in knn_cells(q, items, 5, res=6).collect()}
-    assert brute == cells
+    assert _knn_rows(knn_cells(q, items, 5, res=6)) == \
+        _knn_rows(knn_geo(q, items, 5))
 
 
-def test_knn_ring_stats_cache(spark):
-    """The density-derived initial ring is memoized per (items plan,
-    res, k): the second call against a semantically identical items
-    frame skips the occupancy job (ring_source == 'cached'), picks the
-    SAME ring, and returns identical results — the ring is perf-only."""
-    from osml10n_spark.operators.spatial import KNN_LAST_RUN, _KNN_RING_CACHE
-    _KNN_RING_CACHE.clear()
-    q = _points_df(spark, 20, 3, "q")
-    items = _points_df(spark, 300, 4, "i")
-    first = {(r.qid, r.rank): r.iid
-             for r in knn_cells(q, items, 4, res=6).collect()}
-    assert KNN_LAST_RUN["ring_source"] == "computed"
-    ring0 = KNN_LAST_RUN["initial_ring"]
-    # repeat call against the same corpus hits (semanticHash also
-    # canonicalizes REBUILT plans over file sources — verified for
-    # parquet reads; LogicalRDD test frames only hit via same object)
-    second = {(r.qid, r.rank): r.iid
-              for r in knn_cells(q, items, 4, res=6).collect()}
-    assert KNN_LAST_RUN["ring_source"] == "cached"
-    assert KNN_LAST_RUN["initial_ring"] == ring0
-    assert first == second
-    # explicit ring bypasses the cache entirely
-    knn_cells(q, items, 4, res=6, initial_ring=2).count()
-    assert KNN_LAST_RUN["ring_source"] == "explicit"
-    # different k → different stats key → recomputed
-    knn_cells(q, items, 3, res=6).count()
-    assert KNN_LAST_RUN["ring_source"] == "computed"
+def test_knn_cells_hotspot_and_antimeridian(spark, monkeypatch):
+    """knn_cells ≡ knn_geo, (iid, dist2) per (qid, rank), where a dense
+    0.01° Tokyo cluster fills one tile and items straddle the
+    antimeridian, at a coarse (globe-wrapping ring), a middle and a
+    fine resolution.  Duplicate items make ties at the kth distance,
+    and a tiny matrix budget splits each tile's queries into chunks."""
+    from osml10n_spark.operators import spatial
+    monkeypatch.setattr(spatial, "_CHUNK_CELLS", 256)
+    rng = np.random.default_rng(7)
+    pts = ([(float(x), float(y)) for x, y in
+            zip(rng.uniform(178, 180, 200), rng.uniform(-5, 5, 200))]
+           + [(float(x), float(y)) for x, y in
+              zip(rng.uniform(-180, -178, 200), rng.uniform(-5, 5, 200))]
+           + [(float(x), float(y)) for x, y in
+              zip(rng.uniform(139.70, 139.71, 300),
+                  rng.uniform(35.68, 35.69, 300))])
+    pts += pts[-5:] + pts[:3] + [pts[-1]] * 6   # "tie": 8 items at dist 0
+    items = spark.createDataFrame(
+        [(f"i{n}", x, y) for n, (x, y) in enumerate(pts)],
+        "iid string, lon double, lat double")
+    q = spark.createDataFrame(
+        [("e", 179.99, 0.5), ("w", -179.99, -0.5), ("e180", 180.0, 0.0),
+         ("w180", -180.0, 0.0), ("tky", 139.705, 35.685),
+         ("tky2", 139.8, 35.6), ("tie", *pts[-1])],
+        "qid string, lon double, lat double")
+    want = _knn_rows(knn_geo(q, items, 5))
+    assert len(want) == 35
+    for res in (3, 6, 9):
+        assert _knn_rows(knn_cells(q, items, 5, res=res)) == want, res
+
+
+def test_knn_cells_drops_null_nan_coords(spark):
+    """Rows with a NULL or NaN lon/lat are dropped on both sides before
+    the pass: only the valid queries come back, the NaN item is nobody's
+    neighbour, and nothing goes to the brute-force fallback."""
+    from osml10n_spark.operators.spatial import KNN_LAST_RUN
+    q = spark.createDataFrame(
+        [("ok1", 1.0, 1.0), ("ok2", -3.0, 2.0), ("nan", float("nan"), 1.0),
+         ("null", 2.0, None)], "qid string, lon double, lat double")
+    items = _points_df(spark, 300, 6, "i").unionByName(spark.createDataFrame(
+        [("i_nan", 1.0, float("nan"))], "iid string, lon double, lat double"))
+    got = _knn_rows(knn_cells(q, items, 3, res=5))
+    assert {qid for qid, _ in got} == {"ok1", "ok2"}
+    assert KNN_LAST_RUN["fallback_queries"] == 0
+    valid = items.filter(F.col("iid") != "i_nan")
+    assert got == _knn_rows(knn_geo(q.filter(F.col("qid").startswith("ok")),
+                                    valid, 3))
 
 
 def test_knn_geo_bq_matches_window_plan(spark):
@@ -109,15 +127,31 @@ def test_knn_geo_bq_matches_window_plan(spark):
 
 
 def test_knn_cells_sparse_fallback(spark):
-    # items far away from queries → forces the straggler path
+    # items far away from queries → every query goes to brute force
+    from osml10n_spark.operators.spatial import KNN_LAST_RUN
     q = _points_df(spark, 5, 3, "q")
     items = spark.createDataFrame(
         [("i0", 170.0, 80.0), ("i1", -170.0, -80.0), ("i2", 100.0, -70.0)],
         "iid string, lon double, lat double")
-    brute = {(r.qid, r.rank): r.iid for r in knn_geo(q, items, 2).collect()}
-    cells = {(r.qid, r.rank): r.iid
-             for r in knn_cells(q, items, 2, res=6, max_rounds=2).collect()}
-    assert brute == cells
+    cells = _knn_rows(knn_cells(q, items, 2, res=6))
+    assert KNN_LAST_RUN["fallback_queries"] == 5
+    assert cells == _knn_rows(knn_geo(q, items, 2))
+
+
+def test_knn_cells_guard_proves_only_in_ring_rows(spark):
+    """A query whose own tile holds k items, all beyond its guard
+    radius, is not proven by them: a nearer item sits across the tile
+    border (res 6: 45° tiles), so the query must go to brute force."""
+    from osml10n_spark.operators.spatial import KNN_LAST_RUN
+    q = spark.createDataFrame([("mid", 22.5, 22.5)],
+                              "qid string, lon double, lat double")
+    items = spark.createDataFrame(
+        [("far_ne", 44.0, 44.0), ("far_sw", 1.0, 1.0),
+         ("near", 22.5, -1.0)], "iid string, lon double, lat double")
+    got = _knn_rows(knn_cells(q, items, 2, res=6))
+    assert KNN_LAST_RUN["fallback_queries"] == 1
+    assert got == _knn_rows(knn_geo(q, items, 2))
+    assert got[("mid", 1)][0] == "near"
 
 
 def test_assign_country_gated(spark):

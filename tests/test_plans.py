@@ -153,21 +153,39 @@ def test_image_dup_pairs_plan_is_equijoin_and_pruned(spark, staged):
 
 def test_knn_ring_explode_is_jvm_only(spark):
     """The static-offset k-ring explode stays entirely in the JVM: no
-    Python island of any kind in the candidate-generation plan."""
-    from osml10n_spark.operators.spatial import _ring_cells_df, assign_cells
+    Python island of any kind in the fan-out plan."""
+    from osml10n_spark.operators.spatial import (_explode_neighbor_cells,
+                                                 assign_cells)
     from osml10n_spark.plans import physical_plan
     pts = spark.createDataFrame(
         [(i, float(i), float(i % 80) - 40.0) for i in range(100)],
         "qid long, lon double, lat double")
-    pending = assign_cells(pts, 7) \
-        .select("qid", F.col("lon").alias("q_lon"),
-                F.col("lat").alias("q_lat"),
-                F.col("cell_id").alias("q_cell")) \
-        .withColumn("ring", F.lit(2))
-    plan = physical_plan(_ring_cells_df(pending, 7, 2))
+    plan = physical_plan(_explode_neighbor_cells(assign_cells(pts, 7),
+                                                 "cell_id", 7, 2))
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
     assert "Generate explode" in plan or "Generate" in plan
+
+
+def test_knn_cells_plan_is_one_cogroup(spark):
+    """knn_cells is one tile-grouped pass: exactly one cogroup pandas
+    island, and no cartesian or nested-loop join anywhere."""
+    from osml10n_spark.operators.spatial import knn_cells
+    from osml10n_spark.plans import physical_plan
+    q = spark.createDataFrame(
+        [(f"q{i}", float(i % 60) - 30.0, float(i % 30) - 15.0)
+         for i in range(50)], "qid string, lon double, lat double")
+    items = spark.createDataFrame(
+        [(f"i{i}", float(i % 60) - 30.0, float(i % 30) - 15.0 + 0.001 * i)
+         for i in range(2000)], "iid string, lon double, lat double")
+    out = knn_cells(q, items, 3, res=7)
+    # the result is cached and materialized: check the adaptive plan
+    # that ran, not the initial plan printed after it
+    plan = physical_plan(out, mode="simple").split("== Initial Plan ==")[0]
+    out.unpersist()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_knn_geo_bq_plan_has_no_candidate_shuffle(spark):
