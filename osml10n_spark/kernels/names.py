@@ -41,6 +41,7 @@ __all__ = [
     "format_combined_name",
     "gen_combined_names",
     "get_names_from_tags",
+    "l10n_latn_names",
     "get_localized_name_from_tags",
     "get_streetname_from_tags",
     "get_placename_from_tags",
@@ -52,6 +53,10 @@ __all__ = [
 # 5 most commonly spoken latin-script languages, probe order fixed
 # (get_localized_name_from_tags.lua:12)
 LATIN_LANGS = ("en", "fr", "es", "pt", "de")
+
+# default separators of the street and place formatters (:394-412)
+STREET_SEPARATOR = " - "
+PLACE_SEPARATOR = "\n"
 
 LTR_OPEN = "‪"
 LTR_CLOSE = "‬"
@@ -80,8 +85,7 @@ def langcode_from_tag(tag: str) -> str | None:
     (get_localized_name_from_tags.lua:44-52)."""
     if ":" not in tag:
         return None
-    segs = [s for s in tag.split(":") if s]
-    return segs[-1] if segs else None
+    return tag.rstrip(":").rpartition(":")[2] or None
 
 
 # byte sets for the two Lua boundary classes (see header): membership
@@ -303,15 +307,21 @@ def get_names_from_tags(rec_id: str, tags: dict, localized_name_last,
         # reference sends a malformed 3-field XY frame here (C7 protocol
         # bug, geo_transcript.lua:55-78 vs geo-transcript-srv.py:267);
         # we implement the INTENDED semantics (forced-cc transliteration)
-        tags["name:l10n_Latn"] = transcriptor.country_transcript(
-            rec_id, tags["name:ja-Hira"], "jp")
-        return gen_combined_names("name:l10n_Latn", tags, localized_name_last, is_street)
+        return l10n_latn_names(tags, transcriptor.country_transcript(
+            rec_id, tags["name:ja-Hira"], "jp"), localized_name_last, is_street)
 
     if is_street:
-        tags["name:l10n_Latn"] = transcriptor.geo_transcript(
-            rec_id, street_abbrev_non_latin(name_val), place)
-    else:
-        tags["name:l10n_Latn"] = transcriptor.geo_transcript(rec_id, name_val, place)
+        name_val = street_abbrev_non_latin(name_val)
+    return l10n_latn_names(tags, transcriptor.geo_transcript(
+        rec_id, name_val, place), localized_name_last, is_street)
+
+
+def l10n_latn_names(tags: dict, latn: str, localized_name_last,
+                    is_street: bool) -> list[str]:
+    """The cascade's transliteration tail (:310-315): combine ``tags``
+    (mutated) with ``latn`` as the pseudo tag ``name:l10n_Latn``.  The
+    batch UDFs call it directly once a deferred row's country is known."""
+    tags["name:l10n_Latn"] = latn
     return gen_combined_names("name:l10n_Latn", tags, localized_name_last, is_street)
 
 
@@ -357,7 +367,7 @@ def get_streetname_from_tags(rec_id: str, tags: dict, localized_name_last,
                              transcriptor=None) -> str:
     """(:394-401)"""
     if separator is None:
-        separator = " - "
+        separator = STREET_SEPARATOR
     names = get_names_from_tags(rec_id, tags, localized_name_last, True,
                                 targetlang, place, transcriptor)
     return format_combined_name(names, separator)
@@ -369,7 +379,7 @@ def get_placename_from_tags(rec_id: str, tags: dict, localized_name_last,
                             transcriptor=None) -> str:
     """(:405-412)"""
     if separator is None:
-        separator = "\n"
+        separator = PLACE_SEPARATOR
     names = get_names_from_tags(rec_id, tags, localized_name_last, False,
                                 targetlang, place, transcriptor)
     return format_combined_name(names, separator)

@@ -12,7 +12,9 @@ golden-checked against lua_osml10/tests/runtests.lua:146-173,230-250.
 """
 from __future__ import annotations
 
+import re
 import unicodedata
+from itertools import groupby
 
 from .scripts import contains_cjk, contains_thai
 from .translit_data import (
@@ -22,10 +24,7 @@ from .translit_data import (
     HAN_PINYIN,
     JP_WORDS,
     JYUTPING,
-    KANA,
     THAI_WORDS,
-    _JP_MAX_WORD,
-    _THAI_MAX_WORD,
     hangul_to_latin,
     kana_to_romaji,
 )
@@ -45,9 +44,22 @@ __all__ = [
 BOUNDARY_CCS = frozenset({"hk", "jp", "mo", "th", "tw"})
 
 
+_ALPHABETS: dict[str, str] = {}
+
+
 def _alphabet(c: str) -> str:
-    """First word of the Unicode character name (geo-transcript-srv.py:75)."""
-    return unicodedata.name(c).split(" ")[0]
+    """First word of the Unicode character name (geo-transcript-srv.py:75),
+    memoized per character; an unnamed character raises ``ValueError``
+    every time and is never cached."""
+    a = _ALPHABETS.get(c)
+    if a is None:
+        a = _ALPHABETS[c] = unicodedata.name(c).split(" ")[0]
+    return a
+
+
+def _alphabet_runs(s: str):
+    """(alphabet, run) pairs of the maximal same-alphabet runs of ``s``."""
+    return [(a, "".join(g)) for a, g in groupby(s, _alphabet)]
 
 
 def split_by_alphabet(s: str) -> list[str]:
@@ -57,72 +69,57 @@ def split_by_alphabet(s: str) -> list[str]:
     unnamed characters exactly like ``unicodedata.name`` does there
     (the daemon's per-request handler turns that into an '' reply).
     """
-    runs: list[str] = []
-    target = s[0]
-    old = _alphabet(s[0])
-    for c in s[1:]:
-        a = _alphabet(c)
-        if a == old:
-            target += c
-        else:
-            runs.append(target)
-            target = c
-        old = a
-    runs.append(target)
-    return runs
+    return [run for _, run in _alphabet_runs(s)]
 
 
-def _is_kana(c: str) -> bool:
-    return 0x3040 <= ord(c) <= 0x30FF
+_KANA = "\u3040-\u30FF"
+_HAN = "\u3400-\u4DBF\u4E00-\u9FFF"
 
 
-def _is_han(c: str) -> bool:
-    cp = ord(c)
-    return 0x4E00 <= cp <= 0x9FFF or 0x3400 <= cp <= 0x4DBF
+def _longest_first(words) -> str:
+    """Regex alternation that matches the longest of ``words`` at a position."""
+    return "|".join(map(re.escape, sorted(words, key=len, reverse=True)))
+
+
+class _GenericTable(dict):
+    """code point → Latin for the per-character scripts: Cyrillic, Greek
+    and Georgian from their tables, Hangul syllables by arithmetic
+    (filled on first sight); everything else maps to itself."""
+
+    def __missing__(self, cp: int) -> str:
+        v = self[cp] = hangul_to_latin(chr(cp))
+        return v
+
+
+_GENERIC = _GenericTable({ord(k): v for table in (CYRILLIC, GREEK, GEORGIAN)
+                          for k, v in table.items()})
+# kana and Han runs; no table value above is empty or kana/Han, so the
+# runs are the same before and after the translate
+_KANA_HAN_RUN = re.compile(f"([{_KANA}]+)|([{_HAN}]+)")
+
+
+def _romanize_run(m: re.Match) -> str:
+    if m.group(1):
+        return kana_to_romaji(m.group(1))
+    return " ".join([HAN_PINYIN.get(ch, ch) for ch in m.group(2)])
 
 
 def generic_transliterate(s: str) -> str:
     """ICU `Any-Latin` + NFC replacement (geo-transcript-srv.py:144,174-176).
 
-    Per-character table mapping: Cyrillic/Greek via lookup, kana runs via
-    romaji kernel, Han runs as space-joined pinyin; anything unmapped is
-    passed through; combining marks survive and NFC recomposes (so
-    Москва́ → Moskvá).
+    Per-character table mapping (Cyrillic/Greek/Georgian by lookup,
+    Hangul by arithmetic), then kana runs via the romaji kernel and Han
+    runs as space-joined pinyin; anything unmapped is passed through;
+    combining marks survive and NFC recomposes (so Москва́ → Moskvá).
     """
-    out: list[str] = []
-    i = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if c in CYRILLIC:
-            out.append(CYRILLIC[c])
-            i += 1
-        elif c in GREEK:
-            out.append(GREEK[c])
-            i += 1
-        elif _is_kana(c):
-            j = i
-            while j < n and _is_kana(s[j]):
-                j += 1
-            out.append(kana_to_romaji(s[i:j]))
-            i = j
-        elif _is_han(c):
-            j = i
-            while j < n and _is_han(s[j]):
-                j += 1
-            run = [HAN_PINYIN.get(ch, ch) for ch in s[i:j]]
-            out.append(" ".join(run))
-            i = j
-        elif 0xAC00 <= ord(c) <= 0xD7A3:
-            out.append(hangul_to_latin(c))
-            i += 1
-        elif c in GEORGIAN:
-            out.append(GEORGIAN[c])
-            i += 1
-        else:
-            out.append(c)
-            i += 1
-    return unicodedata.normalize("NFC", "".join(out))
+    return unicodedata.normalize(
+        "NFC", _KANA_HAN_RUN.sub(_romanize_run, s.translate(_GENERIC)))
+
+
+# one token per match: a kana run, a dictionary word (every JP_WORDS key
+# starts with Han) or one Han character, or a non-Japanese run
+_JP_TOKEN = re.compile(
+    f"([{_KANA}]+)|({_longest_first(JP_WORDS)}|[{_HAN}])|([^{_KANA}{_HAN}]+)")
 
 
 def _jp_tokenize(s: str) -> list[str]:
@@ -132,34 +129,13 @@ def _jp_tokenize(s: str) -> list[str]:
     ``str.capitalize`` unchanged, matching geo-transcript-srv.py:151-158).
     """
     tokens: list[str] = []
-    i = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if _is_kana(c):
-            j = i
-            while j < n and _is_kana(s[j]):
-                j += 1
-            tokens.append(kana_to_romaji(s[i:j]))
-            i = j
-        elif _is_han(c):
-            matched = False
-            for ln in range(min(_JP_MAX_WORD, n - i), 0, -1):
-                w = s[i:i + ln]
-                if w in JP_WORDS:
-                    tokens.extend(JP_WORDS[w])
-                    i += ln
-                    matched = True
-                    break
-            if not matched:
-                tokens.append(c)
-                i += 1
+    for kana, han, other in _JP_TOKEN.findall(s):
+        if kana:
+            tokens.append(kana_to_romaji(kana))
+        elif han in JP_WORDS:
+            tokens.extend(JP_WORDS[han])
         else:
-            j = i
-            while j < n and not _is_kana(s[j]) and not _is_han(s[j]):
-                j += 1
-            tokens.append(s[i:j])
-            i = j
+            tokens.append(han or other)
     return tokens
 
 
@@ -174,27 +150,16 @@ def kanji_transcript(s: str) -> str:
     return out.strip()
 
 
+_THAI_WORD = re.compile(_longest_first(THAI_WORDS) + "|.", re.S)
+
+
 def _thai_run_to_roman(run: str) -> str:
     """Fake tltk.nlp.th2roman: longest-match word segmentation,
     space-joined (already '<s/>'-stripped)."""
-    parts: list[str] = []
-    i = 0
-    n = len(run)
-    while i < n:
-        matched = False
-        for ln in range(min(_THAI_MAX_WORD, n - i), 0, -1):
-            w = run[i:i + ln]
-            if w in THAI_WORDS:
-                parts.append(THAI_WORDS[w])
-                i += ln
-                matched = True
-                break
-        if not matched:
-            parts.append(run[i])
-            i += 1
     # join word-level outputs with spaces, collapsing single leftovers
     out: list[str] = []
-    for p in parts:
+    for w in _THAI_WORD.findall(run):
+        p = THAI_WORDS.get(w, w)
         if out and len(out[-1]) == 1 and len(p) == 1:
             out[-1] += p
         else:
@@ -205,25 +170,15 @@ def _thai_run_to_roman(run: str) -> str:
 def thai_transcript(s: str) -> str:
     """Parity with geo-transcript-srv.py:88-103 — THAI runs romanized,
     other runs pass through, concatenated without extra separators."""
-    latin = ""
-    for run in split_by_alphabet(s):
-        if _alphabet(run[0]) == "THAI":
-            latin += _thai_run_to_roman(run)
-        else:
-            latin += run
-    return latin
+    return "".join(_thai_run_to_roman(run) if a == "THAI" else run
+                   for a, run in _alphabet_runs(s))
 
 
 def cantonese_transcript(s: str) -> str:
     """Parity with geo-transcript-srv.py:105-120 — CJK runs become
     space-joined jyutping syllables."""
-    latin = ""
-    for run in split_by_alphabet(s):
-        if _alphabet(run[0]) == "CJK":
-            latin += " ".join(JYUTPING.get(c, c) for c in run)
-        else:
-            latin += run
-    return latin
+    return "".join(" ".join([JYUTPING.get(c, c) for c in run]) if a == "CJK"
+                   else run for a, run in _alphabet_runs(s))
 
 
 def transcript(rec_id: str, cc: str, name: str) -> str:

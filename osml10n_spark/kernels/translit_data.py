@@ -190,7 +190,6 @@ JP_WORDS = {
     "道": ["michi"], "島": ["shima"], "海": ["umi"], "森": ["mori"],
     "田": ["ta"], "野": ["no"], "谷": ["tani"], "丘": ["oka"],
 }
-_JP_MAX_WORD = max(len(k) for k in JP_WORDS)
 
 # ------------------------------------------------------------------
 # Thai → roman (fake tltk th2roman; longest-match over words/syllables,
@@ -208,7 +207,6 @@ THAI_WORDS = {
     "แม่น้ำ": "maenam", "เกาะ": "ko", "ภูเขา": "phukhao",
     "กรุงเทพ": "krungthep", "เชียงใหม่": "chiangmai",
 }
-_THAI_MAX_WORD = max(len(k) for k in THAI_WORDS)
 
 
 # ------------------------------------------------------------------

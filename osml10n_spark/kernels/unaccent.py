@@ -15,9 +15,11 @@ through UNCHANGED:
   golden at runtests.lua:258-262, which only matches if unaccent leaves
   the marks in place).
 
-We replicate that: per character, if it has a canonical decomposition,
-replace it with the decomposition minus combining marks; otherwise keep
-it verbatim.
+We replicate that with one ``str.translate`` through ``_TABLE``, a
+per-code-point table filled on first sight: a character with a tabled
+canonical decomposition (any but a Hangul syllable) maps to the
+decomposition minus combining marks; every other character maps to
+itself.
 
 Goldens: lua_osml10/tests/runtests.lua:102-104
   Besançon → Besancon, München → Munchen, Brüssel → Brussel.
@@ -29,8 +31,19 @@ import unicodedata
 __all__ = ["unaccent"]
 
 
-def _is_hangul_syllable(c: str) -> bool:
-    return 0xAC00 <= ord(c) <= 0xD7A3
+class _UnacTable(dict):
+    """code point → libunac replacement, computed once per code point."""
+
+    def __missing__(self, cp: int) -> str:
+        c = chr(cp)
+        d = unicodedata.normalize("NFD", c)
+        if d != c and not 0xAC00 <= cp <= 0xD7A3:
+            c = "".join(dc for dc in d if not unicodedata.combining(dc))
+        self[cp] = c
+        return c
+
+
+_TABLE = _UnacTable()
 
 
 def unaccent(text: str) -> str:
@@ -40,16 +53,4 @@ def unaccent(text: str) -> str:
         return None
     if text.isascii():          # fast path: nothing to decompose
         return text
-    out = []
-    for c in text:
-        if _is_hangul_syllable(c):
-            out.append(c)
-            continue
-        d = unicodedata.normalize("NFD", c)
-        if d == c:
-            out.append(c)          # no decomposition → verbatim (incl. bare marks)
-        else:
-            for dc in d:
-                if not unicodedata.combining(dc):
-                    out.append(dc)
-    return "".join(out)
+    return text.translate(_TABLE)

@@ -16,6 +16,7 @@ Design rules:
 from __future__ import annotations
 
 import json
+import re
 
 import numpy as np
 import pandas as pd
@@ -79,17 +80,9 @@ class _DeferringTranscriptor(Transcriptor):
         raise _DeferGeo(name, place)
 
 
-class _ResolvedTranscriptor(Transcriptor):
-    """Replays a precomputed transliteration into the cascade rerun."""
-
-    def __init__(self, result):
-        self.result = result
-
-    def geo_transcript(self, rec_id, name, place=None):
-        return self.result
-
-
 _DEFER = _DeferringTranscriptor(None)
+# a one-key tag map as to_json writes it, its name free of escapes
+_LONE_NAME = re.compile(r'\{"name":"([^"\\\x00-\x1f]*)"\}\Z')
 _MEMO_CAP = 200_000
 
 
@@ -108,10 +101,11 @@ def _batch_localize(tags_list, targets, lasts, seps, lons, lats,
     deferred (most rows complete — latin fast path, target-tag hits,
     romanization tags); phase 2 gates + batch-resolves countries for
     the deferred rows in one vectorized PiP call, transliterates, and
-    replays the cascade tail.  Location-independent rows are memoized
-    per worker keyed by the raw JSON string (map-label corpora repeat
-    captions heavily); geo-dependent rows are memoized by
-    (key, resolved cc), which captures their full location dependence.
+    runs only the cascade tail (``names.l10n_latn_names``).
+    Location-independent rows are memoized per worker keyed by the raw
+    JSON string (map-label corpora repeat captions heavily);
+    geo-dependent rows are memoized by (key, resolved cc), which
+    captures their full location dependence.
     The record id only names a record in the daemon's log (SURVEY §1.1)
     and never reaches the output, so the cascade runs with ''."""
     memo = _STATE.setdefault("memo_" + mode, {})
@@ -133,26 +127,36 @@ def _batch_localize(tags_list, targets, lasts, seps, lons, lats,
             return _names.get_streetname_from_tags("", t, ll, sp, tg, None, tr)
 
     is_street_mode = mode == "streetname"
+    default_sep = (_names.STREET_SEPARATOR if is_street_mode
+                   else _names.PLACE_SEPARATOR)
     for i in range(n):
         tj = tags_list[i]
         if tj is None:
             out[i] = ""
             continue
-        # ASCII single-name fast path: to_json emits exactly
-        # '{"name":"X"}' for a one-key map; when X is backslash-free
-        # ASCII (⊂ latin, P1) the cascade provably returns X
-        # (street mode: street_abbrev_latin(X)) — skip json.loads and
-        # the Python cascade entirely.  ~60% of a world corpus.
-        if (tj.startswith('{"name":"') and tj.endswith('"}')
-                and "\\" not in tj and '"' not in tj[9:-2]
-                and tj.isascii()):
-            v = tj[9:-2]
-            out[i] = _abbrev.street_abbrev_latin(v) if is_street_mode else v
-            continue
+        # lone-name rows: to_json emits exactly '{"name":"X"}' for a
+        # one-key map.  When X holds no escape and no raw control
+        # character, the cascade's path depends on X alone: a latin X
+        # (P1) comes back as X (street mode: street_abbrev_latin(X)),
+        # any other X goes straight to the transliteration tail.
+        # Neither takes json.loads or phase 1.  On perfbench's
+        # l10n_unique input the latin case is 0.35 of the rows (0.27
+        # ASCII-only) and the other case 0.37.
+        lone = _LONE_NAME.match(tj)
+        if lone is not None:
+            v = lone.group(1)
+            if is_latin(v):
+                out[i] = _abbrev.street_abbrev_latin(v) if is_street_mode else v
+                continue
         tg = targets[i]
         ll = bool(lasts[i]) if lasts is not None else False
         sp = seps[i] if seps is not None else None
         key = (tg, ll, sp, tj)
+        if lone is not None:
+            deferred.append((i, tj, {"name": v}, tg, ll, sp,
+                             _abbrev.street_abbrev_non_latin(v)
+                             if is_street_mode else v, None, key))
+            continue
         hit = memo.get(key)
         if hit is not None:
             out[i] = hit
@@ -208,8 +212,10 @@ def _batch_localize(tags_list, targets, lasts, seps, lons, lats,
                 try:
                     if t is None:
                         t = json.loads(tj)
-                    out[i] = run(dict(t), tg, ll, sp,
-                                 _ResolvedTranscriptor(translit))
+                    out[i] = _names.format_combined_name(
+                        _names.l10n_latn_names(t, translit, ll,
+                                               is_street_mode),
+                        default_sep if sp is None else sp)
                 except Exception:
                     out[i] = ""
             if len(geo_memo) < _MEMO_CAP:

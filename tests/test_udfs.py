@@ -1,11 +1,12 @@
 """Spark-free tests of the cascade UDFs' Python bodies (``.func``): the
-one per-process boundary cache and the one CJK/Thai country gate."""
+one per-process boundary cache, the one CJK/Thai country gate, the
+latin fast path and the deferred-row tail, each against the kernels."""
 import json
 
 import pandas as pd
 
 from osml10n_spark import udfs
-from osml10n_spark.kernels import translit
+from osml10n_spark.kernels import names, translit
 from osml10n_spark.kernels.geo import default_transcriptor
 from osml10n_spark.spatial import prepared
 
@@ -57,3 +58,92 @@ def test_gate_takes_pip_for_cjk_plus_thai_name():
     mixed = _localized(names[:1], lon, lat)[0]
     assert mixed == translit.transcript("", "jp", names[0])
     assert mixed != translit.transcript("", "th", names[0])
+
+
+_MODES = {
+    "placename": lambda t, last, sep, place, tr: names.get_placename_from_tags(
+        "", t, last, sep, "de", place, tr),
+    "streetname": lambda t, last, sep, place, tr: names.get_streetname_from_tags(
+        "", t, last, sep, "de", place, tr),
+    "localized": lambda t, last, sep, place, tr: names.get_localized_name_from_tags(
+        "", t, "de", place, tr),
+}
+
+
+def _cascade(mode, tag_maps, last=False, sep=None, lonlat=TOKYO):
+    """The cascade UDF's body over ``tag_maps`` placed at ``lonlat``,
+    in a fresh memo state so every row runs cold."""
+    n = len(tag_maps)
+    tags = [json.dumps(t, ensure_ascii=False, separators=(",", ":"))
+            for t in tag_maps]
+    udfs._STATE.clear()
+    return list(udfs.make_cascade_udf(mode, "de", last, sep).func(
+        pd.Series(tags), pd.Series([lonlat[0]] * n),
+        pd.Series([lonlat[1]] * n)))
+
+
+def _kernel(mode, tag_maps, last=False, sep=None, lonlat=TOKYO):
+    lon, lat = lonlat
+    tr = default_transcriptor()
+    return [_MODES[mode](dict(t), last, sep, [lon, lat, lon, lat], tr)
+            for t in tag_maps]
+
+
+def test_latin_lone_names_skip_decode_and_equal_kernel(monkeypatch):
+    """Lone latin names (ASCII or not) take the fast path: no JSON
+    decode, no transliteration, and the kernel's output in every mode."""
+    maps = [{"name": v} for v in ("Königsallee 5", "Dorfstraße",
+                                  "Place du Marché 7")]
+    for mode in _MODES:
+        want = _kernel(mode, maps)
+        with monkeypatch.context() as m:
+            m.setattr(udfs.json, "loads", _forbidden)
+            m.setattr(udfs._translit, "transcript", _forbidden)
+            assert _cascade(mode, maps) == want, mode
+
+
+def _forbidden(*args, **kwargs):
+    raise AssertionError("the latin fast path must not get here")
+
+
+def test_non_fast_path_rows_equal_kernel(monkeypatch):
+    """A lone name holding U+0250 (just past latin) is transliterated;
+    escaped characters and a two-key map take the JSON decode.  Every
+    one equals the kernel in every mode."""
+    lone = [{"name": "\u0250 Straße 1"}]
+    decoded = [{"name": 'Rue "Haute"'}, {"name": "C:\\Weg"},
+               {"name": "Tab\tStraße"}, {"name": "Hauptstraße",
+                                          "name:de": "Hauptstraße"}]
+    for mode in _MODES:
+        calls = {"loads": 0, "transcript": 0}
+
+        def counting(key, real):
+            def f(*args, **kwargs):
+                calls[key] += 1
+                return real(*args, **kwargs)
+            return f
+
+        with monkeypatch.context() as m:
+            m.setattr(udfs.json, "loads", counting("loads", json.loads))
+            m.setattr(udfs._translit, "transcript",
+                      counting("transcript", translit.transcript))
+            got = _cascade(mode, lone + decoded)
+        assert got == _kernel(mode, lone + decoded), mode
+        assert calls == {"loads": len(decoded), "transcript": 1}, mode
+
+
+def test_deferred_tail_equals_kernel_rerun():
+    """Rows that need a country (Cyrillic, Thai, CJK placed at Tokyo;
+    lone names and multi-key maps) get the kernel's output in
+    placename and streetname mode, either name order, with the mode's
+    default separator."""
+    maps = [{"name": "улица Ленина 5"},
+            {"name": "Садовая улица", "name:ru": "Садовая улица"},
+            {"name": "ถนนข้าวสาร"},
+            {"name": "ถนนสีลม 12", "highway": "primary"},
+            {"name": "東京"}, {"name": "新宿駅 3", "name:ja": "新宿駅 3"},
+            {"name": "銀座 4 丁目", "name:ko": "긴자"}]
+    for mode in ("placename", "streetname"):
+        for last in (False, True):
+            assert (_cascade(mode, maps, last, None)
+                    == _kernel(mode, maps, last, None)), (mode, last)
