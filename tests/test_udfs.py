@@ -1,11 +1,17 @@
-"""Spark-free tests of the cascade UDFs' Python bodies (``.func``): the
+"""Tests of the cascade UDFs' Python bodies (``.func``, Spark-free): the
 one per-process boundary cache, the one CJK/Thai country gate, the
-latin fast path and the deferred-row tail, each against the kernels."""
+latin fast path and the deferred-row tail, each against the kernels.
+Then, through Spark, the Python workers that run every UDF: forked from
+``osml10n_spark._daemon``, and still importing from zips added mid-session."""
 import json
+import zipfile
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
-from osml10n_spark import udfs
+from osml10n_spark import _daemon, udfs
+from osml10n_spark.engine.session import daemon_conf
 from osml10n_spark.kernels import names, translit
 from osml10n_spark.kernels.geo import default_transcriptor
 from osml10n_spark.spatial import prepared
@@ -147,3 +153,49 @@ def test_deferred_tail_equals_kernel_rerun():
         for last in (False, True):
             assert (_cascade(mode, maps, last, None)
                     == _kernel(mode, maps, last, None)), (mode, last)
+
+
+def _from_workers(spark, udf) -> set:
+    """The distinct values ``udf`` returns over 8 rows in 4 partitions."""
+    return {r[0] for r in spark.range(8).repartition(4).select(udf("id")).collect()}
+
+
+def _patched_udf():
+    """Whether the worker's ``zipimporter`` holds the daemon's method."""
+    @F.pandas_udf("boolean")
+    def patched(x: pd.Series) -> pd.Series:
+        import zipimport
+
+        from osml10n_spark import _daemon as d
+        return pd.Series([zipimport.zipimporter.invalidate_caches
+                          is d._invalidate_caches] * len(x))
+    return patched
+
+
+def test_workers_run_patched_invalidate_caches(spark):
+    """Workers forked from the package daemon hold its
+    ``zipimporter.invalidate_caches`` where the stock one re-reads
+    eagerly, and the stock one elsewhere."""
+    conf = daemon_conf()
+    if not conf:
+        pytest.skip("the daemon cannot import the package from this cwd/PYTHONPATH")
+    key = "spark.python.daemon.module"
+    assert spark.sparkContext.getConf().get(key) == conf[key]
+    assert _from_workers(spark, _patched_udf()) == {_daemon.EAGER}
+
+
+def test_add_py_file_after_a_udf_is_imported_by_the_next(spark, tmp_path):
+    """A zip added after a UDF ran (its workers hold their zipimporters
+    and stamps) is imported from by the next UDF."""
+    _from_workers(spark, _patched_udf())
+    path = tmp_path / "osml10n_added_mid_session.zip"
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("osml10n_added_mid_session.py", "X = 7\n")
+    spark.sparkContext.addPyFile(str(path))
+
+    @F.pandas_udf("long")
+    def added(x: pd.Series) -> pd.Series:
+        import osml10n_added_mid_session as m
+        return x * 0 + m.X
+
+    assert _from_workers(spark, added) == {7}

@@ -9,6 +9,8 @@ import duckdb
 # the checkout this file lives in, so the driver imports the same
 # package the executors load from the working directory
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+from tools.boundary_fixture import use_boundary_fixture
+use_boundary_fixture()          # before the JVM starts, so workers inherit it
 import __spark_entry__ as entrymod
 from pyspark.sql import SparkSession
 
