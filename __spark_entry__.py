@@ -2,7 +2,7 @@
 
 Thin wrapper over osml10n_spark.contract — one queries() entry per
 implemented operator from SURVEY.md §2.  Every query carries a DuckDB
-oracle (70/70): SQL re-derivation where expressible,
+oracle (57/57): SQL re-derivation where expressible,
 replay-literal pinning (driver-side kernel replay, no Spark) for the
 pixel/iterative paths.
 """
@@ -25,8 +25,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from osml10n_spark.contract import QUERIES
-    return dict(QUERIES)
+    from osml10n_spark.contract import REGISTRY
+    return {name: q.run for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> Mapping[str, str]:

@@ -15,17 +15,17 @@ or written as CASE literals — and re-derives the rest in SQL.
 from __future__ import annotations
 
 import functools
-from collections.abc import Mapping
+import math
+from collections.abc import Callable, Mapping
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .kernels.scripts import RE_NON_LATIN
+from .kernels.scripts import RE_CJK, RE_CYRILLIC, RE_NON_LATIN, RE_THAI
 from .operators.dedup import (exact_dedup, minhash_dup_pairs,
                               minhash_signature, simhash_dup_pairs)
 from .operators.spatial import (assign_cells, cell_histogram, knn_cells,
                                 pip_join_rects)
-from .operators.textops import (add_script_flags, fingerprint, lang_id,
-                                quality_score, token_count)
 from .udfs import (make_cascade_udf, udf_country_name, udf_street_abbrev,
                    udf_unaccent)
 
@@ -117,9 +117,12 @@ FROM v ORDER BY id
 
 def q_script_flags(spark, sf_dir):
     """P1-P4 script classifiers as JVM predicates."""
-    d = _t(spark, sf_dir, "documents")
-    return add_script_flags(d).select("doc_id", "is_latin", "has_cjk",
-                                      "has_cyrillic", "has_thai")
+    c = F.col("text")
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", (~c.rlike(RE_NON_LATIN)).alias("is_latin"),
+        c.rlike(RE_CJK).alias("has_cjk"),
+        c.rlike(RE_CYRILLIC).alias("has_cyrillic"),
+        c.rlike(RE_THAI).alias("has_thai"))
 
 
 Q_SCRIPT_FLAGS_SQL = f"""
@@ -129,200 +132,6 @@ SELECT doc_id,
   regexp_matches(text, '{RE_CYR_DUCK}') AS has_cyrillic,
   regexp_matches(text, '{RE_THAI_DUCK}') AS has_thai
 FROM documents
-"""
-
-
-def q_lang_profile(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return (d.select(lang_id(F.col("text")).alias("lid"))
-            .groupBy("lid").agg(F.count("*").alias("n")))
-
-
-_LANG_HITS_SQL = r"""len(regexp_extract_all(lower(text), '\b(der|die|das|und|straße|platz)\b')) AS de_h,
-  len(regexp_extract_all(lower(text), '\b(le|la|les|rue|avenue|de la)\b')) AS fr_h,
-  len(regexp_extract_all(lower(text), '\b(the|street|road|of|and)\b')) AS en_h"""
-
-_LANG_CASE_SQL = f"""CASE
-  WHEN regexp_matches(text, '{RE_CJK_DUCK}') THEN 'cjk'
-  WHEN regexp_matches(text, '{RE_THAI_DUCK}') THEN 'th'
-  WHEN regexp_matches(text, '{RE_CYR_DUCK}') THEN 'cyrillic'
-  WHEN regexp_matches(text, '{RE_NON_LATIN_DUCK}') THEN 'other'
-  WHEN de_h > fr_h AND de_h > en_h THEN 'de'
-  WHEN fr_h > en_h THEN 'fr'
-  WHEN en_h > 0 THEN 'en'
-  ELSE 'latin' END"""
-
-Q_LANG_PROFILE_SQL = f"""
-WITH h AS (SELECT text, {_LANG_HITS_SQL} FROM documents)
-SELECT {_LANG_CASE_SQL} AS lid, COUNT(*) AS n
-FROM h GROUP BY 1
-"""
-
-
-def q_quality_tokens(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    tok = token_count(F.col("text"))
-    return d.select("doc_id",
-                    tok.getField("words").alias("words"),
-                    tok.getField("subwords").alias("subwords"),
-                    quality_score(F.col("text")).alias("quality"),
-                    fingerprint(F.col("text")).alias("fp"))
-
-
-Q_QUALITY_TOKENS_SQL = rf"""
-WITH n AS (SELECT doc_id, text, {_NORM_SQL} AS t FROM documents),
-m AS (SELECT doc_id, t,
-  CAST(length(text) AS DOUBLE) AS ln,
-  CAST(length(regexp_replace(text, '[^\p{{L}}]', '', 'g')) AS DOUBLE) AS alpha,
-  CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) AS punct,
-  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digit
-  FROM n),
-s AS (SELECT doc_id, t,
-  LEAST(ln / 200.0, 1.0) AS len_score,
-  CASE WHEN ln > 0 THEN alpha / ln ELSE 0.0 END AS alpha_ratio,
-  CASE WHEN ln > 0 THEN LEAST(punct / ln * 4.0, 1.0) ELSE 0.0 END AS punct_pen,
-  CASE WHEN ln > 0 THEN LEAST(digit / ln * 2.0, 1.0) ELSE 0.0 END AS digit_pen
-  FROM m)
-SELECT doc_id,
-  CAST(CASE WHEN length(t) = 0 THEN 0
-       ELSE array_length(string_split(t, ' ')) END AS BIGINT) AS words,
-  CAST(ceil(length(t) / 4.0) AS BIGINT) AS subwords,
-  floor((0.3 * len_score + 0.5 * alpha_ratio
-         + 0.2 * (1.0 - punct_pen) * (1.0 - digit_pen)) * 1000000.0)
-    / 1000000.0 AS quality,
-  substr(md5(t), 1, 16) AS fp
-FROM s
-"""
-
-
-def q_gopher_quality(spark, sf_dir):
-    """Gopher-rule pretraining quality signals (words, mean word length,
-    symbol/bullet/ellipsis/alpha fractions + combined pass flag) — all
-    JVM expressions, each ratio floor-truncated for exact cross-engine
-    parity."""
-    from .operators.textops import add_gopher_flags
-    d = add_gopher_flags(_t(spark, sf_dir, "documents"), "text", "q")
-    g = F.col("q")
-    return d.select("doc_id", g.getField("words").alias("words"),
-                    g.getField("mean_word_len").alias("mean_word_len"),
-                    g.getField("symbol_ratio").alias("symbol_ratio"),
-                    g.getField("bullet_frac").alias("bullet_frac"),
-                    g.getField("ellipsis_frac").alias("ellipsis_frac"),
-                    g.getField("alpha_word_frac").alias("alpha_word_frac"),
-                    g.getField("gopher_pass").alias("gopher_pass"))
-
-
-def _gopher_sql(src: str) -> str:
-    """CTE chain ``w``/``w2``/``m`` computing the Gopher quality signals
-    from ``src`` (must expose doc_id, text, t), as used by
-    Q_GOPHER_QUALITY_SQL.  Line metrics run on \\r/LS/PS/NEL-stripped
-    text, matching the engine (Java (?m) anchors at those terminators,
-    RE2 only at \\n)."""
-    return rf"""
-w AS (SELECT doc_id, text, t,
-  CAST(CASE WHEN length(t) = 0 THEN 0
-       ELSE len(string_split(t, ' ')) END AS BIGINT) AS words,
-  CAST(length(replace(t, ' ', '')) AS DOUBLE) AS word_chars,
-  CAST(len(regexp_extract_all(text, '[#…]')) AS DOUBLE) AS symbols,
-  regexp_replace(text, '[\r\x{{2028}}\x{{2029}}\x{{0085}}]', '', 'g') AS tl
-  FROM {src}),
-w2 AS (SELECT *,
-  CAST(len(string_split(tl, chr(10))) AS DOUBLE) AS n_lines,
-  CAST(len(regexp_extract_all(tl, '(?m)^[ \t]*[-*•]')) AS DOUBLE)
-    AS bullet_lines,
-  CAST(len(regexp_extract_all(tl, '(?m)(\.\.\.|…)[ \t]*$')) AS DOUBLE)
-    AS ellipsis_lines,
-  CAST(len(regexp_extract_all(' ' || t, ' [^ ]*\p{{L}}')) AS DOUBLE)
-    AS alpha_words
-  FROM w),
-m AS (SELECT doc_id, text, t, words,
-  CASE WHEN words > 0 THEN floor(word_chars / words * 1000000.0) / 1000000.0
-       ELSE 0.0 END AS mean_word_len,
-  CASE WHEN words > 0 THEN floor(symbols / words * 1000000.0) / 1000000.0
-       ELSE 0.0 END AS symbol_ratio,
-  floor(bullet_lines / n_lines * 1000000.0) / 1000000.0 AS bullet_frac,
-  floor(ellipsis_lines / n_lines * 1000000.0) / 1000000.0 AS ellipsis_frac,
-  CASE WHEN words > 0 THEN
-    floor(alpha_words / words * 1000000.0) / 1000000.0
-    ELSE 0.0 END AS alpha_word_frac
-  FROM w2)"""
-
-
-_GOPHER_PASS_SQL = (
-    "(words >= 3 AND mean_word_len >= 1.0 AND mean_word_len <= 12.0 "
-    "AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9 "
-    "AND ellipsis_frac <= 0.3 AND alpha_word_frac >= 0.6)")
-
-Q_GOPHER_QUALITY_SQL = rf"""
-WITH n AS (SELECT doc_id, text, {_NORM_SQL} AS t FROM documents),
-{_gopher_sql('n')}
-SELECT doc_id, words, mean_word_len, symbol_ratio, bullet_frac,
-  ellipsis_frac, alpha_word_frac,
-  {_GOPHER_PASS_SQL} AS gopher_pass
-FROM m
-"""
-
-
-def q_repetition(spark, sf_dir):
-    """Duplicate word-n-gram fractions (the Gopher repetition filter) —
-    measured on the raw text AND a self-concatenation (provably
-    repetitive), as pure array expressions."""
-    from .operators.textops import repetition_ratio
-    d = _t(spark, sf_dir, "documents")
-    doubled = F.concat(F.col("text"), F.lit(" "), F.col("text"))
-    return d.select("doc_id",
-                    repetition_ratio(F.col("text"), 2).alias("rep2"),
-                    repetition_ratio(doubled, 2).alias("rep2_doubled"),
-                    repetition_ratio(F.col("text"), 3).alias("rep3"))
-
-
-def _rep_sql(src: str, n: int) -> str:
-    gram = " || ' ' || ".join(f"ws[i + {j}]" for j in range(n))
-    return f"""(
-  SELECT CASE WHEN len(ws) - {n - 1} >= 1 THEN
-    floor(CAST(len(ws) - {n - 1}
-           - len(list_distinct(list_transform(
-               generate_series(1, len(ws) - {n - 1}), i -> {gram})))
-          AS DOUBLE) / (len(ws) - {n - 1}) * 1000000.0) / 1000000.0
-    ELSE 0.0 END
-  FROM (SELECT string_split({src}, ' ') AS ws))"""
-
-
-Q_REPETITION_SQL = rf"""
-WITH n AS (SELECT doc_id, {_NORM_SQL} AS t,
-  {_NORM_SQL.replace('text', "(text || ' ' || text)")} AS td
-  FROM documents)
-SELECT doc_id,
-  {_rep_sql('t', 2)} AS rep2,
-  {_rep_sql('td', 2)} AS rep2_doubled,
-  {_rep_sql('t', 3)} AS rep3
-FROM n
-"""
-
-
-def q_clean_text(spark, sf_dir):
-    """Boilerplate strip (URLs, e-mails, whitespace collapse) on a
-    constructed corpus — the oracle re-derives with DuckDB's RE2, an
-    independent regex engine, over the same dialect-portable patterns."""
-    from .operators.textops import clean_text
-    n = _t(spark, sf_dir, "nation")
-    dirty = F.concat(
-        F.lit("See https://x.test/a?b=1&c=%20 and mail "),
-        F.lit("bob.smith+x@ex-ample.co.uk  or http://t.co "),
-        F.col("n_name"), F.lit("   end"))
-    return n.select(F.col("n_nationkey").alias("id"),
-                    clean_text(dirty).alias("cleaned"))
-
-
-Q_CLEAN_TEXT_SQL = r"""
-WITH c AS (SELECT n_nationkey AS id,
-  'See https://x.test/a?b=1&c=%20 and mail bob.smith+x@ex-ample.co.uk  or http://t.co '
-    || n_name || '   end' AS dirty FROM nation)
-SELECT id, trim(regexp_replace(regexp_replace(regexp_replace(dirty,
-  'https?://\S+', ' ', 'g'),
-  '[A-Za-z0-9_.+-]+@[A-Za-z0-9-]+\.[A-Za-z0-9.-]+', ' ', 'g'),
-  '\s+', ' ', 'g')) AS cleaned
-FROM c
 """
 
 
@@ -651,50 +460,6 @@ SELECT a.n_nationkey AS a_id, b.n_nationkey AS b_id,
        levenshtein(a.n_name, b.n_name) AS dist
 FROM nation a JOIN nation b ON a.n_nationkey < b.n_nationkey
 WHERE levenshtein(a.n_name, b.n_name) <= 5
-"""
-
-
-def q_agg_pricing(spark, sf_dir):
-    """A-class aggregations (TPC-H Q1 shape) with exact decimal sums."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (l.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                 .cast("double").alias("sum_qty"),
-                 F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                 .cast("double").alias("sum_base"),
-                 F.sum(F.col("l_discount").cast("decimal(18,4)"))
-                 .cast("double").alias("sum_disc"),
-                 F.count("*").alias("count_order")))
-
-
-Q_AGG_PRICING_SQL = """
-SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-  CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc,
-  COUNT(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_topk_orders(spark, sf_dir):
-    """W5 window top-k per group."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority") \
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-    return (o.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
-            .select("o_orderpriority", "o_orderkey", "o_totalprice", "rank"))
-
-
-Q_TOPK_ORDERS_SQL = """
-SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-    ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-  FROM orders) WHERE rank <= 3
 """
 
 
@@ -1519,74 +1284,6 @@ WHERE abs(dq) + abs(dr) + abs(dq + dr) <= 4 GROUP BY 1
 """
 
 
-
-def q_percentiles(spark, sf_dir):
-    """Per-group exact distribution stats (median/p90 via SQL
-    percentile; interpolation is bit-identical to DuckDB's
-    quantile_cont) — the sketch-input shape for per-cell size/quality
-    monitoring at scale."""
-    o = _t(spark, sf_dir, "orders")
-    return (o.groupBy("o_orderpriority")
-            .agg(F.expr("percentile(o_totalprice, 0.5)").alias("med_price"),
-                 F.expr("percentile(o_totalprice, 0.9)").alias("p90_price"),
-                 F.count("*").alias("n")))
-
-
-Q_PERCENTILES_SQL = """
-SELECT o_orderpriority,
-       quantile_cont(o_totalprice, 0.5) AS med_price,
-       quantile_cont(o_totalprice, 0.9) AS p90_price,
-       COUNT(*) AS n
-FROM orders GROUP BY o_orderpriority
-"""
-
-
-
-def q_cube_revenue(spark, sf_dir):
-    """Grouping-sets coverage (SURVEY §2.4 note): CUBE over
-    priority × orderstatus with exact decimal revenue — Catalyst
-    expands the grouping sets; DuckDB runs the identical CUBE."""
-    o = _t(spark, sf_dir, "orders")
-    return (o.cube("o_orderpriority", "o_orderstatus")
-            .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                 .cast("double").alias("revenue"),
-                 F.count("*").alias("n")))
-
-
-Q_CUBE_REVENUE_SQL = """
-SELECT o_orderpriority, o_orderstatus,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n
-FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-"""
-
-
-def q_running_window(spark, sf_dir):
-    """Window frames beyond top-k: per-user running event count and
-    3-row moving value sum ordered by time (exact decimal arithmetic)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mov = w.rowsBetween(-2, Window.currentRow)
-    return e.select(
-        "event_id", "user_id",
-        F.count("*").over(run).alias("n_so_far"),
-        F.sum(F.col("value").cast("decimal(18,2)")).over(mov)
-        .cast("double").alias("mov_sum"))
-
-
-Q_RUNNING_WINDOW_SQL = """
-SELECT event_id, user_id,
-  COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS UNBOUNDED PRECEDING) AS n_so_far,
-  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-        PARTITION BY user_id ORDER BY ts, event_id
-        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS mov_sum
-FROM events
-"""
-
-
-
 # ------------------------------------------------------------------
 # q_micro_kernels: ONE gate query promoting the six golden-only
 # micro-kernels (P7 gate, P8 langcode, A2 candidate count, W2 tag
@@ -2374,7 +2071,7 @@ FROM t
 # each costs hundreds of deterministic image/audio generations plus
 # encode/decode (including the zlib PNG round-trip), which importing
 # contract.py for bench/tests/entry must not pay.  Their builder
-# FUNCTIONS go into ORACLES and are resolved (once, cached) by
+# FUNCTIONS are the registry's oracles, resolved (once, cached) by
 # resolve_oracles() when a caller actually needs oracle SQL.
 
 
@@ -2461,254 +2158,134 @@ def _audio_dups_sql() -> str:
 Q_AUDIO_DUPS_SQL = _audio_dups_sql()
 
 
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling (corpus-shaping): per-language
-    keep-rates decided by an md5 hash gate on doc_id — replayable
-    across engines/reruns/layouts, zero shuffles (pure filter).  The
-    oracle re-derives the identical gate in DuckDB: fixed-width
-    lowercase hex compares identically as string in both engines."""
-    from .operators.sampling import sample_stratified
-    d = _t(spark, sf_dir, "documents")
-    return sample_stratified(
-        d.select("doc_id", "lang"), id_col="doc_id", strata_col="lang",
-        rates={"en": 0.8, "de": 0.5}, default_rate=0.25, salt="r4")
-
-
-Q_STRATIFIED_SAMPLE_SQL = """
-SELECT doc_id, lang FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':r4'), 1, 8) <
-  CASE lang WHEN 'de' THEN '80000000'
-            WHEN 'en' THEN 'cccccccc'
-            ELSE '40000000' END
-"""
-
-
-def q_pack_shards(spark, sf_dir):
-    """Token-budget shard packing: documents laid out per-language in
-    doc_id order; a document's shard is the budget-cut its START offset
-    falls in (contiguous-token-stream semantics).  One window shuffle
-    on the pack group; oracle is the identical SQL window."""
-    from .operators.sampling import pack_shards
-    d = _t(spark, sf_dir, "documents")
-    return pack_shards(d.select("doc_id", "lang", "n_chars"),
-                       id_col="doc_id", weight_col="n_chars",
-                       budget=4096, group_col="lang")
-
-
-Q_PACK_SHARDS_SQL = """
-WITH c AS (
-  SELECT doc_id, lang, n_chars,
-    CAST(SUM(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      - n_chars AS BIGINT) AS start_offset
-  FROM documents)
-SELECT doc_id, lang, n_chars, start_offset,
-  CAST(FLOOR(start_offset / 4096.0) AS BIGINT) AS shard_id
-FROM c
-"""
-
-
-def q_quantile_gate(spark, sf_dir):
-    """Per-group quantile calibration: each document gated against ITS
-    language's exact interpolating median of n_chars (Spark
-    ``percentile`` ≡ DuckDB ``quantile_cont``, already parity-proven by
-    q_percentiles).  One tiny aggregation broadcast back — the corpus
-    itself is not reshuffled."""
-    from .operators.sampling import quantile_gate
-    d = _t(spark, sf_dir, "documents")
-    return quantile_gate(d.select("doc_id", "lang", "n_chars"),
-                         score_col="n_chars", by_col="lang", q=0.5)
-
-
-Q_QUANTILE_GATE_SQL = """
-WITH th AS (
-  SELECT lang, quantile_cont(n_chars, 0.5) AS threshold
-  FROM documents GROUP BY lang)
-SELECT d.lang, d.doc_id, d.n_chars, th.threshold,
-       d.n_chars >= th.threshold AS keep
-FROM documents d JOIN th USING (lang)
-"""
-
-
 # ------------------------------------------------------------------ registry
 
-QUERIES = {
-    "q_cascade": q_cascade,
-    "q_script_flags": q_script_flags,
-    "q_lang_profile": q_lang_profile,
-    "q_quality_tokens": q_quality_tokens,
-    "q_gopher_quality": q_gopher_quality,
-    "q_repetition": q_repetition,
-    "q_clean_text": q_clean_text,
-    "q_unaccent": q_unaccent,
-    "q_abbrev_ru": q_abbrev_ru,
-    "q_pip_squares": q_pip_squares,
-    "q_pip_cover": q_pip_cover,
-    "q_pip_hexcover": q_pip_hexcover,
-    "q_knn_geo": q_knn_geo,
-    "q_tile_assign": q_tile_assign,
-    "q_cell_histogram": q_cell_histogram,
-    "q_cell_density": q_cell_density,
-    "q_exact_dedup": q_exact_dedup,
-    "q_minhash": q_minhash,
-    "q_levenshtein_pairs": q_levenshtein_pairs,
-    "q_agg_pricing": q_agg_pricing,
-    "q_topk_orders": q_topk_orders,
-    "q_dim_rollup": q_dim_rollup,
-    "q_antijoin_resume": q_antijoin_resume,
-    "q_window_events": q_window_events,
-    "q_localize_documents": q_localize_documents,
-    "q_localize_mixed": q_localize_mixed,
-    "q_simhash_pairs": q_simhash_pairs,
-    "q_minhash_pairs": q_minhash_pairs,
-    "q_abbrev_de": q_abbrev_de,
-    "q_abbrev_en": q_abbrev_en,
-    "q_abbrev_fr": q_abbrev_fr,
-    "q_country_name": q_country_name,
-    "q_placename_bilingual": q_placename_bilingual,
-    "q_combined_quirks": q_combined_quirks,
-    "q_snapshot_compact": q_snapshot_compact,
-    "q_localize_latin": q_localize_latin,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_embedding_dups": q_embedding_dups,
-    "q_session_events": q_session_events,
-    "q_image_features": q_image_features,
-    "q_payload_audit": q_payload_audit,
-    "q_write_tiled": q_write_tiled,
-    "q_image_resize": q_image_resize,
-    "q_frame_sample": q_frame_sample,
-    "q_asof_join": q_asof_join,
-    "q_interval_join": q_interval_join,
-    "q_merge_intervals": q_merge_intervals,
-    "q_radius_join": q_radius_join,
-    "q_polygon_cover": q_polygon_cover,
-    "q_abbrev_uk": q_abbrev_uk,
-    "q_abbrev_all": q_abbrev_all,
-    "q_salted_agg": q_salted_agg,
-    "q_streetname_bilingual": q_streetname_bilingual,
-    "q_sql_registered": q_sql_registered,
-    "q_cell_rollup": q_cell_rollup,
-    "q_hexcell_histogram": q_hexcell_histogram,
-    "q_hexcell_rollup": q_hexcell_rollup,
-    "q_hex_ring_join": q_hex_ring_join,
-    "q_percentiles": q_percentiles,
-    "q_cube_revenue": q_cube_revenue,
-    "q_running_window": q_running_window,
-    "q_translit_cyrillic": q_translit_cyrillic,
-    "q_image_dups": q_image_dups,
-    "q_frame_dups": q_frame_dups,
-    "q_audio_dups": q_audio_dups,
-    "q_dup_components": q_dup_components,
-    "q_stratified_sample": q_stratified_sample,
-    "q_pack_shards": q_pack_shards,
-    "q_quantile_gate": q_quantile_gate,
-    "q_micro_kernels": q_micro_kernels,
-}
+class Query(NamedTuple):
+    """One contract query: the Spark side and its DuckDB oracle — SQL,
+    or a builder returning SQL when the oracle pins replay literals
+    (resolved on first access, see ``resolve_oracles``)."""
+    run: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str]
 
-ORACLES = {
-    "q_dup_components": Q_DUP_COMPONENTS_SQL,
-    "q_stratified_sample": Q_STRATIFIED_SAMPLE_SQL,
-    "q_pack_shards": Q_PACK_SHARDS_SQL,
-    "q_quantile_gate": Q_QUANTILE_GATE_SQL,
-    "q_image_dups": Q_IMAGE_DUPS_SQL,
-    "q_frame_dups": Q_FRAME_DUPS_SQL,
-    "q_audio_dups": Q_AUDIO_DUPS_SQL,
-    # callables = lazily-built replay-literal oracles (see the note at
-    # the builders): resolve_oracles() turns them into SQL on demand
-    "q_image_features": _image_features_sql,
-    "q_payload_audit": _payload_audit_sql,
-    "q_image_resize": _image_resize_sql,
-    "q_frame_sample": _frame_sample_sql,
-    "q_cascade": Q_CASCADE_SQL,
-    "q_script_flags": Q_SCRIPT_FLAGS_SQL,
-    "q_lang_profile": Q_LANG_PROFILE_SQL,
-    "q_quality_tokens": Q_QUALITY_TOKENS_SQL,
-    "q_gopher_quality": Q_GOPHER_QUALITY_SQL,
-    "q_repetition": Q_REPETITION_SQL,
-    "q_clean_text": Q_CLEAN_TEXT_SQL,
-    "q_unaccent": Q_UNACCENT_SQL,
-    "q_abbrev_ru": Q_ABBREV_RU_SQL,
-    "q_pip_squares": Q_PIP_SQUARES_SQL,
-    "q_pip_cover": Q_PIP_SQUARES_SQL,   # same semantics, different physical plan
-    "q_pip_hexcover": Q_PIP_SQUARES_SQL,  # third plan: hex cover equi-join
-    "q_knn_geo": Q_KNN_GEO_SQL,
-    "q_tile_assign": Q_TILE_ASSIGN_SQL,
-    "q_cell_histogram": Q_CELL_HISTOGRAM_SQL,
-    "q_cell_density": Q_CELL_DENSITY_SQL,
-    "q_exact_dedup": Q_EXACT_DEDUP_SQL,
-    "q_minhash": Q_MINHASH_SQL,
-    "q_levenshtein_pairs": Q_LEVENSHTEIN_SQL,
-    "q_agg_pricing": Q_AGG_PRICING_SQL,
-    "q_topk_orders": Q_TOPK_ORDERS_SQL,
-    "q_dim_rollup": Q_DIM_ROLLUP_SQL,
-    "q_antijoin_resume": Q_ANTIJOIN_SQL,
-    "q_window_events": Q_WINDOW_EVENTS_SQL,
-    "q_abbrev_de": Q_ABBREV_DE_SQL,
-    "q_abbrev_en": Q_ABBREV_EN_SQL,
-    "q_abbrev_fr": Q_ABBREV_FR_SQL,
-    "q_country_name": Q_COUNTRY_NAME_SQL,
-    "q_placename_bilingual": Q_PLACENAME_BILINGUAL_SQL,
-    "q_combined_quirks": Q_COMBINED_QUIRKS_SQL,
-    "q_snapshot_compact": Q_SNAPSHOT_COMPACT_SQL,
-    "q_localize_latin": Q_LOCALIZE_LATIN_SQL,
-    "q_ngram_jaccard": Q_NGRAM_JACCARD_SQL,
-    "q_embedding_dups": Q_EMBEDDING_DUPS_SQL,
-    "q_session_events": Q_SESSION_EVENTS_SQL,
-    "q_asof_join": Q_ASOF_JOIN_SQL,
-    "q_interval_join": Q_INTERVAL_JOIN_SQL,
-    "q_merge_intervals": Q_MERGE_INTERVALS_SQL,
-    "q_radius_join": Q_RADIUS_JOIN_SQL,
-    "q_polygon_cover": Q_POLYGON_COVER_SQL,
-    "q_abbrev_uk": Q_ABBREV_UK_SQL,
-    "q_abbrev_all": Q_ABBREV_ALL_SQL,
-    "q_salted_agg": Q_SALTED_AGG_SQL,
-    "q_streetname_bilingual": Q_STREETNAME_BILINGUAL_SQL,
-    "q_sql_registered": Q_SQL_REGISTERED_SQL,
-    "q_cell_rollup": Q_CELL_ROLLUP_SQL,
-    "q_hexcell_histogram": Q_HEXCELL_HISTOGRAM_SQL,
-    "q_hexcell_rollup": _hex_rollup_sql,
-    "q_hex_ring_join": Q_HEX_RING_JOIN_SQL,
-    "q_minhash_pairs": Q_MINHASH_PAIRS_SQL,
-    "q_simhash_pairs": Q_SIMHASH_PAIRS_SQL,
-    "q_localize_mixed": Q_LOCALIZE_MIXED_SQL,
-    "q_localize_documents": Q_LOCALIZE_DOCUMENTS_SQL,
-    "q_write_tiled": Q_WRITE_TILED_SQL,
-    "q_percentiles": Q_PERCENTILES_SQL,
-    "q_cube_revenue": Q_CUBE_REVENUE_SQL,
-    "q_running_window": Q_RUNNING_WINDOW_SQL,
-    "q_translit_cyrillic": Q_TRANSLIT_CYRILLIC_SQL,
-    "q_micro_kernels": _micro_kernels_sql,
+
+REGISTRY: dict[str, Query] = {
+    "q_cascade": Query(q_cascade, Q_CASCADE_SQL),
+    "q_script_flags": Query(q_script_flags, Q_SCRIPT_FLAGS_SQL),
+    "q_unaccent": Query(q_unaccent, Q_UNACCENT_SQL),
+    "q_abbrev_ru": Query(q_abbrev_ru, Q_ABBREV_RU_SQL),
+    "q_pip_squares": Query(q_pip_squares, Q_PIP_SQUARES_SQL),
+    # the same oracle for three physical plans: rect join, polygon
+    # cover join, hex cover equi-join
+    "q_pip_cover": Query(q_pip_cover, Q_PIP_SQUARES_SQL),
+    "q_pip_hexcover": Query(q_pip_hexcover, Q_PIP_SQUARES_SQL),
+    "q_knn_geo": Query(q_knn_geo, Q_KNN_GEO_SQL),
+    "q_tile_assign": Query(q_tile_assign, Q_TILE_ASSIGN_SQL),
+    "q_cell_histogram": Query(q_cell_histogram, Q_CELL_HISTOGRAM_SQL),
+    "q_cell_density": Query(q_cell_density, Q_CELL_DENSITY_SQL),
+    "q_exact_dedup": Query(q_exact_dedup, Q_EXACT_DEDUP_SQL),
+    "q_minhash": Query(q_minhash, Q_MINHASH_SQL),
+    "q_levenshtein_pairs": Query(q_levenshtein_pairs, Q_LEVENSHTEIN_SQL),
+    "q_dim_rollup": Query(q_dim_rollup, Q_DIM_ROLLUP_SQL),
+    "q_antijoin_resume": Query(q_antijoin_resume, Q_ANTIJOIN_SQL),
+    "q_window_events": Query(q_window_events, Q_WINDOW_EVENTS_SQL),
+    "q_localize_documents": Query(q_localize_documents,
+                                  Q_LOCALIZE_DOCUMENTS_SQL),
+    "q_localize_mixed": Query(q_localize_mixed, Q_LOCALIZE_MIXED_SQL),
+    "q_simhash_pairs": Query(q_simhash_pairs, Q_SIMHASH_PAIRS_SQL),
+    "q_minhash_pairs": Query(q_minhash_pairs, Q_MINHASH_PAIRS_SQL),
+    "q_abbrev_de": Query(q_abbrev_de, Q_ABBREV_DE_SQL),
+    "q_abbrev_en": Query(q_abbrev_en, Q_ABBREV_EN_SQL),
+    "q_abbrev_fr": Query(q_abbrev_fr, Q_ABBREV_FR_SQL),
+    "q_country_name": Query(q_country_name, Q_COUNTRY_NAME_SQL),
+    "q_placename_bilingual": Query(q_placename_bilingual,
+                                   Q_PLACENAME_BILINGUAL_SQL),
+    "q_combined_quirks": Query(q_combined_quirks, Q_COMBINED_QUIRKS_SQL),
+    "q_snapshot_compact": Query(q_snapshot_compact, Q_SNAPSHOT_COMPACT_SQL),
+    "q_localize_latin": Query(q_localize_latin, Q_LOCALIZE_LATIN_SQL),
+    "q_ngram_jaccard": Query(q_ngram_jaccard, Q_NGRAM_JACCARD_SQL),
+    "q_embedding_dups": Query(q_embedding_dups, Q_EMBEDDING_DUPS_SQL),
+    "q_session_events": Query(q_session_events, Q_SESSION_EVENTS_SQL),
+    "q_image_features": Query(q_image_features, _image_features_sql),
+    "q_payload_audit": Query(q_payload_audit, _payload_audit_sql),
+    "q_write_tiled": Query(q_write_tiled, Q_WRITE_TILED_SQL),
+    "q_image_resize": Query(q_image_resize, _image_resize_sql),
+    "q_frame_sample": Query(q_frame_sample, _frame_sample_sql),
+    "q_asof_join": Query(q_asof_join, Q_ASOF_JOIN_SQL),
+    "q_interval_join": Query(q_interval_join, Q_INTERVAL_JOIN_SQL),
+    "q_merge_intervals": Query(q_merge_intervals, Q_MERGE_INTERVALS_SQL),
+    "q_radius_join": Query(q_radius_join, Q_RADIUS_JOIN_SQL),
+    "q_polygon_cover": Query(q_polygon_cover, Q_POLYGON_COVER_SQL),
+    "q_abbrev_uk": Query(q_abbrev_uk, Q_ABBREV_UK_SQL),
+    "q_abbrev_all": Query(q_abbrev_all, Q_ABBREV_ALL_SQL),
+    "q_salted_agg": Query(q_salted_agg, Q_SALTED_AGG_SQL),
+    "q_streetname_bilingual": Query(q_streetname_bilingual,
+                                    Q_STREETNAME_BILINGUAL_SQL),
+    "q_sql_registered": Query(q_sql_registered, Q_SQL_REGISTERED_SQL),
+    "q_cell_rollup": Query(q_cell_rollup, Q_CELL_ROLLUP_SQL),
+    "q_hexcell_histogram": Query(q_hexcell_histogram, Q_HEXCELL_HISTOGRAM_SQL),
+    "q_hexcell_rollup": Query(q_hexcell_rollup, _hex_rollup_sql),
+    "q_hex_ring_join": Query(q_hex_ring_join, Q_HEX_RING_JOIN_SQL),
+    "q_translit_cyrillic": Query(q_translit_cyrillic, Q_TRANSLIT_CYRILLIC_SQL),
+    "q_image_dups": Query(q_image_dups, Q_IMAGE_DUPS_SQL),
+    "q_frame_dups": Query(q_frame_dups, Q_FRAME_DUPS_SQL),
+    "q_audio_dups": Query(q_audio_dups, Q_AUDIO_DUPS_SQL),
+    "q_dup_components": Query(q_dup_components, Q_DUP_COMPONENTS_SQL),
+    "q_micro_kernels": Query(q_micro_kernels, _micro_kernels_sql),
 }
 
 
 @functools.lru_cache(maxsize=None)
 def _resolve_oracle(name: str) -> str:
-    v = ORACLES[name]
+    v = REGISTRY[name].oracle
     return v() if callable(v) else v
 
 
 class _Oracles(Mapping):
-    """ORACLES as a read-only mapping that resolves each callable entry
-    to its SQL string on first access (cached): the per-query gate pays
-    the replay-literal generation cost once per process, and a broken
-    builder fails only its own query."""
+    """The registry's oracles as a read-only mapping that resolves each
+    builder to its SQL string on first access (cached): the per-query
+    gate pays the replay-literal generation cost once per process, and
+    a broken builder fails only its own query."""
 
     def __getitem__(self, name: str) -> str:
         return _resolve_oracle(name)
 
     def __contains__(self, name) -> bool:
-        return name in ORACLES
+        return name in REGISTRY
 
     def __iter__(self):
-        return iter(ORACLES)
+        return iter(REGISTRY)
 
     def __len__(self) -> int:
-        return len(ORACLES)
+        return len(REGISTRY)
 
 
 def resolve_oracles() -> Mapping[str, str]:
     """Oracle SQL by query name, built per query on access."""
     return _Oracles()
+
+
+# ------------------------------------------------------------------ compare
+
+# the parquet tables the oracles read, one DuckDB view each
+TABLES = ["region", "nation", "customer", "orders", "events", "documents",
+          "embeddings"]
+
+
+def _norm_cell(v):
+    if isinstance(v, float):
+        return "nan" if math.isnan(v) else f"{v!r}"
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return v
+
+
+def norm_rows(cols, rows) -> list[tuple]:
+    """``rows`` as the gate compares them: columns ordered by their
+    lower-cased name, rows sorted, floats by ``repr`` (NaN as 'nan'),
+    dates and timestamps as ISO strings."""
+    cols = [c.lower() for c in cols]
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001"):

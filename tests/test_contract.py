@@ -1,17 +1,14 @@
 """Replicates the driver's correctness gate locally: every queries()
-entry runs on Spark at sf0.001 and, where an oracle exists, must match
-DuckDB row-for-row (order-insensitive, columns sorted by name, values
+entry runs on Spark at sf0.001 and must match its DuckDB oracle
+row-for-row (order-insensitive, columns sorted by name, values
 normalized the way a value-hash would see them)."""
-import math
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from osml10n_spark.contract import TABLES, norm_rows
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -23,39 +20,19 @@ def duck():
     con.close()
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v!r}"
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
-
-
-def _norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
-
-
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))
 def test_query_runs_and_matches_oracle(spark, duck, name):
     q = entrymod.queries()[name]
     sdf = q(spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-    assert len(srows) >= 0          # runs
-    sql = entrymod.oracle_sql().get(name)
-    if sql is None:
-        assert len(srows) > 0       # rows-only check
-        return
-    res = duck.sql(sql)
+    res = duck.sql(entrymod.oracle_sql()[name])
     dcols = res.columns
     drows = res.fetchall()
     assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols), \
         (scols, dcols)
-    left = _norm_rows([c.lower() for c in scols], srows)
-    right = _norm_rows([c.lower() for c in dcols], drows)
+    left = norm_rows(scols, srows)
+    right = norm_rows(dcols, drows)
     assert len(left) == len(right), (name, len(left), len(right))
     mism = [i for i, (a, b) in enumerate(zip(left, right)) if a != b]
     assert not mism, (name, [(left[i], right[i]) for i in mism[:3]])
@@ -115,11 +92,11 @@ def test_entry_smoke(spark):
 
 
 def test_every_query_has_an_oracle():
-    """A query whose oracle entry goes missing would fall back to the
-    rows-only check above; the two registries must name the same
-    queries."""
-    from osml10n_spark import contract
-    assert set(contract.QUERIES) == set(contract.ORACLES)
+    """Spark-free check of the driver interface: queries() and
+    oracle_sql() name the same 57 queries."""
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    assert set(qs) == set(oracles)
+    assert len(qs) == len(oracles) == 57
 
 
 def test_broken_oracle_fails_only_its_own_query(monkeypatch):
@@ -130,10 +107,11 @@ def test_broken_oracle_fails_only_its_own_query(monkeypatch):
     def broken():
         raise FileNotFoundError("no boundaries")
 
-    monkeypatch.setitem(contract.ORACLES, "q_broken", broken)
+    monkeypatch.setitem(contract.REGISTRY, "q_broken",
+                        contract.Query(contract.q_abbrev_de, broken))
     oracles = entrymod.oracle_sql()
-    assert "q_broken" in oracles and len(oracles) == len(contract.ORACLES)
-    assert oracles.get("q_abbrev_de") == contract.ORACLES["q_abbrev_de"]
+    assert "q_broken" in oracles and len(oracles) == len(contract.REGISTRY)
+    assert oracles.get("q_abbrev_de") == contract.REGISTRY["q_abbrev_de"].oracle
     with pytest.raises(FileNotFoundError):
         oracles.get("q_broken")
     assert oracles.get("q_no_such_query") is None
@@ -141,7 +119,7 @@ def test_broken_oracle_fails_only_its_own_query(monkeypatch):
 
 def test_coverage_names_only_registered_queries():
     """Doc drift guard (no Spark session): every bold **q_…** query
-    name in COVERAGE.md must be a key of contract.QUERIES, so a query
+    name in COVERAGE.md must be a key of contract.REGISTRY, so a query
     that leaves the registry takes its coverage rows with it."""
     import re
     from pathlib import Path
@@ -150,4 +128,4 @@ def test_coverage_names_only_registered_queries():
     text = (Path(__file__).resolve().parents[1] / "COVERAGE.md").read_text()
     named = set(re.findall(r"\*\*(q_[a-z0-9_]+)\*\*", text))
     assert named
-    assert sorted(named - set(contract.QUERIES)) == []
+    assert sorted(named - set(contract.REGISTRY)) == []

@@ -1,5 +1,5 @@
 """Operator tests: kNN (cell path vs brute force), dedup family,
-textops, sampling, temporal joins, multimodal plumbing."""
+temporal joins, multimodal plumbing."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -10,8 +10,6 @@ from osml10n_spark.operators.dedup import (
     embedding_dups)
 from osml10n_spark.operators.spatial import (
     assign_cells, assign_country, cell_histogram, knn_cells, knn_geo)
-from osml10n_spark.operators.textops import add_script_flags, lang_id, \
-    quality_score, token_count, fingerprint
 from osml10n_spark.operators.multimodal import image_features, verify_payload
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -434,18 +432,6 @@ def test_embedding_dups_blocked_matches_brute(spark):
     assert blocked == brute and len(brute) >= 20
 
 
-def test_textops(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = add_script_flags(docs).withColumn("lid", lang_id(F.col("text"))) \
-        .withColumn("q", quality_score(F.col("text"))) \
-        .withColumn("tok", token_count(F.col("text"))) \
-        .withColumn("fp", fingerprint(F.col("text")))
-    rows = out.collect()
-    assert all(0.0 <= r.q <= 1.0 for r in rows)
-    assert all(len(r.fp) == 16 for r in rows)
-    assert all(r.tok.words >= 1 for r in rows if r.text.strip())
-
-
 def test_multimodal_features(spark):
     from osml10n_spark.sources.datagen import generate_images
     imgs = generate_images(spark, 60, seed=5)
@@ -688,55 +674,6 @@ def test_radius_join_wide_radius_covers(spark):
     assert (1, 3) not in got          # 170° > 120°
 
 
-def test_gopher_flags_and_repetition(spark):
-    from osml10n_spark.operators.textops import (clean_text, gopher_flags,
-                                                 repetition_ratio)
-    rows = [
-        (1, "The quick brown fox jumps over the lazy dog near the river"),
-        (2, "spam spam spam spam spam spam spam spam"),
-        (3, "- one\n- two\n- three"),
-        (4, "####### ## #"),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    g = gopher_flags(F.col("text"))
-    out = {r.doc_id: r for r in df.select(
-        "doc_id", g.alias("g"),
-        repetition_ratio(F.col("text"), 2).alias("rep2")).collect()}
-    assert out[1].g.gopher_pass is True and out[1].rep2 == 0.0
-    assert out[2].rep2 > 0.8                       # 7 bigrams, 1 distinct
-    assert out[3].g.bullet_frac == 1.0 and out[3].g.gopher_pass is False
-    assert out[4].g.symbol_ratio > 0.1 and out[4].g.gopher_pass is False
-    assert out[5].g.words == 0 and out[5].rep2 == 0.0
-
-    cleaned = df.filter(F.col("doc_id") == 1).select(
-        clean_text(F.concat(F.lit("go to https://a.b/c x@y.zz  "),
-                            F.col("text"))).alias("c")).first().c
-    assert cleaned.startswith("go to The quick")
-    assert "https" not in cleaned and "@" not in cleaned
-
-
-def test_add_gopher_flags_matches_column_form(spark):
-    """The Generate-barrier form (add_gopher_flags) and the single-
-    Column form (gopher_flags) are the same derivation — every field
-    bit-identical on real corpus text plus the edge rows (empty text,
-    bullets, symbol spam, NULL)."""
-    from osml10n_spark.operators.textops import add_gopher_flags, \
-        gopher_flags
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").unionByName(spark.createDataFrame(
-            [(9001, ""), (9002, "- a\n- b"), (9003, "## # ##"),
-             (9004, None)], "doc_id long, text string"))
-    col_form = docs.select("doc_id",
-                           gopher_flags(F.col("text")).alias("quality"))
-    df_form = add_gopher_flags(docs).select("doc_id", "quality")
-    a = {r.doc_id: r.quality for r in col_form.collect()}
-    b = {r.doc_id: r.quality for r in df_form.collect()}
-    assert set(a) == set(b) and len(a) > 100
-    for k in a:
-        assert a[k] == b[k], f"doc {k}: {a[k]} != {b[k]}"
-
-
 def test_multimodal_resize(spark):
     """Bilinear resize: same-format re-encode round-trips, constant
     images stay exact, downscaled gradients stay close (PSNR)."""
@@ -838,71 +775,3 @@ def test_audio_dup_pairs_matches_kernel_ground_truth(spark):
             for a, b in itertools.combinations(sorted(fp), 2)
             if bin((fp[a] ^ fp[b]) & ((1 << 64) - 1)).count("1") <= 4}
     assert want and got == want
-
-
-def test_sample_stratified_deterministic_and_rate(spark):
-    # the md5 gate is replayable (two runs identical), respects strata
-    # rates to within binomial noise, and is a pure filter (no shuffle)
-    import hashlib
-
-    from osml10n_spark.operators.sampling import sample_stratified
-    rows = [(i, "en" if i % 3 else "de") for i in range(3000)]
-    df = spark.createDataFrame(rows, "id long, lang string")
-    out = sample_stratified(df, "id", "lang",
-                            rates={"en": 0.5, "de": 0.1}, salt="s")
-    got = {(r.id, r.lang) for r in out.collect()}
-    assert got == {(r.id, r.lang) for r in out.collect()}  # replayable
-    # python replay of the exact gate
-    def keep(i, rate):
-        h = hashlib.md5(f"{i}:s".encode()).hexdigest()[:8]
-        return h < format(min(int(rate * 2**32), 2**32 - 1), "08x")
-    want = {(i, l) for i, l in rows if keep(i, 0.5 if l == "en" else 0.1)}
-    assert got == want
-    n_en = sum(1 for _, l in got if l == "en")
-    n_de = sum(1 for _, l in got if l == "de")
-    assert abs(n_en / 2000 - 0.5) < 0.05 and abs(n_de / 1000 - 0.1) < 0.04
-    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
-
-
-def test_sample_stratified_edge_rates(spark):
-    from osml10n_spark.operators.sampling import sample_stratified
-    df = spark.createDataFrame([(i, "x") for i in range(200)],
-                               "id long, lang string")
-    assert sample_stratified(df, "id", "lang", rates={"x": 1.0}).count() == 200
-    assert sample_stratified(df, "id", "lang", rates={"x": 0.0}).count() == 0
-    # unknown stratum takes default_rate
-    assert sample_stratified(df, "id", "lang", rates={"y": 1.0},
-                             default_rate=0.0).count() == 0
-    with pytest.raises(ValueError):
-        sample_stratified(df, "id", "lang", rates={"x": 1.5})
-
-
-def test_pack_shards_stream_offsets(spark):
-    from osml10n_spark.operators.sampling import pack_shards
-    rows = [(1, "a", 100), (2, "a", 50), (3, "a", 80), (4, "b", 300),
-            (5, "b", 10)]
-    df = spark.createDataFrame(rows, "id long, g string, w long")
-    got = {r.id: (r.start_offset, r.shard_id)
-           for r in pack_shards(df, "id", "w", budget=128,
-                                group_col="g").collect()}
-    # group a stream: offsets 0,100,150 → shards 0,0,1
-    # group b stream: offsets 0,300   → shards 0,2 (big doc keeps its
-    # start shard; next doc starts past it)
-    assert got == {1: (0, 0), 2: (100, 0), 3: (150, 1),
-                   4: (0, 0), 5: (300, 2)}
-    with pytest.raises(ValueError):
-        pack_shards(df, "id", "w", budget=0, group_col="g")
-    with pytest.warns(UserWarning):
-        pack_shards(df, "id", "w", budget=128)  # global window warns
-
-
-def test_quantile_gate_per_group_median(spark):
-    from osml10n_spark.operators.sampling import quantile_gate
-    rows = [(1, "a", 10.0), (2, "a", 20.0), (3, "a", 30.0),
-            (4, "b", 100.0), (5, "b", 200.0)]
-    df = spark.createDataFrame(rows, "id long, g string, s double")
-    out = {r.id: (r.threshold, r.keep)
-           for r in quantile_gate(df, "s", "g", q=0.5).collect()}
-    assert out[1] == (20.0, False) and out[2] == (20.0, True) \
-        and out[3] == (20.0, True)
-    assert out[4] == (150.0, False) and out[5] == (150.0, True)

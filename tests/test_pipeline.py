@@ -87,15 +87,22 @@ def test_cells_and_tiles_populated(spark, images):
                                            ("es", True), ("pt", True)])
 def test_localize_language_matrix(spark, images, target, street):
     """Spark-vs-kernel parity across target languages and both entry
-    points (place/street) — the de/placename case is covered above."""
+    points (place/street) — the de/placename case is covered above.
+    One extra row with NULL tags localizes to ''."""
     from osml10n_spark.kernels import (get_placename_from_tags,
                                        get_streetname_from_tags)
-    out = localize(images, target, is_street=street) \
+    null_tags = images.limit(1).withColumn("image_id", F.lit("null-tags")) \
+        .withColumn("tags", F.lit(None).cast("map<string,string>"))
+    out = localize(images.unionByName(null_tags), target, is_street=street) \
         .select("image_id", "tags", "lon", "lat", "caption_l10n")
     fn = get_streetname_from_tags if street else get_placename_from_tags
     sep = " - " if street else "\n"
     bad = []
-    for r in out.collect():
+    rows = out.collect()
+    assert [r.caption_l10n for r in rows if r.tags is None] == [""]
+    for r in rows:
+        if r.tags is None:
+            continue
         exp = fn(r.image_id, dict(r.tags), False, sep, target,
                  [r.lon, r.lat, r.lon, r.lat])
         if exp != r.caption_l10n:

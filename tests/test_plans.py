@@ -311,33 +311,18 @@ def test_headline_pipelines_compile_under_wholestage_codegen(spark):
     """No silent interpreted fallback on the localization pipelines:
     with spark.sql.codegen.fallback=false a janino failure ("Code grows
     beyond 64 KB") becomes a hard error instead of a silent
-    constant-factor tax.  Regression this pins: the single-Column
-    gopher_flags expression inlined to ~500 KB of generated code, so
-    the Gopher quality stage (q_gopher_quality) must COMPILE, not
-    merely run — as must every stage of the mixed-script cascade
+    constant-factor tax.  Every stage of the mixed-script cascade
     (q_localize_mixed) and of the flagship documents pipeline with
-    cell and tile ids (q_localize_documents)."""
-    from osml10n_spark.contract import QUERIES
+    cell and tile ids (q_localize_documents) must COMPILE, not merely
+    run."""
+    from osml10n_spark.contract import REGISTRY
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        for q in ("q_gopher_quality", "q_localize_mixed",
-                  "q_localize_documents"):
-            rows = QUERIES[q](spark, SF).collect()
+        for q in ("q_localize_mixed", "q_localize_documents"):
+            rows = REGISTRY[q].run(spark, SF).collect()
             assert rows, f"{q} returned no rows"
     finally:
         spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-def test_add_gopher_flags_plan_shape(spark):
-    """The Generate-barrier form adds no exchange and no Python island:
-    the raw-count struct rides a codegen-native explode."""
-    from osml10n_spark.operators.textops import add_gopher_flags
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    out = add_gopher_flags(docs).select("doc_id", "quality")
-    assert exchange_count(out) == 0
-    assert python_eval_count(out) == 0
-    from osml10n_spark.plans.inspect import physical_plan
-    assert "Generate explode" in physical_plan(out, mode="simple")
 
 
 def _localized_job_input(spark, staged):

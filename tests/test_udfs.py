@@ -155,6 +155,23 @@ def test_deferred_tail_equals_kernel_rerun():
                     == _kernel(mode, maps, last, None)), (mode, last)
 
 
+def test_null_and_malformed_tags_have_defined_results():
+    """NULL tags and a string that is not JSON give '' in every mode;
+    an empty map, a target-tag map and a null-valued name equal the
+    kernel."""
+    well_formed = ['{}', '{"name:de":"X"}', '{"name":null}']
+    tags = [None] + well_formed + ["not json"]
+    n = len(tags)
+    for mode in _MODES:
+        udfs._STATE.clear()
+        got = list(udfs.make_cascade_udf(mode, "de").func(
+            pd.Series(tags), pd.Series([TOKYO[0]] * n),
+            pd.Series([TOKYO[1]] * n)))
+        want = _kernel(mode, [json.loads(t) for t in well_formed])
+        assert got == [""] + want + [""], mode
+        assert want == ["", "X", ""], mode
+
+
 def _from_workers(spark, udf) -> set:
     """The distinct values ``udf`` returns over 8 rows in 4 partitions."""
     return {r[0] for r in spark.range(8).repartition(4).select(udf("id")).collect()}
