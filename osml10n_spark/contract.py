@@ -8,7 +8,7 @@ sides (deterministic point/rect synthesis from integer keys, exact
 decimal aggregation before double casts, floor-truncation instead of
 round, md5-based portable hashing).  Every query has an oracle:
 where the Spark side runs a kernel with no SQL equivalent (pixel
-decoding, phash, audio fingerprints, transliteration) the oracle pins
+decoding, phash, transliteration) the oracle pins
 literal values — computed driver-side by the same pure-python kernels,
 or written as CASE literals — and re-derives the rest in SQL.
 """
@@ -22,8 +22,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .kernels.scripts import RE_CJK, RE_CYRILLIC, RE_NON_LATIN, RE_THAI
-from .operators.dedup import (exact_dedup, minhash_dup_pairs,
-                              minhash_signature, simhash_dup_pairs)
+from .operators.dedup import exact_dedup, minhash_signature
 from .operators.spatial import (assign_cells, cell_histogram, knn_cells,
                                 pip_join_rects)
 from .udfs import (make_cascade_udf, udf_country_name, udf_street_abbrev,
@@ -981,88 +980,6 @@ FROM s5
 """
 
 
-def q_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram Jaccard near-dup pairs with length-bucket blocking
-    (the quadratic-bounding pattern); doubled corpus guarantees
-    jaccard=1.0 pairs, natural near-dups surface below that."""
-    from .operators.dedup import ngram_jaccard_pairs, normalize_text
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    doubled = d.unionAll(
-        d.filter(F.col("doc_id") < 20)
-        .select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
-    blk = F.floor(F.length(normalize_text(F.col("text"))) / 16)
-    return ngram_jaccard_pairs(doubled, "doc_id", "text", n=3,
-                               threshold=0.5, block_col=blk)
-
-
-Q_NGRAM_JACCARD_SQL = rf"""
-WITH all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 20),
-norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM all_docs),
-blocked AS (SELECT doc_id, t, CAST(floor(length(t) / 16) AS BIGINT) AS blk
-            FROM norm),
-ix AS (SELECT doc_id, t, blk,
-  unnest(generate_series(1, GREATEST(length(t) - 2, 1))) AS i FROM blocked),
-sh AS (SELECT DISTINCT doc_id, blk, substr(t, CAST(i AS INTEGER), 3) AS sg
-       FROM ix),
-sizes AS (SELECT doc_id, blk, COUNT(*) AS n_sh FROM sh GROUP BY 1, 2),
-inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_int
-  FROM sh a JOIN sh b ON a.sg = b.sg AND a.blk = b.blk
-                     AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT i.a_id, i.b_id,
-  CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.a_id
-JOIN sizes sb ON sb.doc_id = i.b_id
-WHERE CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int) >= 0.5
-"""
-
-
-def q_embedding_dups(spark, sf_dir):
-    """Embedding-cosine near-dup pairs over the FULL table (no limit) —
-    sign-band blocked, so no all-pairs join; the oracle re-derives the
-    exact band buckets (signs of stored floats — no FP arithmetic) and
-    the cosine refine.  Planted exact duplicates (vec_id+100000, the
-    text-dedup pattern) are provably recalled: identical vectors share
-    every band.  Ids only (cosine FP accumulation order differs across
-    engines, pair membership does not)."""
-    from .operators.dedup import embedding_dups
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    doubled = e.unionAll(
-        e.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-        .filter(F.col("vec_id") < 100040))
-    # dim passed explicitly: zero driver jobs at plan-build (the probe
-    # fallback is for ad-hoc use only; at scale callers know the dim)
-    return embedding_dups(doubled, "vec_id", "embedding", threshold=0.9,
-                          dim=64).select("a_id", "b_id")
-
-
-_EMB_BANDS_SQL = " UNION ALL ".join(
-    "SELECT vec_id, {j} AS band, {key} AS bkey FROM e".format(
-        j=j, key=" + ".join(
-            f"(CASE WHEN embedding[{j * 8 + i + 1}] >= 0 THEN {1 << i} "
-            f"ELSE 0 END)" for i in range(8)))
-    for j in range(8))
-
-Q_EMBEDDING_DUPS_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings
-  WHERE vec_id < 40),
-banded AS ({_EMB_BANDS_SQL}),
-cand AS (SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
-         FROM banded x JOIN banded y
-           ON x.band = y.band AND x.bkey = y.bkey AND x.vec_id < y.vec_id)
-SELECT c.a_id, c.b_id
-FROM cand c
-JOIN e a ON a.vec_id = c.a_id
-JOIN e b ON b.vec_id = c.b_id
-WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.9
-"""
-
-
 def q_session_events(spark, sf_dir):
     """Streaming-grade session windows (30-min gap) per user, batch
     equivalence against a gaps-and-islands oracle."""
@@ -1600,212 +1517,6 @@ FROM t5
 """
 
 
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs with a FULL DuckDB oracle: the md5-nibble
-    token hash, the per-bit sign aggregation, the 16-bit pigeonhole
-    banding and the hamming refine are all re-derived in SQL."""
-    d = _t(spark, sf_dir, "documents")
-    doubled = d.select("doc_id", "text").unionAll(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        .filter(F.col("doc_id") < 100020))
-    return simhash_dup_pairs(doubled, "doc_id", "text", max_hamming=3)
-
-
-_SIMHASH_NIBS = ", ".join(
-    f"strpos('0123456789abcdef', substr(hx, {i + 1}, 1)) - 1 AS n{i}"
-    for i in range(16))
-_SIMHASH_BITS = ", ".join(
-    f"SUM(CASE WHEN ((n{b // 4} >> {b % 4}) & 1) = 1 THEN 1 ELSE -1 END) AS b{b}"
-    for b in range(64))
-_SIMHASH_SUM = " + ".join(
-    ["CASE WHEN b63 > 0 THEN (-9223372036854775807 - 1) ELSE 0 END"]
-    + [f"CASE WHEN b{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END"
-       for b in range(63)])
-
-Q_SIMHASH_PAIRS_SQL = rf"""
-WITH all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 20),
-norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM all_docs),
-toks AS (SELECT doc_id, unnest(string_split(t, ' ')) AS tok FROM norm),
-hxs AS (SELECT doc_id, md5(tok) AS hx FROM toks),
-nib AS (SELECT doc_id, {_SIMHASH_NIBS} FROM hxs),
-bits AS (SELECT doc_id, {_SIMHASH_BITS} FROM nib GROUP BY doc_id),
-sim AS (SELECT doc_id, {_SIMHASH_SUM} AS simhash FROM bits),
-banded AS (SELECT doc_id, simhash, band,
-                  (simhash >> (16 * band)) & 65535 AS bkey
-           FROM sim CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b),
-pairs AS (SELECT DISTINCT a.doc_id AS a_id, b2.doc_id AS b_id,
-                 a.simhash AS a_sim, b2.simhash AS b_sim
-          FROM banded a JOIN banded b2
-            ON a.band = b2.band AND a.bkey = b2.bkey
-           AND a.doc_id < b2.doc_id)
-SELECT a_id, b_id, CAST(bit_count(xor(a_sim, b_sim)) AS INTEGER) AS hamming
-FROM pairs WHERE bit_count(xor(a_sim, b_sim)) <= 3
-"""
-
-
-def q_minhash_pairs(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    doubled = d.select("doc_id", "text").unionAll(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        .filter(F.col("doc_id") < 100020))
-    return minhash_dup_pairs(doubled, "doc_id", "text",
-                             jaccard_threshold=0.8)
-
-
-Q_MINHASH_PAIRS_SQL = rf"""
-WITH all_docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 20),
-norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM all_docs),
-ix AS (SELECT doc_id, t,
-  unnest(generate_series(1, GREATEST(length(t) - 4, 1))) AS i FROM norm),
-sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INTEGER), 5) AS sg FROM ix),
-b AS (SELECT unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS band),
-sig AS (SELECT doc_id, band, MIN(md5(band::VARCHAR || '|' || sg)) AS mh
-        FROM sh CROSS JOIN b GROUP BY doc_id, band),
-cand AS (SELECT a.doc_id AS a_id, b2.doc_id AS b_id, COUNT(*) AS band_matches
-         FROM sig a JOIN sig b2 ON a.band = b2.band AND a.mh = b2.mh
-                               AND a.doc_id < b2.doc_id
-         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
--- candidates-only intersections (the final join discards
--- non-candidate rows, and the unbounded self-join is quadratic in
--- hub shingles at sf0.1)
-inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS n_int
-          FROM cand c
-          JOIN sh s1 ON s1.doc_id = c.a_id
-          JOIN sh s2 ON s2.doc_id = c.b_id AND s2.sg = s1.sg
-          GROUP BY 1, 2)
-SELECT c.a_id, c.b_id, c.band_matches,
-       CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int) AS jaccard
-FROM cand c
-JOIN inter i ON i.a_id = c.a_id AND i.b_id = c.b_id
-JOIN sizes sa ON sa.doc_id = c.a_id
-JOIN sizes sb ON sb.doc_id = c.b_id
-WHERE CAST(i.n_int AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_int) >= 0.8
-"""
-
-
-def q_dup_components(spark, sf_dir):
-    """Near-dup pairs → transitive CLUSTERS → survivor per cluster
-    (dup_components): the pairs→keep-set completion a production corpus
-    dedup ships.  The corpus is synthesized so duplicate CHAINS exist
-    (A~B and B~C at hamming ≤3, but A≁C at hamming 6 — connected
-    components must still merge all three): per base doc ``g`` < 60,
-    1–3 member signatures share a repetition-coded group base (each
-    group bit spread over 4 signature bits ⇒ inter-group hamming ≥4 >
-    threshold, provably no cross-group pairs) plus chain patterns
-    0b000000/0b000111/0b111111 in the low bits.  Pairs come from the
-    banded-Hamming equi-join (hash_dup_pairs), components from the
-    pointer-jumping min-label propagation; the oracle re-derives pairs
-    by brute-force bit_count(xor) and closes them with a recursive CTE.
-    Singleton nodes (no pair) come back as their own surviving
-    component via the ``nodes=`` corpus id set."""
-    from .operators.dedup import dup_components, hash_dup_pairs
-    g = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("g")) \
-        .filter(F.col("g") < 60)
-    mem = (g.select("g", F.lit(0).alias("j"))
-           .unionAll(g.filter(F.col("g") % 3 >= 1)
-                     .select("g", F.lit(1).alias("j")))
-           .unionAll(g.filter(F.col("g") % 3 == 2)
-                     .select("g", F.lit(2).alias("j"))))
-    base = F.lit(0).cast("long")
-    for i in range(6):
-        base = base + (F.shiftright(F.col("g"), i).bitwiseAND(F.lit(1))
-                       .cast("long") * F.lit(15 * (1 << (8 + 4 * i))))
-    pat = F.element_at(F.array(F.lit(0), F.lit(7), F.lit(63)),
-                       F.col("j") + 1).cast("long")
-    nodes = mem.select((F.col("g") * 10 + F.col("j")).alias("doc_id"),
-                       (base + pat).alias("sig"))
-    pairs = hash_dup_pairs(nodes, "doc_id", "sig", max_hamming=3)
-    comps = dup_components(pairs, nodes=nodes.select("doc_id"))
-    return comps.orderBy("doc_id")
-
-
-Q_DUP_COMPONENTS_SQL = """
-WITH RECURSIVE g AS (SELECT doc_id AS g FROM documents WHERE doc_id < 60),
-mem AS (
-  SELECT g, 0 AS j FROM g
-  UNION ALL SELECT g, 1 FROM g WHERE g % 3 >= 1
-  UNION ALL SELECT g, 2 FROM g WHERE g % 3 = 2),
-nodes AS (
-  SELECT g*10 + j AS doc_id,
-    (((g >> 0) & 1) * 3840 + ((g >> 1) & 1) * 61440
-     + ((g >> 2) & 1) * 983040 + ((g >> 3) & 1) * 15728640
-     + ((g >> 4) & 1) * 251658240 + ((g >> 5) & 1) * 4026531840
-     + CASE j WHEN 0 THEN 0 WHEN 1 THEN 7 ELSE 63 END)::BIGINT AS sig
-  FROM mem),
-pairs AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM nodes a JOIN nodes b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.sig, b.sig)) <= 3),
-edges AS (
-  SELECT a_id AS s, b_id AS d FROM pairs
-  UNION SELECT b_id, a_id FROM pairs),
-reach(s, d) AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s)
-SELECT n.doc_id,
-  LEAST(n.doc_id, COALESCE(MIN(r.d), n.doc_id)) AS component_id,
-  n.doc_id = LEAST(n.doc_id, COALESCE(MIN(r.d), n.doc_id)) AS is_survivor
-FROM nodes n LEFT JOIN reach r ON r.s = n.doc_id
-GROUP BY n.doc_id
-ORDER BY doc_id
-"""
-
-
-def q_image_resize(spark, sf_dir):
-    """F23 multimodal resize: decode → pure-numpy bilinear → re-encode
-    in the same format via mapInPandas; real-world codecs keep the
-    declared stub path (ok=false).  FULL replay-literal oracle: the
-    resized-pixel phash per row is recomputed driver-side by the same
-    pure-python kernels (decode → bilinear → phash, no Spark) and
-    dims_ok / ok_frac are re-derived in SQL over those literals.
-    Exactness is additionally pytest-gated (constant/gradient PSNR
-    invariants)."""
-    from .operators.multimodal import resize_images
-    from .sources.datagen import generate_images
-    imgs = generate_images(spark, 300, seed=7)
-    w = Window.partitionBy(F.lit(1))
-    dims_ok = F.when(F.col("ok"),
-                     (F.col("w") == 32) & (F.col("h") == 24)) \
-        .otherwise(F.lit(True))
-    return resize_images(imgs, 32, 24).select(
-        "image_id", "fmt", "w", "h", "phash", "ok",
-        dims_ok.alias("dims_ok"),
-        F.round(F.avg(F.col("ok").cast("double")).over(w), 4)
-        .alias("ok_frac"))
-
-
-def q_frame_sample(spark, sf_dir):
-    """F23 multimodal frame sampling: rawv container demux + every-k-th
-    frame re-encoded standalone with its phash (deterministic synthetic
-    videos; a real demuxer swaps into _split_frames without touching
-    the plan).  FULL replay-literal oracle: per-frame phash literals
-    are recomputed driver-side from the identical rng(13) frame pool
-    (no Spark, no container round-trip — so the demux path is what the
-    compare exercises); idx_ok / dims_ok / count_ok re-derived in
-    SQL."""
-    import numpy as np
-
-    from .operators.multimodal import encode_rawv, sample_frames
-    rng = np.random.default_rng(13)
-    vids = [(f"vid_{i}", encode_rawv(
-        rng.integers(0, 256, (6, 8, 8, 3), dtype=np.uint8)), "rawv")
-        for i in range(20)]
-    df = spark.createDataFrame(
-        vids, "video_id string, bytes binary, fmt string")
-    w = Window.partitionBy(F.lit(1))
-    return sample_frames(df, every_k=2).select(
-        "video_id", "frame_idx", "w", "h", "phash",
-        (F.col("frame_idx") % 2 == 0).alias("idx_ok"),
-        ((F.col("w") == 8) & (F.col("h") == 8)).alias("dims_ok"),
-        (F.count(F.lit(1)).over(w) == 60).alias("count_ok"))
-
-
 def q_write_tiled(spark, sf_dir):
     """S5 write path verified through the gate: sinks.write_tiled's
     directory-partitioned, z-order-clustered parquet layout is written
@@ -1911,14 +1622,18 @@ def q_image_dups(spark, sf_dir):
     return image_dup_pairs(imgs, max_hamming=4)
 
 
-def _banded_hamming_sql(sig_rows: list[tuple[str, int]],
-                        max_hamming: int = 4) -> str:
-    """Banding + hamming refine in DuckDB SQL over literal (id, sig64)
-    ground truth (8 8-bit bands for hamming ≤4 — mirrors
+def _image_dups_sql() -> str:
+    """Oracle for q_image_dups: (image_id, phash) ground truth from the
+    pure-python generator kernel (no Spark), then banding + hamming
+    refine in SQL (8 8-bit bands for hamming ≤4 — mirrors
     hash_dup_pairs defaults).  Arithmetic >> plus the band mask equals
-    Spark's shiftrightunsigned (the mask discards sign-extension bits)
-    — same trick as Q_SIMHASH_PAIRS_SQL."""
-    vals = ", ".join(f"('{i}', {s}::BIGINT)" for i, s in sig_rows)
+    Spark's shiftrightunsigned (the mask discards sign-extension
+    bits)."""
+    from .imaging import phash64
+    from .sources.datagen import visual_for_id
+    vals = ", ".join(
+        f"('img_{i:012d}', {phash64(visual_for_id(4242, i, 0.15)[3])}::BIGINT)"
+        for i in range(300))
     return f"""
 WITH sig(id, phash) AS (VALUES {vals}),
 banded AS (SELECT id, phash, band, (phash >> (8 * band)) & 255 AS bkey
@@ -1930,22 +1645,8 @@ pairs AS (SELECT DISTINCT a.id AS a_id, b2.id AS b_id,
             ON a.band = b2.band AND a.bkey = b2.bkey
            AND a.id < b2.id)
 SELECT a_id, b_id, CAST(bit_count(xor(a_sig, b_sig)) AS INTEGER) AS hamming
-FROM pairs WHERE bit_count(xor(a_sig, b_sig)) <= {max_hamming}
+FROM pairs WHERE bit_count(xor(a_sig, b_sig)) <= 4
 """
-
-
-def _image_dups_sql() -> str:
-    """Oracle for q_image_dups: (image_id, phash) ground truth from the
-    pure-python generator kernel (no Spark) through the shared banding
-    SQL."""
-    from .imaging import phash64
-    from .sources.datagen import visual_for_id
-    return _banded_hamming_sql(
-        [(f"img_{i:012d}", phash64(visual_for_id(4242, i, 0.15)[3]))
-         for i in range(300)])
-
-
-Q_IMAGE_DUPS_SQL = _image_dups_sql()
 
 
 def _replay_images(seed: int, n: int, png_every: int | None = None,
@@ -2018,144 +1719,14 @@ FROM o
 """
 
 
-def _image_resize_sql() -> str:
-    """Oracle for q_image_resize: the resized-pixel phash per row,
-    replayed decode → bilinear → phash with the same kernels (lossy
-    jpegq rows resize their DECODED pixels, like the operator does);
-    dims_ok / ok_frac re-derived in SQL."""
-    from .imaging import decode_image, phash64
-    from .operators.multimodal import _bilinear_resize
-    rows = []
-    for rid, fmt, _pix, data, _ph in _replay_images(7, 300):
-        res = _bilinear_resize(decode_image(data, fmt), 24, 32)
-        rows.append(f"('{rid}', '{fmt}', {phash64(res)}::BIGINT)")
-    vals = ",\n".join(rows)
-    return f"""
-WITH t(image_id, fmt, phash) AS (VALUES {vals})
-SELECT image_id, fmt, 32 AS w, 24 AS h, phash, true AS ok,
-  true AS dims_ok,
-  round(avg(1.0::DOUBLE) OVER (), 4) AS ok_frac
-FROM t
-"""
-
-
-def _frame_sample_sql() -> str:
-    """Oracle for q_frame_sample: per-sampled-frame phash literals
-    recomputed from the identical rng(13) frame pool WITHOUT the rawv
-    container round-trip — so the compare value-checks the demux +
-    every-k sampling + phash path end-to-end; idx_ok / dims_ok /
-    count_ok re-derived in SQL."""
-    import numpy as np
-
-    from .imaging import phash64
-    rng = np.random.default_rng(13)
-    rows = []
-    for v in range(20):
-        frames = rng.integers(0, 256, (6, 8, 8, 3), dtype=np.uint8)
-        for idx in range(0, 6, 2):
-            f = frames[idx]
-            rows.append(f"('vid_{v}', {idx}, {f.shape[1]}, {f.shape[0]}, "
-                        f"{phash64(f)}::BIGINT)")
-    vals = ",\n".join(rows)
-    return f"""
-WITH t(video_id, frame_idx, w, h, phash) AS (VALUES {vals})
-SELECT video_id, frame_idx, w, h, phash,
-  frame_idx % 2 = 0 AS idx_ok,
-  (w = 8 AND h = 8) AS dims_ok,
-  COUNT(*) OVER () = 60 AS count_ok
-FROM t
-"""
-
-
-# NOTE: the four replay-literal oracles above are NOT built here —
-# each costs hundreds of deterministic image/audio generations plus
-# encode/decode (including the zlib PNG round-trip), which importing
-# contract.py for bench/tests/entry must not pay.  Their builder
-# FUNCTIONS are the registry's oracles, resolved (once, cached) by
-# resolve_oracles() when a caller actually needs oracle SQL.
-
-
-def q_frame_dups(spark, sf_dir):
-    """Cross-video frame near-dup detection — the composed multimodal
-    pipeline on trial end-to-end: rawv demux + every-k frame sampling
-    (mapInPandas row-explode, Python side) feeds the banded Hamming
-    equi-join (JVM side) on per-frame phash.  The videos draw frames
-    from a shared pool with pixel perturbations
-    (datagen.videos_with_shared_frames), so sampled frames repeat
-    ACROSS videos; the oracle replays the construction driver-side and
-    re-derives banding in SQL — a wrong demux offset, frame index or
-    phash would shift pairs and break the value hash, so this upgrades
-    the previously rows-only frame-sampling surface to value-checked."""
-    from .operators.dedup import hash_dup_pairs
-    from .operators.multimodal import encode_rawv, sample_frames
-    from .sources.datagen import videos_with_shared_frames
-    vids = [(vid, encode_rawv(frames), "rawv")
-            for vid, frames in videos_with_shared_frames(77)]
-    df = spark.createDataFrame(
-        vids, "video_id string, bytes binary, fmt string")
-    frames = sample_frames(df, every_k=2).select(
-        F.concat_ws("#", "video_id", F.col("frame_idx").cast("string"))
-        .alias("frame_key"), "phash")
-    return hash_dup_pairs(frames, "frame_key", "phash", max_hamming=4)
-
-
-def _frame_dups_sql() -> str:
-    """Oracle for q_frame_dups: every-2nd frame's phash replayed from
-    the deterministic video builder, through the shared banding SQL."""
-    from .imaging import phash64
-    from .sources.datagen import videos_with_shared_frames
-    rows = []
-    for vid, frames in videos_with_shared_frames(77):
-        for idx in range(0, frames.shape[0], 2):
-            rows.append((f"{vid}#{idx}", phash64(frames[idx])))
-    return _banded_hamming_sql(rows)
-
-
-Q_FRAME_DUPS_SQL = _frame_dups_sql()
-
-
-def q_audio_dups(spark, sf_dir):
-    """Near-duplicate AUDIO detection, value-checked end-to-end: real
-    RIFF/WAVE PCM16 decode (audioops.py — pure struct+numpy, no stub)
-    + per-clip energy-delta fingerprint (mapInPandas) feeding the same
-    banded Hamming equi-join as text SimHash and image phash.  Clips
-    are deterministic sine mixtures with planted near-dups (-40 dB
-    noise overlays, datagen.audio_for_id); every 7th clip is encoded
-    STEREO (duplicated channel — the mono mix must fingerprint
-    identically), and two mp3 rows prove the declared-stub drop path.
-    The oracle replays decode+fingerprint driver-side and re-derives
-    the banding in SQL."""
-    from .operators.multimodal import audio_dup_pairs
-    from .audioops import encode_wav
-    from .sources.datagen import audio_for_id
-    import numpy as np
-    rows = []
-    for i in range(60):
-        s, sr = audio_for_id(88, i, 0.25)
-        if i % 7 == 0:
-            payload = encode_wav(np.stack([s, s], axis=1), sr)
-        else:
-            payload = encode_wav(s, sr)
-        rows.append((f"aud_{i:04d}", payload, "wav"))
-    rows += [("aud_stub_0", b"\x00" * 32, "mp3"),
-             ("aud_stub_1", b"\x00" * 32, "mp3")]
-    df = spark.createDataFrame(
-        rows, "audio_id string, bytes binary, fmt string")
-    return audio_dup_pairs(df, max_hamming=4)
-
-
-def _audio_dups_sql() -> str:
-    """Oracle for q_audio_dups: decode+fingerprint replayed driver-side
-    (wav roundtrip is bit-exact, and the stereo mono-mix equals the
-    mono source), through the shared banding SQL."""
-    from .audioops import fingerprint64
-    from .sources.datagen import audio_for_id
-    return _banded_hamming_sql(
-        [(f"aud_{i:04d}", fingerprint64(audio_for_id(88, i, 0.25)[0]))
-         for i in range(60)])
-
-
-Q_AUDIO_DUPS_SQL = _audio_dups_sql()
+# NOTE: no oracle that needs kernel work is built at import time.
+# _image_dups_sql, _image_features_sql and _payload_audit_sql each
+# replay hundreds of deterministic images (with encode/decode, including
+# the zlib PNG round-trip); _micro_kernels_sql loads the boundaries;
+# _hex_rollup_sql needs the hex geometry.  Importing contract.py for
+# bench/tests/entry must not pay that, so these builder FUNCTIONS are
+# the registry's oracles, resolved (once, cached) by resolve_oracles()
+# when a caller actually needs oracle SQL.
 
 
 # ------------------------------------------------------------------ registry
@@ -2191,8 +1762,6 @@ REGISTRY: dict[str, Query] = {
     "q_localize_documents": Query(q_localize_documents,
                                   Q_LOCALIZE_DOCUMENTS_SQL),
     "q_localize_mixed": Query(q_localize_mixed, Q_LOCALIZE_MIXED_SQL),
-    "q_simhash_pairs": Query(q_simhash_pairs, Q_SIMHASH_PAIRS_SQL),
-    "q_minhash_pairs": Query(q_minhash_pairs, Q_MINHASH_PAIRS_SQL),
     "q_abbrev_de": Query(q_abbrev_de, Q_ABBREV_DE_SQL),
     "q_abbrev_en": Query(q_abbrev_en, Q_ABBREV_EN_SQL),
     "q_abbrev_fr": Query(q_abbrev_fr, Q_ABBREV_FR_SQL),
@@ -2202,14 +1771,10 @@ REGISTRY: dict[str, Query] = {
     "q_combined_quirks": Query(q_combined_quirks, Q_COMBINED_QUIRKS_SQL),
     "q_snapshot_compact": Query(q_snapshot_compact, Q_SNAPSHOT_COMPACT_SQL),
     "q_localize_latin": Query(q_localize_latin, Q_LOCALIZE_LATIN_SQL),
-    "q_ngram_jaccard": Query(q_ngram_jaccard, Q_NGRAM_JACCARD_SQL),
-    "q_embedding_dups": Query(q_embedding_dups, Q_EMBEDDING_DUPS_SQL),
     "q_session_events": Query(q_session_events, Q_SESSION_EVENTS_SQL),
     "q_image_features": Query(q_image_features, _image_features_sql),
     "q_payload_audit": Query(q_payload_audit, _payload_audit_sql),
     "q_write_tiled": Query(q_write_tiled, Q_WRITE_TILED_SQL),
-    "q_image_resize": Query(q_image_resize, _image_resize_sql),
-    "q_frame_sample": Query(q_frame_sample, _frame_sample_sql),
     "q_asof_join": Query(q_asof_join, Q_ASOF_JOIN_SQL),
     "q_interval_join": Query(q_interval_join, Q_INTERVAL_JOIN_SQL),
     "q_merge_intervals": Query(q_merge_intervals, Q_MERGE_INTERVALS_SQL),
@@ -2226,10 +1791,7 @@ REGISTRY: dict[str, Query] = {
     "q_hexcell_rollup": Query(q_hexcell_rollup, _hex_rollup_sql),
     "q_hex_ring_join": Query(q_hex_ring_join, Q_HEX_RING_JOIN_SQL),
     "q_translit_cyrillic": Query(q_translit_cyrillic, Q_TRANSLIT_CYRILLIC_SQL),
-    "q_image_dups": Query(q_image_dups, Q_IMAGE_DUPS_SQL),
-    "q_frame_dups": Query(q_frame_dups, Q_FRAME_DUPS_SQL),
-    "q_audio_dups": Query(q_audio_dups, Q_AUDIO_DUPS_SQL),
-    "q_dup_components": Query(q_dup_components, Q_DUP_COMPONENTS_SQL),
+    "q_image_dups": Query(q_image_dups, _image_dups_sql),
     "q_micro_kernels": Query(q_micro_kernels, _micro_kernels_sql),
 }
 
@@ -2267,8 +1829,7 @@ def resolve_oracles() -> Mapping[str, str]:
 # ------------------------------------------------------------------ compare
 
 # the parquet tables the oracles read, one DuckDB view each
-TABLES = ["region", "nation", "customer", "orders", "events", "documents",
-          "embeddings"]
+TABLES = ["region", "nation", "customer", "orders", "events", "documents"]
 
 
 def _norm_cell(v):

@@ -1,11 +1,11 @@
-"""Multimodal column operators: decode / feature-extract over opaque
-binary payload columns with typed metadata.
+"""Image payload operators: decode / feature-extract / near-dup over
+the opaque binary image column with typed metadata.
 
 The Spark-side plumbing (schema, Arrow batch shape, partitioning) is
 real and tested against the engine's own pure-python codecs (bmp / raw
 / jpegq / png / jpeg — the latter two REAL spec codecs, see imaging.py
-and jpegcodec.py).  The remaining real-world codecs (webp/gif, mp3,
-mp4) are STUBBED — the sandbox has no PIL/ffmpeg — behind
+and jpegcodec.py).  The remaining real-world formats (webp/gif, mp3,
+wav, mp4) are STUBBED — the sandbox has no PIL/ffmpeg — behind
 ``NotImplementedError`` with the exact same UDF signature, so swapping
 a real decoder in changes one function, not the plan.
 
@@ -22,12 +22,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..imaging import decode_image, phash64, psnr
+from ..imaging import decode_image, phash64
 
-__all__ = ["image_features", "verify_payload", "resize_images",
-           "sample_frames", "image_dup_pairs", "audio_features",
-           "audio_dup_pairs",
-           "FEATURES_DDL", "RESIZE_DDL", "FRAMES_DDL", "AUDIO_DDL"]
+__all__ = ["image_features", "verify_payload", "image_dup_pairs",
+           "FEATURES_DDL"]
 
 FEATURES_DDL = ("image_id string, fmt string, mean_r double, mean_g double, "
                 "mean_b double, brightness double, phash_check long, "
@@ -36,8 +34,7 @@ FEATURES_DDL = ("image_id string, fmt string, mean_r double, mean_g double, "
 _REAL_WORLD_FMTS = {"webp", "gif", "mp3", "wav", "mp4"}
 # png left this set in round 4 (spec-conformant zlib/CRC/filter codec
 # in imaging.py), jpeg/jpg in round 5 (real baseline JFIF DCT+Huffman
-# codec in jpegcodec.py) — like wav before them (audioops), stubs that
-# became real pure-python codecs
+# codec in jpegcodec.py) — stubs that became real pure-python codecs
 
 
 def _decode(data: bytes, fmt: str) -> np.ndarray:
@@ -88,121 +85,12 @@ def verify_payload(df: DataFrame, id_col: str = "image_id") -> DataFrame:
     return joined.select(id_col, "fmt", ok.alias("ok"))
 
 
-RESIZE_DDL = ("image_id string, fmt string, bytes binary, w int, h int, "
-              "phash long, ok boolean")
-
-
-def _bilinear_resize(pix: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Pure-numpy bilinear resample (align-corners=False convention,
-    edge-clamped) — vectorized over the full image, no Python pixel
-    loops."""
-    h, w = pix.shape[:2]
-    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
-    x0 = np.clip(np.floor(xs).astype(np.int64), 0, w - 1)
-    y1 = np.clip(y0 + 1, 0, h - 1)
-    x1 = np.clip(x0 + 1, 0, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :, None]
-    p = pix.astype(np.float64)
-    top = p[y0][:, x0] * (1.0 - wx) + p[y0][:, x1] * wx
-    bot = p[y1][:, x0] * (1.0 - wx) + p[y1][:, x1] * wx
-    out = top * (1.0 - wy) + bot * wy
-    return np.clip(np.round(out), 0, 255).astype(np.uint8)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  id_col: str = "image_id") -> DataFrame:
-    """Decode → bilinear resize → re-encode IN THE SAME FORMAT via
-    mapInPandas (Arrow batches); output carries the recomputed phash so
-    downstream dedup keys stay consistent.  Real-world codecs keep the
-    declared stub behavior: the row survives with ok=false and null
-    payload (same plumbing, swap the decoder to activate)."""
-    from ..imaging import encode_image
-
-    cols = [id_col, "bytes", "fmt"]
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                try:
-                    pix = _decode(bytes(data), fmt)
-                    res = _bilinear_resize(pix, out_h, out_w)
-                    out.append((rid, fmt, encode_image(res, fmt),
-                                out_w, out_h, phash64(res), True))
-                except (NotImplementedError, ValueError):
-                    out.append((rid, fmt, None, None, None, None, False))
-            yield pd.DataFrame(out, columns=["image_id", "fmt", "bytes",
-                                             "w", "h", "phash", "ok"],
-                               dtype=object)
-
-    return df.select(*cols).mapInPandas(work, schema=RESIZE_DDL)
-
-
-# ------------------------------------------------------------------
-# "video" payloads: deterministic rawv container — 12-byte header
-# (uint32 LE: n_frames, h, w) + n_frames contiguous RGB24 frames.  A
-# real container (mp4 etc.) slots into _split_frames without touching
-# the Spark plumbing.
-
-FRAMES_DDL = ("video_id string, frame_idx int, w int, h int, "
-              "frame_bytes binary, phash long")
-
-
-def encode_rawv(frames: np.ndarray) -> bytes:
-    """(n, h, w, 3) uint8 → rawv payload."""
-    n, h, w = frames.shape[:3]
-    head = np.array([n, h, w], dtype="<u4").tobytes()
-    return head + np.ascontiguousarray(frames, dtype=np.uint8).tobytes()
-
-
-def _split_frames(data: bytes, fmt: str) -> np.ndarray:
-    if fmt != "rawv":
-        raise NotImplementedError(f"no demuxer for '{fmt}' in this sandbox")
-    n, h, w = np.frombuffer(data[:12], dtype="<u4")
-    return np.frombuffer(data[12:], dtype=np.uint8).reshape(
-        int(n), int(h), int(w), 3)
-
-
-def sample_frames(df: DataFrame, every_k: int = 2,
-                  id_col: str = "video_id") -> DataFrame:
-    """Demux + every-k-th frame sampling via mapInPandas — the row
-    explode happens Python-side (one input row → ceil(n/k) output
-    rows), each sampled frame re-encoded as a standalone raw image with
-    its phash for downstream near-dup removal across frames."""
-    from ..imaging import encode_image
-
-    cols = [id_col, "bytes", "fmt"]
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                try:
-                    frames = _split_frames(bytes(data), fmt)
-                except (NotImplementedError, ValueError):
-                    continue                 # undecodable container: drop
-                for idx in range(0, frames.shape[0], every_k):
-                    f = frames[idx]
-                    out.append((rid, idx, f.shape[1], f.shape[0],
-                                encode_image(f, "raw"), phash64(f)))
-            yield pd.DataFrame(out, columns=["video_id", "frame_idx", "w",
-                                             "h", "frame_bytes", "phash"],
-                               dtype=object)
-
-    return df.select(*cols).mapInPandas(work, schema=FRAMES_DDL)
-
-
 def image_dup_pairs(df: DataFrame, id_col: str = "image_id",
                     hash_col: str = "phash",
                     max_hamming: int = 4) -> DataFrame:
     """Near-duplicate IMAGE detection over the perceptual-hash column:
     banded Hamming equi-join (operators.dedup.hash_dup_pairs) on the
-    64-bit phash that decode/resize/frame-sampling already emit — the
-    visual twin of SimHash text dedup, sharing one candidate-generation
-    machinery.
+    64-bit phash that the image sources and image_features emit.
 
     Only (id, phash) enter the self-join — the binary payload column is
     pruned before the exchange, so at 100 TB the shuffle carries 16
@@ -214,68 +102,3 @@ def image_dup_pairs(df: DataFrame, id_col: str = "image_id",
     out = hash_dup_pairs(pruned, id_col, hash_col,
                          max_hamming=max_hamming)
     return out.select(F.col("a_id"), F.col("b_id"), F.col("hamming"))
-
-
-# ------------------------------------------------------------------
-# audio payloads: real RIFF/WAVE PCM16 codec (pure struct+numpy, see
-# audioops.py); compressed formats (mp3/ogg/flac/aac) are declared
-# stubs — same policy as jpeg/png for images.
-
-AUDIO_DDL = ("audio_id string, fmt string, duration_s double, sr int, "
-             "rms double, zcr double, fingerprint long, decoded boolean")
-
-_AUDIO_STUB_FMTS = {"mp3", "ogg", "flac", "aac", "m4a", "opus"}
-
-
-def _decode_audio(data: bytes, fmt: str) -> "tuple[np.ndarray, int]":
-    from ..audioops import decode_wav
-    if fmt in _AUDIO_STUB_FMTS:
-        # STUB: sandbox has no audio codecs; the Arrow plumbing around
-        # this call is the tested surface.
-        raise NotImplementedError(f"no decoder for '{fmt}' in this sandbox")
-    return decode_wav(data)
-
-
-def audio_features(df: DataFrame, id_col: str = "audio_id") -> DataFrame:
-    """Decode + per-clip stats + 64-bit energy-delta fingerprint via
-    mapInPandas (Arrow batches) — the audio leg of the multimodal
-    triangle.  Undecodable formats survive with decoded=false."""
-    from ..audioops import fingerprint64
-
-    cols = [id_col, "bytes", "fmt"]
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rid, data, fmt in zip(pdf[id_col], pdf["bytes"], pdf["fmt"]):
-                try:
-                    samples, sr = _decode_audio(bytes(data), fmt)
-                    mono = samples.astype(np.float64).mean(axis=1)
-                    rms = float(np.sqrt((mono * mono).mean()))
-                    zcr = float((np.signbit(mono[1:])
-                                 != np.signbit(mono[:-1])).mean())
-                    out.append((rid, fmt, samples.shape[0] / sr, sr, rms,
-                                zcr, fingerprint64(samples), True))
-                except (NotImplementedError, ValueError):
-                    out.append((rid, fmt, None, None, None, None, None,
-                                False))
-            yield pd.DataFrame(out, columns=["audio_id", "fmt",
-                                             "duration_s", "sr", "rms",
-                                             "zcr", "fingerprint",
-                                             "decoded"],
-                               dtype=object)
-
-    return df.select(*cols).mapInPandas(work, schema=AUDIO_DDL)
-
-
-def audio_dup_pairs(df: DataFrame, id_col: str = "audio_id",
-                    max_hamming: int = 4) -> DataFrame:
-    """Near-duplicate audio detection: audio_features → banded Hamming
-    equi-join on the energy-delta fingerprint (same hash_dup_pairs
-    machinery as SimHash text dedup and phash image dedup; undecodable
-    rows drop out before the join).  Returns (a_id, b_id, hamming)."""
-    from .dedup import hash_dup_pairs
-    feats = audio_features(df, id_col).filter(F.col("decoded")) \
-        .select(F.col("audio_id").alias(id_col), "fingerprint")
-    return hash_dup_pairs(feats, id_col, "fingerprint",
-                          max_hamming=max_hamming)

@@ -21,8 +21,7 @@ import pandas as pd
 from ..imaging import encode_image, phash64
 
 __all__ = ["images_schema_ddl", "generate_images", "caption_for",
-           "visual_for_id", "videos_with_shared_frames", "audio_for_id",
-           "IMAGES_DDL"]
+           "visual_for_id", "IMAGES_DDL"]
 
 IMAGES_DDL = ("image_id string, bytes binary, w int, h int, fmt string, "
               "caption string, phash long, lon double, lat double, "
@@ -142,67 +141,6 @@ def visual_for_id(seed: int, i: int,
             pix[y, x, ch] = np.uint8(val + delta if val + delta <= 255
                                      else val - delta)
     return w, h, fmt, pix
-
-
-def videos_with_shared_frames(seed: int, n_videos: int = 15,
-                              pool_size: int = 10, n_frames: int = 6
-                              ) -> list[tuple[str, np.ndarray]]:
-    """Deterministic test videos drawing frames from a shared pool with
-    per-use pixel perturbations — frames repeat ACROSS videos, the
-    ground truth for cross-video frame near-dup detection
-    (q_frame_dups).  Fully replayable driver-side (per-video rng keyed
-    [seed, video+1]; pool keyed [seed, 0]), so the oracle recomputes
-    every sampled frame's phash without Spark."""
-    rng = np.random.default_rng([seed, 0])
-    pool = rng.integers(0, 256, (pool_size, 8, 8, 3), dtype=np.uint8)
-    out = []
-    for v in range(n_videos):
-        rv = np.random.default_rng([seed, 1 + v])
-        idx = rv.integers(0, pool_size, n_frames)
-        frames = pool[idx].copy()
-        for f in range(n_frames):
-            # stronger deltas than visual_for_id: on an 8x8 frame each
-            # pixel IS one phash block, so these flip 0-4 bits — the
-            # hamming refine sees a real distance distribution, not
-            # just exact phash collisions
-            for _ in range(int(rv.integers(0, 4))):
-                y = int(rv.integers(8))
-                x = int(rv.integers(8))
-                ch = int(rv.integers(3))
-                frames[f, y, x, ch] = np.uint8(
-                    (int(frames[f, y, x, ch]) + int(rv.integers(16, 97)))
-                    % 256)
-        out.append((f"vid_{v:04d}", frames))
-    return out
-
-
-def audio_for_id(seed: int, i: int,
-                 near_dup_frac: float = 0.0, sr: int = 4000,
-                 dur_s: float = 1.0) -> tuple[np.ndarray, int]:
-    """((n,) int16 samples, sr) for clip id ``i`` — replayable from the
-    id alone, same scheme as visual_for_id: a near-dup clip reconstructs
-    its base by recursing on the base id, then overlays low-amplitude
-    noise (≈ -40 dB vs signal), so its energy-delta fingerprint lands
-    within a few bits of the base.  Clips are sine mixtures under a
-    64-step random gain envelope — adjacent window energies differ
-    decisively, which keeps the fingerprint stable under the dup noise
-    yet discriminative across clips."""
-    rng = np.random.default_rng([seed, int(i)])
-    n = int(sr * dur_s)
-    t = np.arange(n) / sr
-    freqs = rng.uniform(80.0, 1200.0, 3)
-    amps = rng.uniform(0.3, 1.0, 3)
-    carrier = sum(a * np.sin(2 * np.pi * f * t)
-                  for f, a in zip(freqs, amps))
-    env = np.repeat(rng.uniform(0.15, 1.0, 64),
-                    -(-n // 64))[:n]          # 64-step gain envelope
-    sig = 8000.0 * env * carrier / np.abs(carrier).max()
-    sig = sig + rng.normal(0, 40.0, n)        # clip-specific noise floor
-    if near_dup_frac > 0 and int(i) > 0 and rng.random() < near_dup_frac:
-        base_samples, _ = audio_for_id(seed, int(rng.integers(0, int(i))),
-                                       near_dup_frac, sr, dur_s)
-        sig = base_samples.astype(np.float64) + rng.normal(0, 60.0, n)
-    return np.clip(sig, -32768, 32767).astype(np.int16), sr
 
 
 def _gen_rows(ids: np.ndarray, seed: int, with_images: bool,

@@ -47,9 +47,6 @@ ROWS_ONLY_SELF_CHECKS = {
     "q_payload_audit": {"bool": ["ok"], "frac": ["ok_frac"]},
     "q_image_features": {"bool": ["decoded", "stats_ok"],
                          "frac": ["decoded_frac"]},
-    "q_image_resize": {"bool": ["ok", "dims_ok"], "frac": ["ok_frac"]},
-    "q_frame_sample": {"bool": ["idx_ok", "dims_ok", "count_ok"],
-                       "frac": []},
 }
 
 
@@ -66,8 +63,8 @@ def test_rows_only_self_checks(spark, name):
 
 
 def test_replay_images_matches_distributed_generator(spark):
-    """The replay-literal oracles (q_image_features / q_payload_audit /
-    q_image_resize) are only as good as _replay_images' fidelity to the
+    """The replay-literal oracles (q_image_features / q_payload_audit)
+    are only as good as _replay_images' fidelity to the
     DISTRIBUTED generator — pin payload bytes, fmt and stored phash
     byte-identical so a datagen edit can't silently desync the oracle
     ground truth from what the Spark queries actually consume."""
@@ -93,10 +90,27 @@ def test_entry_smoke(spark):
 
 def test_every_query_has_an_oracle():
     """Spark-free check of the driver interface: queries() and
-    oracle_sql() name the same 57 queries."""
+    oracle_sql() name the same 48 queries."""
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     assert set(qs) == set(oracles)
-    assert len(qs) == len(oracles) == 57
+    assert len(qs) == len(oracles) == 48
+
+
+def test_contract_import_builds_no_oracle_data():
+    """Importing the contract builds no replay-literal oracle: a fresh
+    interpreter that imports it has loaded neither the image generator
+    nor the image codecs (their builders run on first oracle access)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = ("import sys, osml10n_spark.contract; "
+            "print(sorted(m for m in ('osml10n_spark.sources.datagen', "
+            "'osml10n_spark.imaging') if m in sys.modules))")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True,
+                         cwd=Path(__file__).resolve().parents[1])
+    assert out.stdout.strip() == "[]", out.stdout
 
 
 def test_broken_oracle_fails_only_its_own_query(monkeypatch):

@@ -4,10 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osml10n_spark.operators.dedup import (
-    exact_dedup, hash_dup_pairs, minhash_dup_pairs, ngram_jaccard_pairs,
-    simhash_dup_pairs,
-    embedding_dups)
+from osml10n_spark.operators.dedup import exact_dedup, hash_dup_pairs
 from osml10n_spark.operators.spatial import (
     assign_cells, assign_country, cell_histogram, knn_cells, knn_geo)
 from osml10n_spark.operators.multimodal import image_features, verify_payload
@@ -179,32 +176,6 @@ def test_exact_dedup(spark):
     assert groups.agg(F.max("group_size")).collect()[0][0] >= 2
 
 
-def test_minhash_and_jaccard(spark):
-    rows = [(1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumped over the lazy dog"),
-            (3, "completely different text about spark engines"),
-            (4, "completely different text about spark engines!")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.a_id, r.b_id)
-             for r in minhash_dup_pairs(df, "doc_id", "text",
-                                        jaccard_threshold=0.5).collect()}
-    assert (1, 2) in pairs and (3, 4) in pairs
-    assert (1, 3) not in pairs
-    jac = {(r.a_id, r.b_id): r.jaccard
-           for r in ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5,
-                                        allow_quadratic=True).collect()}
-    assert jac[(1, 2)] > 0.7
-
-
-def test_ngram_jaccard_unblocked_raises(spark):
-    """The documented-quadratic path can't ship silently: no block_col
-    and no explicit opt-in → ValueError before any plan is built."""
-    import pytest
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="block_col"):
-        ngram_jaccard_pairs(df, "doc_id", "text")
-
-
 def test_hash_dup_pairs_rejects_oversized_hamming(spark):
     import pytest
     from osml10n_spark.operators.dedup import hash_dup_pairs
@@ -226,80 +197,6 @@ def test_knn_geo_bq_rejects_oversized_query_side(spark):
         knn_geo_bq(q, items, 3, max_queries=10)
     # at/under the cap the plan is unchanged
     assert knn_geo_bq(q, items, 1, max_queries=20).count() == 20
-
-
-def test_dup_components_chained_and_singletons(spark):
-    """Pairs→clusters→survivor: a chain A~B~C (A≁C direct) collapses
-    into ONE component keyed by the min id; nodes in no pair come back
-    as surviving singletons; string ids work (lexicographic min)."""
-    from osml10n_spark.operators.dedup import dup_components
-    pairs = spark.createDataFrame(
-        [(10, 11), (11, 12),            # chain
-         (30, 31),                      # plain pair
-         (12, 13)],                     # extends the chain
-        "a_id long, b_id long")
-    nodes = spark.createDataFrame([(i,) for i in (10, 11, 12, 13, 30, 31, 77)],
-                                  "doc_id long")
-    got = {r.doc_id: (r.component_id, r.is_survivor)
-           for r in dup_components(pairs, nodes=nodes).collect()}
-    assert got == {10: (10, True), 11: (10, False), 12: (10, False),
-                   13: (10, False), 30: (30, True), 31: (30, False),
-                   77: (77, True)}
-    s = spark.createDataFrame([("b", "c"), ("a", "b")],
-                              "a_id string, b_id string")
-    comp = {r.doc_id: r.component_id for r in dup_components(s).collect()}
-    assert comp == {"a": "a", "b": "a", "c": "a"}
-
-
-def test_dup_components_long_path_converges_fast(spark):
-    """Pointer jumping: a diameter-40 path converges (≪ 40 rounds), and
-    an artificially tiny round budget raises instead of returning a
-    partial merge."""
-    import pytest
-    from osml10n_spark.operators.dedup import dup_components
-    p = spark.createDataFrame([(i, i + 1) for i in range(40)],
-                              "a_id long, b_id long")
-    with pytest.raises(RuntimeError, match="converge"):
-        dup_components(p, max_iters=2)
-    out = dup_components(p, max_iters=10)   # log-bounded: 10 ≫ log2(41)
-    assert out.filter("component_id = 0").count() == 41
-    assert out.filter("is_survivor").count() == 1
-
-
-def test_dup_components_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir= switches the fixpoint's per-round snapshot from
-    executor-local localCheckpoint to a RELIABLE checkpoint against the
-    given store (the cluster-survivability path): same labels as the
-    default path, and the directory actually receives RDD checkpoints."""
-    import os
-    from osml10n_spark.operators.dedup import dup_components
-    pairs = spark.createDataFrame(
-        [(10, 11), (11, 12), (30, 31), (12, 13)], "a_id long, b_id long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in (10, 11, 12, 13, 30, 31, 77)], "doc_id long")
-    ckdir = str(tmp_path / "cc_ckpt")
-    local = {tuple(r) for r in dup_components(pairs, nodes=nodes).collect()}
-    reliable = {tuple(r) for r in dup_components(
-        pairs, nodes=nodes, checkpoint_dir=ckdir).collect()}
-    assert local == reliable
-    assert any(os.scandir(ckdir)), "no checkpoint files written"
-
-
-def test_simhash_pairs(spark):
-    # one changed token in 20 → hamming 3 under the md5-nibble hash;
-    # the 4-band pigeonhole guarantees recall only for hamming ≤ 3,
-    # so the threshold stays within that bound
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lam mu nu xi omicron pi rho sigma tau upsilon")
-    rows = [(1, base),
-            (2, base.replace("zeta", "zets")),
-            (3, "unrelated words entirely different content here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.a_id, r.b_id): r.hamming
-             for r in simhash_dup_pairs(df, "doc_id", "text",
-                                        max_hamming=3).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] <= 3
-    assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
 def test_hash_dup_pairs_banded_equals_brute(spark):
@@ -378,58 +275,6 @@ def test_near_dup_generator_is_conservative_and_replayable():
                        & ((1 << 64) - 1)).count("1")
                    for j in range(i))
         assert near <= 4
-
-
-def test_embedding_dups(spark):
-    rows = [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.001, 0.0]),
-            (3, [0.0, 1.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = {(r.a_id, r.b_id) for r in
-             embedding_dups(df, "vec_id", "embedding", 0.99).collect()}
-    assert pairs == {(1, 2)}
-
-
-def test_embedding_dups_explicit_dim_and_null_probe(spark):
-    """dim= skips the plan-build probe (same pairs either way); a NULL
-    leading vector must not crash the probe fallback (it is
-    null-filtered), and an all-null table yields empty pairs."""
-    rows = [(0, None), (1, [1.0, 0.0, 0.0]), (2, [0.999, 0.001, 0.0]),
-            (3, [0.0, 1.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    probed = {(r.a_id, r.b_id) for r in
-              embedding_dups(df.filter("embedding IS NOT NULL"),
-                             "vec_id", "embedding", 0.99).collect()}
-    explicit = {(r.a_id, r.b_id) for r in
-                embedding_dups(df.filter("embedding IS NOT NULL"),
-                               "vec_id", "embedding", 0.99,
-                               dim=3).collect()}
-    assert probed == explicit == {(1, 2)}
-    # probe path sees the NULL row first: must skip it, not TypeError
-    with_null = {(r.a_id, r.b_id) for r in
-                 embedding_dups(df, "vec_id", "embedding", 0.99)
-                 .filter("a_id > 0 AND b_id > 0").collect()}
-    assert with_null == {(1, 2)}
-    empty = embedding_dups(df.filter("embedding IS NULL"),
-                           "vec_id", "embedding", 0.99)
-    assert empty.count() == 0
-
-
-def test_embedding_dups_blocked_matches_brute(spark):
-    """Sign-band blocking finds the same high-threshold pair set as the
-    brute-force small-n oracle (planted exact dups are guaranteed
-    recall — identical signs in every band)."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    doubled = emb.unionAll(
-        emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-        .filter(F.col("vec_id") < 100020))
-    blocked = {(r.a_id, r.b_id) for r in
-               embedding_dups(doubled, "vec_id", "embedding",
-                              threshold=0.9).collect()}
-    brute = {(r.a_id, r.b_id) for r in
-             embedding_dups(doubled, "vec_id", "embedding",
-                            threshold=0.9, brute=True).collect()}
-    assert blocked == brute and len(brute) >= 20
 
 
 def test_multimodal_features(spark):
@@ -673,105 +518,3 @@ def test_radius_join_wide_radius_covers(spark):
     assert (1, 2) in got and (2, 3) in got and (2, 1) in got
     assert (1, 3) not in got          # 170° > 120°
 
-
-def test_multimodal_resize(spark):
-    """Bilinear resize: same-format re-encode round-trips, constant
-    images stay exact, downscaled gradients stay close (PSNR)."""
-    from osml10n_spark.imaging import decode_image, encode_image, psnr
-    from osml10n_spark.operators.multimodal import (_bilinear_resize,
-                                                    resize_images)
-    # kernel invariants first (no Spark)
-    const = np.full((20, 30, 3), 77, dtype=np.uint8)
-    assert (_bilinear_resize(const, 7, 9) == 77).all()
-    grad = np.tile(np.arange(64, dtype=np.uint8)[None, :, None], (32, 1, 3))
-    up = _bilinear_resize(grad, 64, 128)
-    down = _bilinear_resize(up, 32, 64)
-    assert psnr(grad, down) > 35.0
-    # Spark plumbing: engine fmts resize+re-encode, dims update
-    rows = [("a", encode_image(grad, "bmp"), "bmp"),
-            ("b", encode_image(grad, "raw"), "raw"),
-            ("c", b"\xff\xd8junk", "jpeg")]          # corrupt jpeg payload
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
-    out = {r.image_id: r for r in resize_images(df, 16, 12).collect()}
-    assert out["a"].ok and out["a"].w == 16 and out["a"].h == 12
-    assert decode_image(bytes(out["b"].bytes), "raw").shape == (12, 16, 3)
-    assert out["c"].ok is False and out["c"].bytes is None
-
-
-def test_multimodal_frame_sampling(spark):
-    """rawv demux + every-k sampling: right frames, standalone
-    re-encoded payloads, phash stability."""
-    from osml10n_spark.imaging import decode_image, phash64
-    from osml10n_spark.operators.multimodal import encode_rawv, sample_frames
-    rng = np.random.default_rng(5)
-    frames = rng.integers(0, 256, (7, 10, 12, 3), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [("v1", encode_rawv(frames), "rawv"), ("v2", b"????", "mp4")],
-        "video_id string, bytes binary, fmt string")
-    got = {(r.video_id, r.frame_idx): r
-           for r in sample_frames(df, every_k=3).collect()}
-    assert set(got) == {("v1", 0), ("v1", 3), ("v1", 6)}   # mp4 stub dropped
-    for (vid, idx), r in got.items():
-        pix = decode_image(bytes(r.frame_bytes), "raw")
-        assert (pix == frames[idx]).all()
-        assert r.phash == phash64(frames[idx])
-
-
-def test_wav_codec_roundtrip_and_chunk_walk():
-    import struct
-
-    import numpy as np
-
-    from osml10n_spark.audioops import decode_wav, encode_wav
-
-    rng = np.random.default_rng(3)
-    mono = rng.integers(-32768, 32767, 5000).astype(np.int16)
-    stereo = rng.integers(-32768, 32767, (5000, 2)).astype(np.int16)
-    m, sr = decode_wav(encode_wav(mono, 8000))
-    assert sr == 8000 and (m[:, 0] == mono).all()
-    s, sr2 = decode_wav(encode_wav(stereo, 44100))
-    assert sr2 == 44100 and (s == stereo).all()
-    # chunk walker must skip an interposed LIST chunk before data
-    raw = encode_wav(mono, 8000)
-    extra = struct.pack("<4sI", b"LIST", 6) + b"INFOab"
-    patched = raw[:36] + extra + raw[36:]
-    m2, _ = decode_wav(patched)
-    assert (m2[:, 0] == mono).all()
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxNOPE")
-
-
-def test_audio_dup_pairs_matches_kernel_ground_truth(spark):
-    # distributed decode+fingerprint+banded join must equal the
-    # pure-python replay, with stereo-encoded clips (duplicated
-    # channel → same mono mix → same fingerprint) and declared-stub
-    # formats dropping out before the join
-    import itertools
-
-    import numpy as np
-
-    from osml10n_spark.audioops import encode_wav, fingerprint64
-    from osml10n_spark.operators.multimodal import (audio_dup_pairs,
-                                                    audio_features)
-    from osml10n_spark.sources.datagen import audio_for_id
-
-    rows, fp = [], {}
-    for i in range(30):
-        s, sr = audio_for_id(55, i, 0.3)
-        payload = encode_wav(np.stack([s, s], 1), sr) if i % 5 == 0 \
-            else encode_wav(s, sr)
-        rows.append((f"a{i:03d}", payload, "wav"))
-        fp[f"a{i:03d}"] = fingerprint64(s)
-    rows.append(("astub", b"\x00" * 16, "ogg"))
-    df = spark.createDataFrame(rows,
-                               "audio_id string, bytes binary, fmt string")
-    feats = {r.audio_id: r for r in audio_features(df).collect()}
-    assert not feats["astub"].decoded
-    assert feats["a000"].decoded and feats["a000"].fingerprint == fp["a000"]
-    assert abs(feats["a001"].duration_s - 1.0) < 1e-9
-    got = {(r.a_id, r.b_id, r.hamming)
-           for r in audio_dup_pairs(df, max_hamming=4).collect()}
-    want = {(a, b, bin((fp[a] ^ fp[b]) & ((1 << 64) - 1)).count("1"))
-            for a, b in itertools.combinations(sorted(fp), 2)
-            if bin((fp[a] ^ fp[b]) & ((1 << 64) - 1)).count("1") <= 4}
-    assert want and got == want

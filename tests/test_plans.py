@@ -120,23 +120,6 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path_factory, staged):
         spark.sql("DROP TABLE IF EXISTS b_right")
 
 
-def test_embedding_dups_plan_is_bucketed_not_cartesian(spark):
-    """Sign-band blocking must plan as equi-joins — the round-1 all-pairs
-    theta join (cartesian at scale) is gone from the default path."""
-    from osml10n_spark.operators.dedup import embedding_dups
-    from osml10n_spark.plans import physical_plan
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = physical_plan(embedding_dups(e, "vec_id", "embedding",
-                                        threshold=0.9))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the brute-force small-n oracle path still exists, explicitly
-    brute = physical_plan(embedding_dups(e.limit(50), "vec_id", "embedding",
-                                         threshold=0.9, brute=True))
-    assert ("BroadcastNestedLoopJoin" in brute
-            or "CartesianProduct" in brute)
-
-
 def test_image_dup_pairs_plan_is_equijoin_and_pruned(spark, staged):
     """The banded Hamming join must plan as an equi-join on (band,
     bkey) — no cartesian / nested-loop anywhere — and the image payload
@@ -208,15 +191,6 @@ def test_knn_geo_bq_plan_has_no_candidate_shuffle(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_simhash_is_jvm_native(spark):
-    """The portable md5-nibble simhash never crosses into Python."""
-    from osml10n_spark.operators.dedup import simhash64
-    from osml10n_spark.plans import physical_plan
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = physical_plan(simhash64(d, "doc_id", "text"))
-    assert "EvalPython" not in plan
-
-
 def test_tiled_layout_prunes_partitions(spark, tmp_path_factory, staged):
     """The geo-partitioned write layout gives partition pruning for
     cell-prefix predicates: the scan must list a PartitionFilter and
@@ -236,25 +210,6 @@ def test_tiled_layout_prunes_partitions(spark, tmp_path_factory, staged):
     n_parts = tiled.select("cell_prefix").distinct().count()
     assert n_parts > 1
     assert q.count() == tiled.filter(F.col("cell_prefix") == one_prefix).count()
-
-
-def test_dup_components_round_is_equi_join_only(spark):
-    """One connected-components round (neighbor-min + pointer jump)
-    must plan as hash/sort-merge equi-joins — no CartesianProduct, no
-    BroadcastNestedLoopJoin (the self-join ambiguity that would turn
-    the jump into a trivially-true cross join is the regression this
-    pins)."""
-    from osml10n_spark.operators.dedup import _cc_round
-    from osml10n_spark.plans.inspect import physical_plan
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(20)],
-                                  "a_id long, b_id long")
-    edges = (pairs.selectExpr("a_id AS src", "b_id AS dst")
-             .unionByName(pairs.selectExpr("b_id AS src", "a_id AS dst")))
-    labels = edges.selectExpr("src AS id").distinct() \
-        .selectExpr("id", "id AS comp")
-    plan = physical_plan(_cc_round(edges, labels), mode="simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
 
 
 def test_interval_join_is_equi_join(spark):

@@ -48,14 +48,3 @@ def test_binary_payload_survives_orc_roundtrip(spark, stored):
     ok = verify_payload(df)
     assert ok.filter(~F.col("ok")).count() == 0
 
-
-def test_videos_with_shared_frames_replayable():
-    # the q_frame_dups oracle replays this construction driver-side —
-    # it must be bit-deterministic and draw from a genuinely shared
-    # pool (cross-video repeats exist)
-    from osml10n_spark.sources.datagen import videos_with_shared_frames
-    a = videos_with_shared_frames(77)
-    b = videos_with_shared_frames(77)
-    assert len(a) == 15
-    assert all(x[0] == y[0] and (x[1] == y[1]).all()
-               for x, y in zip(a, b))

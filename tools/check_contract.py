@@ -2,6 +2,8 @@
 
 Usage: python tools/check_contract.py [SF_DIR] [query ...]
 With query names given, only those are checked (fast iteration).
+The session comes from engine.session.build_session, like the tests'
+and the bench: SPARK_GRAFT_CPUS and SPARK_DRIVER_MEMORY size it.
 """
 import sys, time
 from pathlib import Path
@@ -13,14 +15,11 @@ from tools.boundary_fixture import use_boundary_fixture
 use_boundary_fixture()          # before the JVM starts, so workers inherit it
 import __spark_entry__ as entrymod
 from osml10n_spark.contract import TABLES, norm_rows
-from pyspark.sql import SparkSession
+from osml10n_spark.engine.session import build_session
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.driver.memory", "16g")
-         .appName("contract-check").getOrCreate())
+spark = build_session(app_name="contract-check")
 spark.sparkContext.setLogLevel("ERROR")
 
 con = duckdb.connect()
