@@ -2,7 +2,7 @@
 
 Thin wrapper over osml10n_spark.contract — one queries() entry per
 implemented operator from SURVEY.md §2.  Every query carries a DuckDB
-oracle (48/48): SQL re-derivation where expressible,
+oracle (40/40): SQL re-derivation where expressible,
 replay-literal pinning (driver-side kernel replay, no Spark) for the
 pixel/iterative paths.
 """

@@ -4,7 +4,7 @@ engine with the capabilities of giggls/osml10n, rebuilt Spark-first.
 Public API:
     osml10n_spark.kernels   — pure localization kernels (golden parity)
     osml10n_spark.spatial   — packed geometry, cell index, covers
-    osml10n_spark.operators — spatial join, kNN, tiles, temporal, dedup, images
+    osml10n_spark.operators — spatial join, kNN, tiles, dedup, images
     osml10n_spark.engine    — localize() pipeline, snapshots, metrics
     osml10n_spark.udfs      — pandas UDF wrappers + SQL registration
 """

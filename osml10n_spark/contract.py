@@ -235,30 +235,6 @@ FROM nation
 """
 
 
-def q_salted_agg(spark, sf_dir):
-    """Skew pattern with exact parity: hot key spread over 8 salts,
-    partial aggregation per (key, salt), exact final merge — result
-    equals the direct group-by the oracle runs."""
-    o = _t(spark, sf_dir, "orders")
-    key = F.when(F.col("o_orderkey") % 3 == 0, F.lit("HOT")) \
-        .otherwise(F.concat(F.lit("k"), (F.col("o_orderkey") % 50).cast("string")))
-    salted = o.select(key.alias("key"),
-                      F.pmod(F.col("o_orderkey"), F.lit(8)).alias("salt"),
-                      F.col("o_orderkey").alias("v"))
-    partial = salted.groupBy("key", "salt").agg(
-        F.sum("v").alias("psum"), F.count("*").alias("pn"))
-    return partial.groupBy("key").agg(F.sum("psum").alias("total"),
-                                      F.sum("pn").alias("n"))
-
-
-Q_SALTED_AGG_SQL = """
-SELECT CASE WHEN o_orderkey % 3 = 0 THEN 'HOT'
-            ELSE 'k' || CAST(o_orderkey % 50 AS VARCHAR) END AS key,
-       CAST(SUM(o_orderkey) AS BIGINT) AS total, COUNT(*) AS n
-FROM orders GROUP BY 1
-"""
-
-
 def _nation_rects(spark, sf_dir):
     """Shared synthetic 15°×15° PiP rectangles from nation keys.  The
     *53/*29 multipliers are embedded verbatim in Q_PIP_SQUARES_SQL —
@@ -459,65 +435,6 @@ SELECT a.n_nationkey AS a_id, b.n_nationkey AS b_id,
        levenshtein(a.n_name, b.n_name) AS dist
 FROM nation a JOIN nation b ON a.n_nationkey < b.n_nationkey
 WHERE levenshtein(a.n_name, b.n_name) <= 5
-"""
-
-
-def q_dim_rollup(spark, sf_dir):
-    """J2-style broadcast dimension joins + rollup."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    joined = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-              .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-              .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
-    return joined.groupBy("r_name").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double").alias("revenue"),
-        F.count("*").alias("n_orders"))
-
-
-Q_DIM_ROLLUP_SQL = """
-SELECT r_name,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-  COUNT(*) AS n_orders
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-
-def q_antijoin_resume(spark, sf_dir):
-    """E4 snapshot-resume anti-join semantics."""
-    o = _t(spark, sf_dir, "orders")
-    committed = o.filter(F.col("o_orderkey") % 10 < 3).select("o_orderkey")
-    return (o.join(committed, "o_orderkey", "left_anti")
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n_pending")))
-
-
-Q_ANTIJOIN_SQL = """
-SELECT o_orderpriority, COUNT(*) AS n_pending
-FROM orders o
-WHERE NOT EXISTS (SELECT 1 FROM orders c
-                  WHERE c.o_orderkey = o.o_orderkey AND c.o_orderkey % 10 < 3)
-GROUP BY o_orderpriority
-"""
-
-
-def q_window_events(spark, sf_dir):
-    """Streaming-shaped tumbling window (batch equivalence)."""
-    e = _t(spark, sf_dir, "events")
-    return (e.groupBy(F.window(F.col("ts"), "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("hour_start"), "event_type", "n"))
-
-
-Q_WINDOW_EVENTS_SQL = """
-SELECT date_trunc('hour', ts) AS hour_start, event_type, COUNT(*) AS n
-FROM events GROUP BY 1, 2
 """
 
 
@@ -816,110 +733,6 @@ def q_payload_audit(spark, sf_dir):
         .alias("ok_frac"))
 
 
-def q_asof_join(spark, sf_dir):
-    """As-of (point-in-time) join: for every click event, the newest
-    error event at-or-before it for the same user — single-shuffle
-    union+carry-forward-window formulation, proven against DuckDB's
-    native ASOF JOIN."""
-    from .operators.temporal import asof_join
-    e = _t(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click") \
-        .select("event_id", "user_id", "ts")
-    errors = e.filter(F.col("event_type") == "error") \
-        .select("user_id", "ts", "value")
-    return asof_join(clicks, errors, "user_id", "ts", ["value"]) \
-        .select("event_id", "user_id", "asof_ts", "asof_value")
-
-
-Q_ASOF_JOIN_SQL = """
-SELECT c.event_id, c.user_id, e.ts AS asof_ts, e.value AS asof_value
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-ASOF JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'error') e
-  ON c.user_id = e.user_id AND c.ts >= e.ts
-"""
-
-
-def q_interval_join(spark, sf_dir):
-    """Interval overlap self-join: all pairs of events by the same
-    user whose [start, start + 600 + id%1800 s] activity windows
-    overlap — bucketed-blocking equi-join with exactly-once bucket
-    ownership (operators/temporal.py:interval_join), proven against
-    DuckDB's native range join.  All values are integer epoch-second
-    arithmetic; Spark's unix_timestamp truncates toward zero while
-    DuckDB's floor(epoch()) floors, which agree exactly for the
-    POSITIVE epochs this table carries (all events are 2024) — the
-    derivation is bit-identical here, but would diverge by 1s on
-    pre-1970 fractional timestamps."""
-    from .operators.temporal import interval_join
-    iv = _t(spark, sf_dir, "events").select(
-        F.col("event_id").alias("id"), "user_id",
-        F.unix_timestamp("ts").alias("s"))
-    iv = iv.withColumn(
-        "e", F.col("s") + 600 + F.col("id") % 1800)
-    pairs = interval_join(iv, iv, "user_id", "s", "e")
-    return (pairs.filter(F.col("id") < F.col("id_r"))
-            .select("user_id", F.col("id").alias("a_id"),
-                    F.col("id_r").alias("b_id"),
-                    (F.least("e", "e_r") - F.greatest("s", "s_r"))
-                    .alias("overlap_s")))
-
-
-Q_INTERVAL_JOIN_SQL = """
-WITH iv AS (
-  SELECT event_id AS id, user_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS s,
-         CAST(floor(epoch(ts)) AS BIGINT) + 600 + (event_id % 1800) AS e
-  FROM events)
-SELECT a.user_id AS user_id, a.id AS a_id, b.id AS b_id,
-       least(a.e, b.e) - greatest(a.s, b.s) AS overlap_s
-FROM iv a JOIN iv b
-  ON a.user_id = b.user_id AND a.id < b.id
- AND a.s <= b.e AND b.s <= a.e
-"""
-
-
-def q_merge_intervals(spark, sf_dir):
-    """Interval coalescing (gaps-and-islands, one shuffle): each
-    user's overlapping activity windows fuse into maximal merged
-    intervals with a source-row count — the same integer epoch-second
-    derivation as q_interval_join, gap=120s so near-adjacent windows
-    sessionize.  Oracle: the identical running-max/island-sum window
-    chain in DuckDB (tie order on equal (s, e) is island-neutral, see
-    merge_intervals docstring)."""
-    from .operators.temporal import merge_intervals
-    iv = _t(spark, sf_dir, "events").select(
-        F.col("event_id").alias("id"), "user_id",
-        F.unix_timestamp("ts").alias("s"))
-    iv = iv.withColumn("e", F.col("s") + 600 + F.col("id") % 1800)
-    return merge_intervals(iv, "user_id", "s", "e", gap=120) \
-        .select("user_id", "m_start", "m_end", "n_merged")
-
-
-Q_MERGE_INTERVALS_SQL = """
-WITH iv AS (
-  SELECT event_id AS id, user_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS s,
-         CAST(floor(epoch(ts)) AS BIGINT) + 600 + (event_id % 1800) AS e
-  FROM events),
-m AS (
-  SELECT user_id, s, e,
-         MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND 1 PRECEDING) AS run_max
-  FROM iv),
-isl AS (
-  SELECT user_id, s, e,
-         SUM(CASE WHEN run_max IS NULL OR s > run_max + 120
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY s, e
-                 ROWS UNBOUNDED PRECEDING) AS g
-  FROM m)
-SELECT user_id, MIN(s) AS m_start, MAX(e) AS m_end,
-       COUNT(*) AS n_merged
-FROM isl GROUP BY user_id, g
-"""
-
-
 def q_radius_join(spark, sf_dir):
     """Distance-range spatial join (all pairs within 2°) via ring-1
     cell equi-join + exact refine — no cross join."""
@@ -978,33 +791,6 @@ SELECT cc, ((6::BIGINT << 58) | morton) AS cell_id,
        THEN 'boundary' ELSE 'interior' END AS kind
 FROM s5
 """
-
-
-def q_session_events(spark, sf_dir):
-    """Streaming-grade session windows (30-min gap) per user, batch
-    equivalence against a gaps-and-islands oracle."""
-    e = _t(spark, sf_dir, "events")
-    return (e.groupBy(F.session_window(F.col("ts"), "30 minutes").alias("w"),
-                      "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select("user_id", F.col("w.start").alias("session_start"),
-                    "n_events"))
-
-
-Q_SESSION_EVENTS_SQL = """
-WITH o AS (SELECT user_id, ts,
-  CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-         OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-            >= INTERVAL 30 MINUTE
-       THEN 1 ELSE 0 END AS brk
-  FROM events),
-g AS (SELECT user_id, ts,
-  SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS UNBOUNDED PRECEDING) AS grp FROM o)
-SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
-FROM g GROUP BY user_id, grp
-"""
-
 
 
 def q_streetname_bilingual(spark, sf_dir):
@@ -1756,9 +1542,6 @@ REGISTRY: dict[str, Query] = {
     "q_exact_dedup": Query(q_exact_dedup, Q_EXACT_DEDUP_SQL),
     "q_minhash": Query(q_minhash, Q_MINHASH_SQL),
     "q_levenshtein_pairs": Query(q_levenshtein_pairs, Q_LEVENSHTEIN_SQL),
-    "q_dim_rollup": Query(q_dim_rollup, Q_DIM_ROLLUP_SQL),
-    "q_antijoin_resume": Query(q_antijoin_resume, Q_ANTIJOIN_SQL),
-    "q_window_events": Query(q_window_events, Q_WINDOW_EVENTS_SQL),
     "q_localize_documents": Query(q_localize_documents,
                                   Q_LOCALIZE_DOCUMENTS_SQL),
     "q_localize_mixed": Query(q_localize_mixed, Q_LOCALIZE_MIXED_SQL),
@@ -1771,18 +1554,13 @@ REGISTRY: dict[str, Query] = {
     "q_combined_quirks": Query(q_combined_quirks, Q_COMBINED_QUIRKS_SQL),
     "q_snapshot_compact": Query(q_snapshot_compact, Q_SNAPSHOT_COMPACT_SQL),
     "q_localize_latin": Query(q_localize_latin, Q_LOCALIZE_LATIN_SQL),
-    "q_session_events": Query(q_session_events, Q_SESSION_EVENTS_SQL),
     "q_image_features": Query(q_image_features, _image_features_sql),
     "q_payload_audit": Query(q_payload_audit, _payload_audit_sql),
     "q_write_tiled": Query(q_write_tiled, Q_WRITE_TILED_SQL),
-    "q_asof_join": Query(q_asof_join, Q_ASOF_JOIN_SQL),
-    "q_interval_join": Query(q_interval_join, Q_INTERVAL_JOIN_SQL),
-    "q_merge_intervals": Query(q_merge_intervals, Q_MERGE_INTERVALS_SQL),
     "q_radius_join": Query(q_radius_join, Q_RADIUS_JOIN_SQL),
     "q_polygon_cover": Query(q_polygon_cover, Q_POLYGON_COVER_SQL),
     "q_abbrev_uk": Query(q_abbrev_uk, Q_ABBREV_UK_SQL),
     "q_abbrev_all": Query(q_abbrev_all, Q_ABBREV_ALL_SQL),
-    "q_salted_agg": Query(q_salted_agg, Q_SALTED_AGG_SQL),
     "q_streetname_bilingual": Query(q_streetname_bilingual,
                                     Q_STREETNAME_BILINGUAL_SQL),
     "q_sql_registered": Query(q_sql_registered, Q_SQL_REGISTERED_SQL),
@@ -1829,7 +1607,7 @@ def resolve_oracles() -> Mapping[str, str]:
 # ------------------------------------------------------------------ compare
 
 # the parquet tables the oracles read, one DuckDB view each
-TABLES = ["region", "nation", "customer", "orders", "events", "documents"]
+TABLES = ["nation", "customer", "documents"]
 
 
 def _norm_cell(v):

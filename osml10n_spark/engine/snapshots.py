@@ -20,6 +20,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Container
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -58,16 +59,19 @@ class SnapshotStore:
         except (OSError, json.JSONDecodeError):
             return None
 
-    def _manifests(self) -> list[dict]:
+    def _walk(self, skip: Container[str] = ()):
+        """Yield ``(filename, manifest)`` for every readable manifest in
+        filename (= seq) order, skipping the filenames in ``skip``."""
         snaps_dir = os.path.join(self.root, "snapshots")
-        out = []
         if os.path.isdir(snaps_dir):
             for fn in sorted(os.listdir(snaps_dir)):
-                if fn.endswith(".json"):
+                if fn.endswith(".json") and fn not in skip:
                     m = self._read_manifest(os.path.join(snaps_dir, fn))
                     if m is not None:
-                        out.append(m)
-        return out
+                        yield fn, m
+
+    def _manifests(self) -> list[dict]:
+        return [m for _, m in self._walk()]
 
     def last_snapshot(self) -> dict | None:
         snaps = self._manifests()
@@ -181,71 +185,29 @@ class SnapshotStore:
         makes this the exactly-once replay filter: a crash between
         commit and the streaming checkpoint re-delivers the epoch, and
         the manifest proves it already landed)."""
-        return self.committed_epochs_since(-1)[0]
+        return self.committed_epochs_tracked(set())
 
     def committed_epochs_tracked(self, seen_files: set[str]) -> set[int]:
         """Exact incremental replay-filter refresh: reads every manifest
         whose FILENAME is not in ``seen_files`` (mutated in place), and
-        returns the epochs found in the newly read ones.  Unlike the
-        seq-cursor filter of :meth:`committed_epochs_since`, this cannot
-        miss a SEQ COLLISION: ``commit`` allocates seq at commit START
+        returns the epochs found in the newly read ones.  Filenames, not
+        a seq cursor, because ``commit`` allocates seq at commit START
         (``last_snapshot()+1``) but the manifest lands only after the
-        slow data write, so a stale concurrent committer can publish a
-        manifest whose seq is ≤ an already-scanned cursor — a filename
-        the cursor filter would skip forever (double-commit).  Tracking
-        read filenames keeps the per-call cost O(unseen manifests) with
-        full-rescan correctness.  Unparsable manifests are NOT added to
-        ``seen_files`` (a pre-atomic-era partial write stays re-checked,
-        and the cost of re-reading a corrupt file is one failed parse)."""
-        snaps_dir = os.path.join(self.root, "snapshots")
+        slow data write: a stale concurrent committer can publish a
+        manifest whose seq is at or below one already read (a SEQ
+        COLLISION), which a seq cursor would skip forever
+        (double-commit).  Tracking read filenames keeps the per-call
+        cost O(unseen manifests) with full-rescan correctness.
+        Unparsable manifests are NOT added to ``seen_files`` (a
+        pre-atomic-era partial write stays re-checked, and the cost of
+        re-reading a corrupt file is one failed parse)."""
         out: set[int] = set()
-        if os.path.isdir(snaps_dir):
-            for fn in sorted(os.listdir(snaps_dir)):
-                if not fn.endswith(".json") or fn in seen_files:
-                    continue
-                m = self._read_manifest(os.path.join(snaps_dir, fn))
-                if m is None:
-                    continue
-                seen_files.add(fn)
-                ep = m.get("metrics", {}).get("epoch")
-                if ep is not None:
-                    out.add(int(ep))
+        for fn, m in self._walk(seen_files):
+            seen_files.add(fn)
+            ep = m.get("metrics", {}).get("epoch")
+            if ep is not None:
+                out.add(int(ep))
         return out
-
-    def committed_epochs_since(self, after_seq: int) -> tuple[set[int], int]:
-        """Incremental replay-filter refresh: epochs from manifests with
-        seq > ``after_seq`` only, plus the highest seq seen.  Manifest
-        filenames lead with the zero-padded seq, so older files are
-        skipped WITHOUT reading their JSON — a long-running stream's
-        per-epoch stale-committer re-validation stays O(new manifests)
-        instead of O(all epochs ever committed).
-
-        CAVEAT: the filename-seq filter assumes seqs only grow, which a
-        CONCURRENT stale committer violates (seq collision — see
-        :meth:`committed_epochs_tracked`, which the streaming loops use
-        as their miss path for exactly that reason).  This method is
-        right for one-shot snapshots of the committed set."""
-        snaps_dir = os.path.join(self.root, "snapshots")
-        out: set[int] = set()
-        max_seq = after_seq
-        if os.path.isdir(snaps_dir):
-            for fn in sorted(os.listdir(snaps_dir)):
-                if not fn.endswith(".json"):
-                    continue
-                try:
-                    seq = int(fn.split("-", 1)[0])
-                except ValueError:
-                    seq = None
-                if seq is not None and seq <= after_seq:
-                    continue
-                m = self._read_manifest(os.path.join(snaps_dir, fn))
-                if m is None:
-                    continue
-                max_seq = max(max_seq, int(m.get("seq", -1)))
-                ep = m.get("metrics", {}).get("epoch")
-                if ep is not None:
-                    out.add(int(ep))
-        return out, max_seq
 
     def completed_partitions(self) -> set[int]:
         done: set[int] = set()
@@ -282,15 +244,17 @@ class SnapshotStore:
         return spark.read.parquet(*dirs)
 
     def pending(self, df: DataFrame, partition_col: str = "cell_prefix",
-                id_col: str = "image_id", row_level: bool = False,
-                spark: SparkSession | None = None) -> DataFrame:
-        """Rows not yet covered by a committed snapshot."""
+                id_col: str = "image_id",
+                row_level: bool = False) -> DataFrame:
+        """Rows not yet covered by a committed snapshot: rows of
+        completed partitions drop out, and with ``row_level`` so does
+        every row whose ``id_col`` is in the committed output."""
         done = self.completed_partitions()
         out = df
         if done:
             out = out.filter(~F.col(partition_col).isin([int(d) for d in done]))
-        if row_level and spark is not None:
-            committed = self.committed_output(spark)
+        if row_level:
+            committed = self.committed_output(df.sparkSession)
             if committed is not None:
                 out = out.join(committed.select(id_col).distinct(),
                                id_col, "left_anti")

@@ -7,17 +7,16 @@ snapshot per epoch — exactly-once via the snapshot manifest (replayed
 epochs skip completed partitions).
 
 ``localize_stream`` wires any streaming DataFrame with the input-table
-schema into the pipeline; ``windowed_cell_counts`` demonstrates the
-watermark + tumbling-window aggregation path on an event-time column.
+schema into the pipeline.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..engine.localize import localize
 from ..engine.snapshots import SnapshotStore
 
-__all__ = ["localize_stream", "windowed_cell_counts"]
+__all__ = ["localize_stream"]
 
 
 def localize_stream(stream_df: DataFrame, store_root: str,
@@ -69,13 +68,3 @@ def localize_stream(stream_df: DataFrame, store_root: str,
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
 
-
-def windowed_cell_counts(stream_df: DataFrame, ts_col: str = "ts",
-                         window: str = "10 minutes",
-                         watermark: str = "30 minutes") -> DataFrame:
-    """Watermarked tumbling-window per-cell activity counts (late data
-    beyond the watermark is dropped)."""
-    return (stream_df
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window), F.col("cell_id"))
-            .agg(F.count(F.lit(1)).alias("n_events")))

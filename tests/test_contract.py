@@ -90,10 +90,23 @@ def test_entry_smoke(spark):
 
 def test_every_query_has_an_oracle():
     """Spark-free check of the driver interface: queries() and
-    oracle_sql() name the same 48 queries."""
+    oracle_sql() name the same 40 queries."""
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     assert set(qs) == set(oracles)
-    assert len(qs) == len(oracles) == 48
+    assert len(qs) == len(oracles) == 40
+
+
+def test_tables_are_exactly_the_ones_oracles_read():
+    """Spark-free: the gate's view list is the set of tables the
+    oracles read, as DuckDB's parser sees them (CTE names excluded) —
+    no oracle reads a table outside TABLES, and no TABLES entry is
+    left over once the queries reading it are gone."""
+    oracles = entrymod.oracle_sql()
+    read = {name: duckdb.get_table_names(oracles[name]) for name in oracles}
+    outside = {name: t - set(TABLES) for name, t in read.items()
+               if t - set(TABLES)}
+    assert not outside, outside
+    assert set().union(*read.values()) == set(TABLES)
 
 
 def test_contract_import_builds_no_oracle_data():

@@ -1,5 +1,5 @@
 """Operator tests: kNN (cell path vs brute force), dedup family,
-temporal joins, multimodal plumbing."""
+multimodal plumbing."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -298,25 +298,6 @@ def test_multimodal_stub_path(spark):
     assert rows["x1"].decoded is False and rows["x2"].decoded is False
 
 
-def test_asof_join_semantics(spark):
-    """Newest right row at-or-before each left ts, per key; 'left' keeps
-    unmatched rows with nulls, 'inner' drops them."""
-    from osml10n_spark.operators.temporal import asof_join
-    left = spark.createDataFrame(
-        [("l1", 1, 10), ("l2", 1, 25), ("l3", 2, 5)],
-        "lid string, k long, ts long")
-    right = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (2, 7, "c")],
-        "k long, ts long, v string")
-    out = {r.lid: (r.asof_ts, r.asof_v) for r in
-           asof_join(left, right, "k", "ts", ["v"], how="left").collect()}
-    assert out["l1"] == (10, "a")        # equal ts matches (>= semantics)
-    assert out["l2"] == (20, "b")        # newest at-or-before
-    assert out["l3"] == (None, None)     # right row is in the future
-    inner = asof_join(left, right, "k", "ts", ["v"], how="inner")
-    assert {r.lid for r in inner.collect()} == {"l1", "l2"}
-
-
 def test_radius_join_matches_bruteforce(spark):
     from osml10n_spark.operators.spatial import radius_join
     pts = spark.read.parquet("/root/testdata/sf0.001/customer.parquet") \
@@ -354,86 +335,6 @@ def test_localize_robust_to_degenerate_rows(spark):
     assert out["d"] == "Ok"        # null-valued target tag skipped
 
 
-def test_asof_join_matches_pandas_merge_asof(spark):
-    """Randomized differential test: asof_join == pandas.merge_asof
-    (backward, allow_exact_matches) per key."""
-    import numpy as np
-    import pandas as pd
-    from osml10n_spark.operators.temporal import asof_join
-    rng = np.random.default_rng(11)
-    left = pd.DataFrame({
-        "lid": [f"l{i}" for i in range(200)],
-        "k": rng.integers(0, 5, 200),
-        "ts": rng.integers(0, 10_000, 200)})
-    right = pd.DataFrame({
-        "k": rng.integers(0, 5, 300),
-        "ts": np.sort(rng.choice(20_000, 300, replace=False)),  # unique ts
-        "v": [f"v{i}" for i in range(300)]})
-    got = asof_join(spark.createDataFrame(left),
-                    spark.createDataFrame(right), "k", "ts", ["v"],
-                    how="left").toPandas()
-    exp = pd.merge_asof(left.sort_values("ts"), right.sort_values("ts"),
-                        on="ts", by="k", direction="backward",
-                        allow_exact_matches=True)
-    gmap = dict(zip(got["lid"], got["asof_v"]))
-    emap = dict(zip(exp["lid"], exp["v"]))
-    assert all((gmap[l] == emap[l]) or (pd.isna(gmap[l]) and pd.isna(emap[l]))
-               for l in emap)
-
-
-def test_interval_join_matches_bruteforce(spark):
-    """Randomized differential test: bucketed interval_join == the
-    quadratic per-key overlap scan, including negative coordinates,
-    touching endpoints, and intervals spanning many buckets (forced by
-    a small explicit bucket_width)."""
-    import numpy as np
-    from osml10n_spark.operators.temporal import interval_join
-    rng = np.random.default_rng(23)
-    n = 300
-    s = rng.integers(-500, 500, n)
-    e = s + rng.integers(0, 120, n)          # lengths 0..119, W=16 → multi-bucket
-    k = rng.integers(0, 4, n)
-    rows = [(int(i), int(k[i]), int(s[i]), int(e[i])) for i in range(n)]
-    df = spark.createDataFrame(rows, "id long, k long, s long, e long")
-    for width in (16, None):                 # explicit multi-bucket + auto
-        # MULTISET comparison: a pair sharing several buckets must be
-        # emitted exactly once — a set compare would mask a regression
-        # in the ownership filter (duplicates collapse silently)
-        got = sorted((r.id, r.id_r) for r in
-                     interval_join(df, df, "k", "s", "e",
-                                   bucket_width=width).collect())
-        exp = sorted((a[0], b[0]) for a in rows for b in rows
-                     if a[1] == b[1] and a[2] <= b[3] and b[2] <= a[3])
-        assert got == exp and len(exp) > n   # non-trivial overlap set
-
-
-def test_interval_join_edges(spark):
-    from osml10n_spark.operators.temporal import interval_join
-    import pytest
-    a = spark.createDataFrame([(1, 0, 0, 10), (2, 0, 10, 20), (3, 0, 21, 5)],
-                              "id long, k long, s long, e long")
-    out = sorted((r.id, r.id_r) for r in
-                 interval_join(a, a, "k", "s", "e", bucket_width=4).collect())
-    # touching endpoints (e=10, s=10) overlap under CLOSED semantics;
-    # the s>e row (id 3) is an empty interval and matches nothing —
-    # not even itself; multiset compare pins exactly-once emission
-    assert out == [(1, 1), (1, 2), (2, 1), (2, 2)]
-    with pytest.raises(ValueError):
-        interval_join(a, a, "k", "s", "e", bucket_width=0)
-    with pytest.raises(ValueError):
-        interval_join(a, a, "s", "s", "e")
-    # internal bucket column name must not be silently destroyed
-    with pytest.raises(ValueError, match="_b"):
-        interval_join(a.withColumnRenamed("e", "_b"), a, "k", "s", "e")
-    # an outlier interval against the derived width fails LOUDLY at
-    # execution instead of silently exploding into len/W rows
-    wide = a.unionByName(spark.createDataFrame(
-        [(9, 0, 0, 10_000_000)], "id long, k long, s long, e long"))
-    with pytest.raises(Exception, match="spans more than"):
-        interval_join(wide, wide, "k", "s", "e", bucket_width=4,
-                      max_span_buckets=1000).collect()
-
-
 def test_cell_density_matches_bruteforce(spark):
     """Scatter-on-histogram k-ring density == per-cell brute-force
     gather, including lon wrap at the antimeridian and lat-edge drop."""
@@ -463,49 +364,6 @@ def test_cell_density_matches_bruteforce(spark):
     assert got == dict(exp) and len(got) > len(counts)
 
 
-def test_merge_intervals_matches_reference(spark):
-    """Randomized differential test vs a driver-side sweep merge,
-    including duplicate (s, e) rows, touching endpoints, gap>0, and
-    dropped empty intervals."""
-    import numpy as np
-    from osml10n_spark.operators.temporal import merge_intervals
-    rng = np.random.default_rng(41)
-    n = 400
-    s = rng.integers(-200, 800, n)
-    e = s + rng.integers(-5, 60, n)          # ~8% empty (s > e)
-    k = rng.integers(0, 5, n)
-    rows = [(int(k[i]), int(s[i]), int(e[i])) for i in range(n)]
-    df = spark.createDataFrame(rows, "k long, s long, e long")
-    for gap in (0, 7):
-        got = sorted((r.k, r.m_start, r.m_end, r.n_merged) for r in
-                     merge_intervals(df, "k", "s", "e", gap=gap).collect())
-        exp = []
-        for key in set(k for k, _, _ in rows):
-            ivs = sorted((s, e) for kk, s, e in rows if kk == key and s <= e)
-            cur = None
-            for s0, e0 in ivs:
-                if cur and s0 <= cur[1] + gap:
-                    cur = [cur[0], max(cur[1], e0), cur[2] + 1]
-                else:
-                    if cur:
-                        exp.append((key, *cur))
-                    cur = [s0, e0, 1]
-            if cur:
-                exp.append((key, *cur))
-        assert got == sorted(exp) and len(exp) > 5
-
-
-def test_asof_join_null_payload_not_resurrected(spark):
-    """The matched right row's NULL payload must come through as NULL —
-    not an older row's non-null value (atomic row carry)."""
-    from osml10n_spark.operators.temporal import asof_join
-    left = spark.createDataFrame([("l1", 1, 25)], "lid string, k long, ts long")
-    right = spark.createDataFrame([(1, 10, "a"), (1, 20, None)],
-                                  "k long, ts long, v string")
-    row = asof_join(left, right, "k", "ts", ["v"], how="left").collect()[0]
-    assert row.asof_ts == 20 and row.asof_v is None
-
-
 def test_radius_join_wide_radius_covers(spark):
     """radius > coarsest cell edge (90°) must widen the ring, not drop
     far pairs."""
@@ -517,4 +375,3 @@ def test_radius_join_wide_radius_covers(spark):
            radius_join(pts, pts, 120.0, lid_col="id", rid_col="id").collect()}
     assert (1, 2) in got and (2, 3) in got and (2, 1) in got
     assert (1, 3) not in got          # 170° > 120°
-

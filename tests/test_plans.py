@@ -212,23 +212,6 @@ def test_tiled_layout_prunes_partitions(spark, tmp_path_factory, staged):
     assert q.count() == tiled.filter(F.col("cell_prefix") == one_prefix).count()
 
 
-def test_interval_join_is_equi_join(spark):
-    """The bucketed interval join must plan as a (key, bucket)
-    equi-join — no CartesianProduct / BroadcastNestedLoopJoin from the
-    range predicates (they ride the join as post-filters), and the
-    bucket explode stays in whole-stage codegen (no Python eval)."""
-    from osml10n_spark.operators.temporal import interval_join
-    from osml10n_spark.plans.inspect import physical_plan
-    df = spark.createDataFrame([(i, i % 3, i * 10, i * 10 + 25)
-                                for i in range(50)],
-                               "id long, k long, s long, e long")
-    out = interval_join(df, df, "k", "s", "e", bucket_width=16)
-    plan = physical_plan(out, mode="simple")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    assert python_eval_count(out) == 0
-
-
 def test_cell_density_is_histogram_convolution(spark):
     """The smoothing must run on the histogram, not the rows: plan is
     two aggregations with the static-offset explode between them — NO
@@ -246,20 +229,6 @@ def test_cell_density_is_histogram_convolution(spark):
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert python_eval_count(out) == 0
     assert exchange_count(out) == 2     # row→hist + hist→density aggs
-
-
-def test_merge_intervals_single_exchange(spark):
-    """Gaps-and-islands must cost ONE shuffle: HashPartitioning(key)
-    from the island window already satisfies the (key, island)
-    clustering of the final aggregation, so a second exchange would be
-    a plan regression.  Also: no Python eval anywhere."""
-    from osml10n_spark.operators.temporal import merge_intervals
-    df = spark.createDataFrame([(i % 3, i * 5, i * 5 + 8)
-                                for i in range(60)],
-                               "k long, s long, e long")
-    out = merge_intervals(df, "k", "s", "e")
-    assert exchange_count(out) == 1
-    assert python_eval_count(out) == 0
 
 
 def test_headline_pipelines_compile_under_wholestage_codegen(spark):

@@ -76,15 +76,17 @@ def test_manifest_lineage_matches_committed_data(spark, tmp_path):
 
 
 def test_row_level_pending(spark, tmp_path):
-    images = generate_images(spark, 80, seed=17, with_images=False)
-    root = str(tmp_path / "rl")
-    run_localization_job(spark, images, root, "en", groups_per_commit=2,
-                         max_commits=1)
-    store = SnapshotStore(root)
-    staged = add_cell_prefix(images)
-    pend = store.pending(staged, row_level=True, spark=spark)
-    done_rows = store.committed_output(spark).count()
-    assert pend.count() == 80 - done_rows
+    """A snapshot with no partition bookkeeping covers its rows only
+    through the row-level anti-join on image_id."""
+    staged = add_cell_prefix(generate_images(spark, 40, seed=17,
+                                             with_images=False))
+    store = SnapshotStore(str(tmp_path / "rl"))
+    store.commit(staged.orderBy("image_id").limit(15), [])
+    assert store.completed_partitions() == set()
+    pend = store.pending(staged, row_level=True)
+    assert pend.count() == 25
+    done = store.committed_output(spark).select("image_id")
+    assert pend.join(done, "image_id").isEmpty()
 
 
 def test_streaming_foreachbatch(spark, tmp_path):
@@ -241,38 +243,14 @@ def test_snapshot_compaction(spark, tmp_path):
     assert store.compact(spark) is None
 
 
-def test_committed_epochs_since_incremental_scan(spark, tmp_path):
-    """The streaming replay filter's miss-path refresh reads only
-    manifests NEWER than the last scanned seq (filename-filtered), and
-    composes to the same set as the full scan."""
-    from osml10n_spark.engine.job import add_cell_prefix
-    from osml10n_spark.sources.datagen import generate_images
-
-    root = str(tmp_path / "snap_inc")
-    store = SnapshotStore(root)
-    batch = add_cell_prefix(generate_images(spark, 10, seed=5,
-                                            with_images=False))
-    store.commit(batch, [0], metrics={"epoch": 0})
-    store.commit(batch, [1], metrics={"epoch": 1})
-    eps, seq = store.committed_epochs_since(-1)
-    assert eps == {0, 1} and seq == 1
-    # no new manifests → empty delta, cursor unchanged
-    assert store.committed_epochs_since(seq) == (set(), seq)
-    store.commit(batch, [2], metrics={"epoch": 7})
-    new, seq2 = store.committed_epochs_since(seq)
-    assert new == {7} and seq2 == 2
-    # full scan still sees everything (compat surface)
-    assert store.committed_epochs() == {0, 1, 7}
-
-
 def test_committed_epochs_tracked_catches_seq_collision(spark, tmp_path):
     """The streaming miss path must detect an epoch landed by a STALE
     CONCURRENT committer whose manifest seq collides with an
-    already-scanned one: commit() allocates seq at commit start but
+    already-read one: commit() allocates seq at commit start but
     publishes the manifest only after the slow data write, so the
-    manifest can appear with seq ≤ the reader's cursor.  The old
-    seq-cursor refresh (committed_epochs_since) skips that filename
-    forever → double commit; the filename-tracked rescan reads it."""
+    manifest can appear with a seq the reader has already seen.  A
+    seq-cursor refresh would skip that filename forever (double
+    commit); the filename-tracked rescan reads it."""
     import json
     import os
     import shutil
@@ -286,17 +264,15 @@ def test_committed_epochs_tracked_catches_seq_collision(spark, tmp_path):
                                             with_images=False))
     m0 = store.commit(batch, [0], metrics={"epoch": 0})
 
-    # the stream starts: full load, cursor/tracking established
+    # the stream starts: full load, tracking established
     seen: set[str] = set()
     committed = store.committed_epochs_tracked(seen)
-    _, cursor = store.committed_epochs_since(-1)
     assert committed == {0}
 
     # stale committer: allocated seq=1 BEFORE the stream's own seq=1
     # commit, lands AFTER it — same leading seq, different uuid suffix
     m1 = store.commit(batch, [1], metrics={"epoch": 1})       # stream's
     committed.update(store.committed_epochs_tracked(seen))
-    _, cursor = store.committed_epochs_since(cursor)
     stale_id = "000001-deadbeef"
     stale_dir = os.path.join(root, "data", stale_id)
     shutil.copytree(m1["data_dir"], stale_dir)
@@ -306,9 +282,6 @@ def test_committed_epochs_tracked_catches_seq_collision(spark, tmp_path):
               "w") as f:
         json.dump(stale, f)
 
-    # old cursor refresh misses it (seq 1 ≤ cursor 1) — the bug
-    missed, _ = store.committed_epochs_since(cursor)
-    assert 99 not in missed
     # tracked rescan reads the unseen filename and finds epoch 99
     committed.update(store.committed_epochs_tracked(seen))
     assert 99 in committed and committed == {0, 1, 99}
