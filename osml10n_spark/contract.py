@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .kernels.scripts import RE_CJK, RE_CYRILLIC, RE_NON_LATIN, RE_THAI
 from .operators.dedup import exact_dedup, minhash_signature
 from .operators.spatial import (assign_cells, cell_histogram, knn_cells,
-                                pip_join_rects)
+                                pip_join)
 from .udfs import (make_cascade_udf, udf_country_name, udf_street_abbrev,
                    udf_unaccent)
 
@@ -236,16 +236,18 @@ FROM nation
 
 
 def _nation_rects(spark, sf_dir):
-    """Shared synthetic 15°×15° PiP rectangles from nation keys.  The
-    *53/*29 multipliers are embedded verbatim in Q_PIP_SQUARES_SQL —
-    the one oracle all three q_pip_* physical plans share — so the
-    derivation lives in exactly one place on the Spark side too."""
-    return [(r.n_name,
-             ((r.n_nationkey * 53) % 300) - 170.0,
-             ((r.n_nationkey * 29) % 140) - 80.0,
-             ((r.n_nationkey * 53) % 300) - 170.0 + 15.0,
-             ((r.n_nationkey * 29) % 140) - 80.0 + 15.0)
-            for r in _t(spark, sf_dir, "nation").collect()]
+    """Shared synthetic 15°×15° PiP rectangles from nation keys, packed
+    as polygons.  The *53/*29 multipliers are embedded verbatim in
+    Q_PIP_SQUARES_SQL — the one oracle all three q_pip_* physical
+    plans share — and in Q_POLYGON_COVER_SQL, so the derivation lives
+    in exactly one place on the Spark side too."""
+    from .spatial.geometry import pack_rect
+    out = []
+    for r in _t(spark, sf_dir, "nation").collect():
+        x0 = ((r.n_nationkey * 53) % 300) - 170.0
+        y0 = ((r.n_nationkey * 29) % 140) - 80.0
+        out.append(pack_rect(r.n_name, x0, y0, x0 + 15.0, y0 + 15.0))
+    return out
 
 
 def q_pip_squares(spark, sf_dir):
@@ -253,7 +255,7 @@ def q_pip_squares(spark, sf_dir):
     squares from nation keys) — ray-cast on the Spark side, range
     predicates in the oracle."""
     pts = _points(spark, sf_dir)
-    return pip_join_rects(pts, _nation_rects(spark, sf_dir)) \
+    return pip_join(pts, _nation_rects(spark, sf_dir)) \
         .select(F.col("id").alias("pid"), "cc")
 
 
@@ -765,11 +767,7 @@ def q_polygon_cover(spark, sf_dir):
     boundary and the rest interior, so SQL can re-derive it including
     the packed morton ids."""
     from .operators.spatial import polygon_cover_table
-    from .spatial.geometry import pack_polygon
-    polys = [pack_polygon(cc, [[(x0, y0), (x1, y0), (x1, y1), (x0, y1),
-                                (x0, y0)]])
-             for cc, x0, y0, x1, y1 in _nation_rects(spark, sf_dir)]
-    return polygon_cover_table(spark, polys, res=6)
+    return polygon_cover_table(spark, _nation_rects(spark, sf_dir), res=6)
 
 
 Q_POLYGON_COVER_SQL = f"""

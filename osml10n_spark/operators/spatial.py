@@ -1,15 +1,16 @@
 """Spatial DataFrame operators: country assignment (broadcast PiP),
-cell/tile assignment, kNN join in one tile-grouped pass, and
-skew-aware helpers.
+cell/tile assignment, kNN join through one tile-grouped top-k kernel,
+and skew-aware helpers.
 
 All operators are DataFrame→DataFrame, shuffle-conscious:
 
 - assign_country / assign_cells / assign_tiles are map-side only (no
   shuffle): the polygon index is per-executor broadcast state.
-- knn_geo (brute-force) exists as the small-side baseline and oracle;
-  knn_cells is the scale path — queries fan out to the coarse tiles of
-  their k-ring, one numpy distance pass per tile, one window top-k,
-  brute force only for queries the ring cannot prove.
+- knn_geo (brute-force window plan) exists as the small-side baseline
+  and the reference for knn_cells; knn_cells is the scale path —
+  queries fan out to the coarse tiles of their k-ring, one numpy
+  distance pass per tile, one window top-k; the queries the ring
+  cannot prove run the same pass again against every occupied tile.
 - cell_histogram + salted_key implement heavy-cell detection/salting
   for skewed spatial data (dense urban cells), complementing AQE.
 """
@@ -23,14 +24,14 @@ from ..udfs import udf_country_gated, udf_country_lookup
 
 __all__ = [
     "assign_country", "assign_cells", "assign_tiles",
-    "knn_geo", "knn_geo_bq", "knn_cells", "cell_histogram", "salted_key",
-    "radius_join", "pip_join_rects", "pip_join_via_cover",
+    "knn_geo", "knn_cells", "cell_histogram", "salted_key",
+    "radius_join", "pip_join", "pip_join_via_cover",
     "polygon_cover_table", "KNN_LAST_RUN",
 ]
 
 # Observability for knn_cells (driver-side, overwritten per call): the
-# density-derived ring, passes run (always 1) and the queries routed to
-# brute force — invisible in the physical plan.
+# density-derived ring, tile passes run (2 when a residue ran) and the
+# residue's query count — invisible in the physical plan.
 KNN_LAST_RUN: dict = {}
 
 # knn_cells groups by tile = cell_id >> _TILE_SHIFT (a 16×16 block of
@@ -111,104 +112,23 @@ def _sq_dist(qlon, qlat, ilon, ilat):
 
 
 def knn_geo(queries: DataFrame, items: DataFrame, k: int,
-            qid_col: str = "qid", iid_col: str = "iid",
-            broadcast_items: bool = True) -> DataFrame:
-    """Brute-force top-k nearest items per query point.
+            qid_col: str = "qid", iid_col: str = "iid") -> DataFrame:
+    """Brute-force top-k nearest items per query point: a cross join
+    against the broadcast items and one window by qid.
 
-    Correct for any input; intended for small/broadcastable item sides
-    and as the oracle for knn_cells.  Output: (qid, iid, dist2, rank).
+    Correct for any input; intended for small item sides and as the
+    reference plan for knn_cells.  Output: (qid, iid, dist2, rank).
     """
     q = queries.select(F.col(qid_col).alias("qid"),
                        F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat"))
-    i = items.select(F.col(iid_col).alias("iid"),
-                     F.col("lon").alias("i_lon"), F.col("lat").alias("i_lat"))
-    if broadcast_items:
-        i = F.broadcast(i)
+    i = F.broadcast(items.select(F.col(iid_col).alias("iid"),
+                                 F.col("lon").alias("i_lon"),
+                                 F.col("lat").alias("i_lat")))
     joined = q.crossJoin(i).withColumn(
         "dist2", _sq_dist(F.col("q_lon"), F.col("q_lat"),
                           F.col("i_lon"), F.col("i_lat")))
     w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(), F.col("iid").asc())
     return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "iid", "dist2", "rank"))
-
-
-def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
-               qid_col: str = "qid", iid_col: str = "iid",
-               max_queries: int = 4096) -> DataFrame:
-    """Brute-force kNN for a SMALL query set (broadcast-queries plan):
-    queries are collected (bounded IN-FUNCTION at ``max_queries`` — an
-    oversized query side raises instead of flooding the driver; the
-    limit+1 probe collects at most that many rows) and closed over a
-    mapInPandas partial top-k over the items — a numpy distance matrix
-    per Arrow batch keeps the k best (dist2, iid)-ordered candidates
-    per query per partition, and a final exact window ranks the tiny
-    nq·k·n_partitions partial frame.  No q×n candidate materialization,
-    no big shuffle: the alternative (knn_geo without broadcast) windows
-    |queries|·|items| rows by qid — ~10M-row shuffle for the 64-query
-    residue at sf0.1, measured ~5s of the round-2 kNN record.
-
-    dist2 is bit-identical to knn_geo's JVM expression (same IEEE op
-    sequence), and per-partition selection keeps ALL rows tied at the
-    k-th distance before (dist2, iid) ordering, so the merged result is
-    exactly knn_geo's — ties included.  Output: (qid, iid, dist2, rank).
-    """
-    import numpy as np
-    import pandas as pd
-
-    qrows = queries.select(F.col(qid_col).alias("qid"),
-                           F.col("lon"), F.col("lat")) \
-        .limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"knn_geo_bq collects the query side onto the driver: got "
-            f"> {max_queries} queries; raise max_queries deliberately or "
-            f"use knn_cells/knn_geo for large query sets")
-    if not qrows:
-        empty = items.sparkSession.createDataFrame(
-            [], schema=f"qid {queries.schema[qid_col].dataType.simpleString()}, "
-                       f"iid {items.schema[iid_col].dataType.simpleString()}, "
-                       f"dist2 double, rank int")
-        return empty
-    qids = [r.qid for r in qrows]
-    q_lon = np.array([r.lon for r in qrows], dtype=np.float64)
-    q_lat = np.array([r.lat for r in qrows], dtype=np.float64)
-    nq = len(qids)
-    qt = queries.schema[qid_col].dataType.simpleString()
-    it = items.schema[iid_col].dataType.simpleString()
-    out_schema = f"qid {qt}, iid {it}, dist2 double"
-
-    def part(batches):
-        for pdf in batches:
-            ilon = pdf["lon"].to_numpy(dtype=np.float64)
-            ilat = pdf["lat"].to_numpy(dtype=np.float64)
-            iid = pdf["iid"].to_numpy()
-            if len(ilon) == 0:
-                continue
-            dx = ilon[:, None] - q_lon[None, :]
-            dy = ilat[:, None] - q_lat[None, :]
-            d = dx * dx + dy * dy            # same IEEE chain as _sq_dist
-            out_q, out_i, out_d = [], [], []
-            for j in range(nq):
-                dj = d[:, j]
-                if len(dj) > k:
-                    kth = np.partition(dj, k - 1)[k - 1]
-                    sel = np.nonzero(dj <= kth)[0]
-                else:
-                    sel = np.arange(len(dj))
-                if len(sel) > k:             # ties at the kth distance
-                    sel = sorted(sel, key=lambda t: (dj[t], iid[t]))[:k]
-                for t in sel:
-                    out_q.append(qids[j])
-                    out_i.append(iid[t])
-                    out_d.append(float(dj[t]))
-            yield pd.DataFrame({"qid": out_q, "iid": out_i, "dist2": out_d})
-
-    partial = items.select(F.col(iid_col).alias("iid"), "lon", "lat") \
-        .mapInPandas(part, schema=out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
-                                          F.col("iid").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "iid", "dist2", "rank"))
 
@@ -220,64 +140,16 @@ def _has_coords() -> Column:
             & ~F.isnan("lon") & ~F.isnan("lat"))
 
 
-def knn_cells(queries: DataFrame, items: DataFrame, k: int,
-              res: int = 7, qid_col: str = "qid",
-              iid_col: str = "iid") -> DataFrame:
-    """Scalable kNN: one tile-grouped numpy pass + exact rank (J5/W5).
-
-    Items and queries meet in coarse tiles (``cell_id >> _TILE_SHIFT``
-    at ``res``), so each Python call amortizes over a whole tile:
-    - one occupancy aggregate picks the ring, the smallest whose
-      (2r+1)² cell neighbourhood holds ≥4k items at the mean cell
-      occupancy, +1 when occupancy is dispersed (sd > mean: hotspot
-      corpora such as the Tokyo cell);
-    - each query fans out to the tiles of its ring cells
-      (`_explode_neighbor_cells`), deduplicated per (qid, tile);
-    - one cogroup per tile computes the `_sq_dist` chain as a
-      queries × items numpy matrix and keeps, per query, the items
-      within the guard (ring·cell)² and at most its kth distance
-      (every tie at the kth is kept);
-    - one window by qid ranks the kept rows by (dist2, iid).
-
-    A query holding k ranked rows is exact: every item within the
-    guard lies in its ring and so in its tiles, hence its true top-k,
-    ties included, was kept.  The unproven rest (sparse regions) goes
-    to brute force: `knn_geo_bq` for ≤1,024 queries, else `knn_geo`.
-
-    Rows with a NULL or NaN lon/lat are dropped on both sides first:
-    such a query returns no rows and such an item is nobody's
-    neighbour.  Output: (qid, iid, dist2, rank), persisted and
-    materialized; the caller unpersists it.
-    """
+def _tile_pass(q_tiles: DataFrame, items: DataFrame, k: int,
+               guard: float) -> DataFrame:
+    """One tile-grouped top-k pass: ``q_tiles`` (qid, q_lon, q_lat,
+    tile) and ``items`` (iid, i_lon, i_lat, tile) meet in one cogroup
+    per tile, which computes the `_sq_dist` chain as a queries × items
+    numpy matrix (chunked to ≤ _CHUNK_CELLS entries) and keeps, per
+    query, the items within ``guard`` and at most its kth distance
+    (every tie at the kth is kept); one window by qid then ranks the
+    kept rows by (dist2, iid).  Output: (qid, iid, dist2, rank ≤ k)."""
     import numpy as np
-
-    q = assign_cells(queries.filter(_has_coords()).select(
-        F.col(qid_col).alias("qid"), F.col("lon").alias("q_lon"),
-        F.col("lat").alias("q_lat")),
-        res, lon_col="q_lon", lat_col="q_lat", out_col="q_cell").persist()
-    i = assign_cells(items.filter(_has_coords()).select(
-        F.col(iid_col).alias("iid"), F.col("lon").alias("i_lon"),
-        F.col("lat").alias("i_lat")),
-        res, lon_col="i_lon", lat_col="i_lat", out_col="i_cell") \
-        .withColumn("tile", F.shiftright("i_cell", _TILE_SHIFT)).persist()
-
-    occ = (i.groupBy("i_cell").agg(F.count("*").alias("cn"))
-           .agg(F.sum("cn").alias("n"), F.count("*").alias("c"),
-                F.stddev_pop("cn").alias("sd")).collect()[0])
-    avg = (occ.n or 0) / max(occ.c, 1) or 1.0
-    ring = 1
-    while (2 * ring + 1) ** 2 * avg < 4.0 * k and ring < 8:
-        ring += 1
-    if (occ.sd or 0.0) > avg:
-        ring += 1
-    guard = (ring * 180.0 / 2 ** res) ** 2
-
-    q_tiles = (_explode_neighbor_cells(q, "q_cell", res, ring)
-               .select("qid", "q_lon", "q_lat",
-                       F.shiftright("n_cell", _TILE_SHIFT).alias("tile"))
-               .distinct())
-    qt = queries.schema[qid_col].dataType.simpleString()
-    it = items.schema[iid_col].dataType.simpleString()
 
     def tile_top(qp: pd.DataFrame, ip: pd.DataFrame) -> pd.DataFrame:
         qids, iids = qp["qid"].to_numpy(), ip["iid"].to_numpy()
@@ -300,26 +172,88 @@ def knn_cells(queries: DataFrame, items: DataFrame, k: int,
                                        "dist2": d[r, c]}))
         return pd.concat(parts, ignore_index=True)
 
+    qt = q_tiles.schema["qid"].dataType.simpleString()
+    it = items.schema["iid"].dataType.simpleString()
     w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
                                           F.col("iid").asc())
-    ranked = (q_tiles.groupBy("tile").cogroup(i.drop("i_cell").groupBy("tile"))
-              .applyInPandas(tile_top, f"qid {qt}, iid {it}, dist2 double")
-              .withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k)).persist()
+    return (q_tiles.groupBy("tile").cogroup(items.groupBy("tile"))
+            .applyInPandas(tile_top, f"qid {qt}, iid {it}, dist2 double")
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def knn_cells(queries: DataFrame, items: DataFrame, k: int,
+              res: int = 7, qid_col: str = "qid",
+              iid_col: str = "iid") -> DataFrame:
+    """Scalable kNN: tile-grouped numpy top-k + exact rank (J5/W5).
+
+    Items and queries meet in coarse tiles (``cell_id >> _TILE_SHIFT``
+    at ``res``), so each Python call amortizes over a whole tile:
+    - one occupancy aggregate picks the ring, the smallest whose
+      (2r+1)² cell neighbourhood holds ≥4k items at the mean cell
+      occupancy, +1 when occupancy is dispersed (sd > mean: hotspot
+      corpora such as the Tokyo cell);
+    - each query fans out to the tiles of its ring cells
+      (`_explode_neighbor_cells`), deduplicated per (qid, tile);
+    - `_tile_pass` keeps, per query, the items within the guard
+      (ring·cell)² and ranks them.
+
+    A query holding k ranked rows is exact: every item within the
+    guard lies in its ring and so in its tiles, hence its true top-k,
+    ties included, was kept.  The unproven rest (sparse regions) fans
+    out to every occupied tile (a literal array of the items' distinct
+    tile ids, no join) and runs through `_tile_pass` again with no
+    guard, which makes its top-k exact too.
+
+    Rows with a NULL or NaN lon/lat are dropped on both sides first:
+    such a query returns no rows and such an item is nobody's
+    neighbour.  Output: (qid, iid, dist2, rank), persisted and
+    materialized; the caller unpersists it.
+    """
+    q = assign_cells(queries.filter(_has_coords()).select(
+        F.col(qid_col).alias("qid"), F.col("lon").alias("q_lon"),
+        F.col("lat").alias("q_lat")),
+        res, lon_col="q_lon", lat_col="q_lat", out_col="q_cell").persist()
+    i = assign_cells(items.filter(_has_coords()).select(
+        F.col(iid_col).alias("iid"), F.col("lon").alias("i_lon"),
+        F.col("lat").alias("i_lat")),
+        res, lon_col="i_lon", lat_col="i_lat", out_col="i_cell") \
+        .withColumn("tile", F.shiftright("i_cell", _TILE_SHIFT)).persist()
+
+    occ = (i.groupBy("i_cell").agg(F.count("*").alias("cn"))
+           .agg(F.sum("cn").alias("n"), F.count("*").alias("c"),
+                F.stddev_pop("cn").alias("sd")).collect()[0])
+    avg = (occ.n or 0) / max(occ.c, 1) or 1.0
+    ring = 1
+    while (2 * ring + 1) ** 2 * avg < 4.0 * k and ring < 8:
+        ring += 1
+    if (occ.sd or 0.0) > avg:
+        ring += 1
+
+    q_tiles = (_explode_neighbor_cells(q, "q_cell", res, ring)
+               .select("qid", "q_lon", "q_lat",
+                       F.shiftright("n_cell", _TILE_SHIFT).alias("tile"))
+               .distinct())
+    items_t = i.drop("i_cell")
+    ranked = _tile_pass(q_tiles, items_t, k,
+                        (ring * 180.0 / 2 ** res) ** 2).persist()
     unproven = q.join(ranked.filter(F.col("rank") == k), "qid", "left_anti") \
-        .select("qid", F.col("q_lon").alias("lon"), F.col("q_lat").alias("lat"))
+        .select("qid", "q_lon", "q_lat")
     n_left = unproven.count()                   # also materializes ranked
+    tiles = ([r.tile for r in items_t.select("tile").distinct().collect()]
+             if n_left else [])
     KNN_LAST_RUN.clear()
-    KNN_LAST_RUN.update(initial_ring=ring, rounds=1, fallback_queries=n_left)
+    KNN_LAST_RUN.update(initial_ring=ring, rounds=1 + bool(tiles),
+                        fallback_queries=n_left)
 
     results = ranked
-    if n_left:
-        li = i.select("iid", F.col("i_lon").alias("lon"),
-                      F.col("i_lat").alias("lat"))
-        brute = (knn_geo_bq(unproven, li, k) if n_left <= 1024
-                 else knn_geo(unproven, li, k, broadcast_items=False))
+    if tiles:
+        every_tile = F.array(*map(F.lit, tiles)).cast("array<bigint>")
+        residue = _tile_pass(
+            unproven.withColumn("tile", F.explode(every_tile)), items_t, k,
+            float("inf"))
         results = (ranked.join(unproven.select("qid"), "qid", "left_anti")
-                   .unionByName(brute).persist())
+                   .unionByName(residue).persist())
         results.count()
         ranked.unpersist()
     q.unpersist()
@@ -367,28 +301,24 @@ def _explode_neighbor_cells(df: DataFrame, cell_col: str, res: int,
             .drop("_nbx", "_nby", "o", "n_y", "n_x"))
 
 
-def pip_join_rects(points: DataFrame, rects: list, lon_col: str = "lon",
-                   lat_col: str = "lat", out_col: str = "cc") -> DataFrame:
-    """Generic broadcast PiP join against caller-supplied polygons
-    (given as rectangles ``(cc, xmin, ymin, xmax, ymax)`` here, packed
-    into real ring geometry and resolved by the same ray-casting code
-    as the country join).  First containing polygon in sorted-cc order
-    wins; '' on miss — the J1 semantics over arbitrary dims."""
+def pip_join(points: DataFrame, polys: list, lon_col: str = "lon",
+             lat_col: str = "lat", out_col: str = "cc") -> DataFrame:
+    """Generic broadcast PiP join against caller-supplied
+    ``PackedPolygon``s, resolved by the same ray-casting code as the
+    country join.  First containing polygon in sorted-cc order wins;
+    '' on miss — the J1 semantics over arbitrary dims."""
     from ..spatial.boundaries import BoundaryIndex
-    from ..spatial.geometry import pack_polygon
 
-    polys = [pack_polygon(cc, [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]])
-             for cc, x0, y0, x1, y1 in rects]
     index = BoundaryIndex(polys)
 
     @pandas_udf("string")
-    def rect_cc(lon: pd.Series, lat: pd.Series) -> pd.Series:
+    def poly_cc(lon: pd.Series, lat: pd.Series) -> pd.Series:
         import numpy as np
         return pd.Series(index.lookup(lon.to_numpy(dtype=np.float64),
                                       lat.to_numpy(dtype=np.float64)),
                          dtype=object)
 
-    return points.withColumn(out_col, rect_cc(F.col(lon_col), F.col(lat_col)))
+    return points.withColumn(out_col, poly_cc(F.col(lon_col), F.col(lat_col)))
 
 
 def radius_join(left: DataFrame, right: DataFrame, radius_deg: float,
@@ -455,27 +385,23 @@ def polygon_cover_table(spark, polys: list, res: int = 9,
     return spark.createDataFrame(rows, "cc string, cell_id long, kind string")
 
 
-def pip_join_via_cover(points: DataFrame, rects: list, res: int = 8,
+def pip_join_via_cover(points: DataFrame, polys: list, res: int = 8,
                        id_col: str = "id", lon_col: str = "lon",
                        lat_col: str = "lat", out_col: str = "cc",
                        cell_family: str = "quad") -> DataFrame:
-    """J1 as a cover EQUI-join (the SURVEY §2.3 scale plan): points in
-    a polygon's *interior* cells resolve from the broadcast
-    (cell_id → cc) dimension alone — no geometry math; only points in
+    """J1 as a cover EQUI-join (the SURVEY §2.3 scale plan) against
+    ``PackedPolygon``s: points in a polygon's *interior* cells resolve
+    from the broadcast (cell_id → cc) dimension alone — no geometry
+    math; only points in
     *boundary* cells ray-cast, and only against the polygons whose
     cover produced the row.  Same first-containing/sorted-cc/''-miss
-    semantics as pip_join_rects (shared oracle), different physical
+    semantics as pip_join (shared oracle), different physical
     strategy: broadcast hash join + a Python island sized by the
     boundary fraction instead of the whole input.  ``cell_family``
     picks quad or hex cells; exactness is family-independent (both
     covers are sound), only the boundary fraction changes.
     """
-    from ..spatial.geometry import pack_polygon
-
     spark = points.sparkSession
-    polys = [pack_polygon(cc, [[(x0, y0), (x1, y0), (x1, y1), (x0, y1),
-                                (x0, y0)]])
-             for cc, x0, y0, x1, y1 in rects]
     by_cc = {p.cc: p for p in polys}
     cover = polygon_cover_table(spark, polys, res, cell_family=cell_family)
 

@@ -15,6 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from . import cellindex
+from .hexindex import (_OFF_X as _HEX_OFF_X, _OFF_Y as _HEX_OFF_Y,
+                       _Q_SHIFT as _HEX_Q_SHIFT, _QR_MASK as _HEX_QR_MASK,
+                       _RES_SHIFT as _HEX_RES_SHIFT, hex_wu)
+
 __all__ = ["cell_expr", "tile_expr", "zorder_expr", "parent_expr",
            "hexcell_expr", "hex_parent_expr"]
 
@@ -23,7 +28,9 @@ _M2 = 0x00FF00FF00FF00FF
 _M3 = 0x0F0F0F0F0F0F0F0F
 _M4 = 0x3333333333333333
 _M5 = 0x5555555555555555
-_RES_SHIFT = 58
+# cellindex keeps the shift as np.uint64 for its numpy chain; Column
+# literals take a Python int
+_RES_SHIFT = int(cellindex._RES_SHIFT)
 
 
 def _spread(x: Column) -> Column:
@@ -96,13 +103,6 @@ def parent_expr(cell: Column, res: int, parent_res: int) -> Column:
 
 # ---------------------------------------------------------------- hex twin
 
-_HEX_OFF_X = 540_000_000
-_HEX_OFF_Y = 450_000_000
-_HEX_Q_SHIFT = 26
-_HEX_RES_SHIFT = 52
-_HEX_QR_MASK = (1 << 26) - 1
-
-
 def _idiv(x: Column, d: int) -> Column:
     """Exact non-negative integer division in pure Column algebra:
     (x - x % d) is exactly divisible, and IEEE double division of an
@@ -114,7 +114,6 @@ def _idiv(x: Column, d: int) -> Column:
 def _hex_assign(x: Column, y: Column, res: int):
     """(q, row) columns from offset-µdeg integer coords — JVM twin of
     hexindex._assign_xy (same band → zigzag-triangle → axial chain)."""
-    from .hexindex import hex_wu
     w, u = hex_wu(res)
     yp = y + F.lit(u)
     band = _idiv(yp, 3 * u)
@@ -152,7 +151,6 @@ def hex_parent_expr(cell: Column, res: int, parent_res: int) -> Column:
     fine cell re-assigned at parent_res (H3-parent semantics).
     ``cell`` must be a materialized column attribute — see
     hexcell_expr's note on expression-tree blowup."""
-    from .hexindex import hex_wu
     w, u = hex_wu(res)
     q = F.shiftrightunsigned(cell, _HEX_Q_SHIFT).bitwiseAND(F.lit(_HEX_QR_MASK))
     r = cell.bitwiseAND(F.lit(_HEX_QR_MASK))

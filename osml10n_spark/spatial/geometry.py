@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["PackedPolygon", "pack_polygon", "points_in_polygon"]
+__all__ = ["PackedPolygon", "pack_polygon", "pack_rect", "points_in_polygon"]
 
 
 class PackedPolygon:
@@ -119,6 +119,13 @@ def pack_polygon(cc: str, rings: list) -> PackedPolygon:
                              empty.copy())
     return PackedPolygon(cc, np.concatenate(x1s), np.concatenate(y1s),
                          np.concatenate(x2s), np.concatenate(y2s))
+
+
+def pack_rect(cc: str, x0: float, y0: float, x1: float,
+              y1: float) -> PackedPolygon:
+    """The axis-aligned rectangle [x0, x1] × [y0, y1] as one ring."""
+    return pack_polygon(cc, [[(x0, y0), (x1, y0), (x1, y1), (x0, y1),
+                              (x0, y0)]])
 
 
 def points_in_polygon(poly: PackedPolygon, lon, lat) -> np.ndarray:

@@ -181,8 +181,10 @@ def test_pip_hexcover_plan_and_parity(spark):
     (broadcast dimension join, no SMJ/cartesian) and agrees with the
     quad-cover result row-for-row."""
     from osml10n_spark.operators.spatial import pip_join_via_cover
-    rects = [("aa", -20.0, -20.0, 15.0, 10.0), ("bb", 0.0, 0.0, 30.0, 25.0),
-             ("cc", -170.0, -80.0, -140.0, -55.0)]
+    from osml10n_spark.spatial.geometry import pack_rect
+    rects = [pack_rect("aa", -20.0, -20.0, 15.0, 10.0),
+             pack_rect("bb", 0.0, 0.0, 30.0, 25.0),
+             pack_rect("cc", -170.0, -80.0, -140.0, -55.0)]
     pts = spark.range(4000).selectExpr(
         "id", "((id * 37) % 360) - 180 + 0.5 AS lon",
         "((id * 7) % 160) - 80 + 0.5 AS lat")

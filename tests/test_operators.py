@@ -103,34 +103,35 @@ def test_knn_cells_drops_null_nan_coords(spark):
                                     valid, 3))
 
 
-def test_knn_geo_bq_matches_window_plan(spark):
-    """Broadcast-queries partial-top-k brute force (the knn_cells
-    residue plan) is row-identical to the generic window-plan brute
-    force, including exact-duplicate items (ties at the kth distance
-    resolved by iid on both plans) and ranks/dist2 values."""
-    from osml10n_spark.operators.spatial import knn_geo_bq
-    q = _points_df(spark, 15, 4, "q")
-    items = _points_df(spark, 200, 5, "i")
-    dup = items.limit(6).select(
-        F.concat(F.lit("zz_"), F.col("iid")).alias("iid"), "lon", "lat")
-    items = items.unionByName(dup)
-    a = {(r.qid, r.rank): (r.iid, r.dist2)
-         for r in knn_geo(q, items, 3).collect()}
-    b = {(r.qid, r.rank): (r.iid, r.dist2)
-         for r in knn_geo_bq(q, items, 3).collect()}
-    assert a == b
-
-
-def test_knn_cells_sparse_fallback(spark):
-    # items far away from queries → every query goes to brute force
-    from osml10n_spark.operators.spatial import KNN_LAST_RUN
+def test_knn_cells_sparse_fallback(spark, monkeypatch):
+    """Queries the ring cannot prove run the tile pass again against
+    every occupied tile, ≡ knn_geo: items far from every query, then a
+    res-9 ring too fine for a sparse cloud with exact-duplicate items
+    (ties at the kth distance resolved by iid on both plans) and a
+    matrix budget small enough to split a residue tile into chunks."""
+    from osml10n_spark.operators import spatial
+    monkeypatch.setattr(spatial, "_CHUNK_CELLS", 4)
     q = _points_df(spark, 5, 3, "q")
     items = spark.createDataFrame(
         [("i0", 170.0, 80.0), ("i1", -170.0, -80.0), ("i2", 100.0, -70.0)],
         "iid string, lon double, lat double")
     cells = _knn_rows(knn_cells(q, items, 2, res=6))
-    assert KNN_LAST_RUN["fallback_queries"] == 5
+    assert spatial.KNN_LAST_RUN["fallback_queries"] == 5
     assert cells == _knn_rows(knn_geo(q, items, 2))
+
+    q = _points_df(spark, 15, 4, "q").unionByName(spark.createDataFrame(
+        [("tie", 75.0, 50.0)], "qid string, lon double, lat double"))
+    items = _points_df(spark, 200, 5, "i")
+    dup = items.limit(6).select(
+        F.concat(F.lit("zz_"), F.col("iid")).alias("iid"), "lon", "lat")
+    four = spark.createDataFrame([(f"t{n}", 60.0, 40.0) for n in range(4)],
+                                 "iid string, lon double, lat double")
+    items = items.unionByName(dup).unionByName(four)
+    cells = _knn_rows(knn_cells(q, items, 3, res=9))
+    assert spatial.KNN_LAST_RUN["fallback_queries"] == 16
+    assert spatial.KNN_LAST_RUN["rounds"] == 2
+    assert cells == _knn_rows(knn_geo(q, items, 3))
+    assert [cells[("tie", r)][0] for r in (1, 2, 3)] == ["t0", "t1", "t2"]
 
 
 def test_knn_cells_guard_proves_only_in_ring_rows(spark):
@@ -182,21 +183,6 @@ def test_hash_dup_pairs_rejects_oversized_hamming(spark):
     df = spark.createDataFrame([(1, 5)], "doc_id long, sig long")
     with pytest.raises(ValueError, match="max_hamming"):
         hash_dup_pairs(df, "doc_id", "sig", max_hamming=64)
-
-
-def test_knn_geo_bq_rejects_oversized_query_side(spark):
-    """The broadcast-queries plan collects the query side — the bound
-    is enforced in-function, not trusted to the caller."""
-    import pytest
-    from osml10n_spark.operators.spatial import knn_geo_bq
-    q = spark.range(20).selectExpr("id AS qid", "CAST(id AS double) AS lon",
-                                   "CAST(id AS double) AS lat")
-    items = spark.range(5).selectExpr("id AS iid", "CAST(id AS double) AS lon",
-                                      "CAST(id AS double) AS lat")
-    with pytest.raises(ValueError, match="max_queries"):
-        knn_geo_bq(q, items, 3, max_queries=10)
-    # at/under the cap the plan is unchanged
-    assert knn_geo_bq(q, items, 1, max_queries=20).count() == 20
 
 
 def test_hash_dup_pairs_banded_equals_brute(spark):
