@@ -846,13 +846,13 @@ FROM nation
 def q_cell_rollup(spark, sf_dir):
     """Hierarchical cell rollup (hypertable-style multi-resolution
     aggregation): res-9 histogram rolled up to res-6 parents with pure
-    JVM bit math (parent = res tag swap + morton >> 2*(9-6)) — no
-    re-indexing of the points."""
+    JVM bit math (``parent_expr``: res tag swap + morton >> 2*(9-6)) —
+    no re-indexing of the points."""
+    from .spatial.cellexpr import parent_expr
     pts = _points(spark, sf_dir)
     fine = cell_histogram(assign_cells(pts, res=9))
-    morton = F.col("cell_id").bitwiseAND(F.lit((1 << 58) - 1))
-    parent = F.lit(6 << 58).bitwiseOR(F.shiftrightunsigned(morton, 6))
-    return (fine.withColumn("parent_cell", parent)
+    return (fine
+            .withColumn("parent_cell", parent_expr(F.col("cell_id"), 9, 6))
             .groupBy("parent_cell")
             .agg(F.sum("n_rows").alias("n_rows"),
                  F.count("*").alias("n_child_cells")))

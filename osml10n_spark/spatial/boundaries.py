@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import pathlib
-import pickle
 
 import numpy as np
 
@@ -61,9 +60,6 @@ class BoundaryIndex:
 
     def lookup_one(self, lon: float, lat: float) -> str:
         return str(self.lookup(np.array([lon]), np.array([lat]))[0])
-
-    def dumps(self) -> bytes:
-        return pickle.dumps(self)
 
 
 def _feature_rings(geometry: dict) -> list:

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["PackedPolygon", "pack_polygon", "pack_rect", "points_in_polygon"]
+__all__ = ["PackedPolygon", "pack_polygon", "pack_rect"]
 
 
 class PackedPolygon:
@@ -126,8 +126,3 @@ def pack_rect(cc: str, x0: float, y0: float, x1: float,
     """The axis-aligned rectangle [x0, x1] × [y0, y1] as one ring."""
     return pack_polygon(cc, [[(x0, y0), (x1, y0), (x1, y1), (x0, y1),
                               (x0, y0)]])
-
-
-def points_in_polygon(poly: PackedPolygon, lon, lat) -> np.ndarray:
-    return poly.contains(np.asarray(lon, dtype=np.float64),
-                         np.asarray(lat, dtype=np.float64))

@@ -1,7 +1,8 @@
 """North-rule run mode: the job must work via
 ``spark-submit --py-files osml10n_spark.zip run_job.py`` with the
 package shipped ONLY through the zip (cwd is a scratch dir, not the
-repo), and a rerun against the same store must resume (0 new rows)."""
+repo), and a rerun against the same store must resume (0 new rows).
+Under spark-submit, --master / --conf win over the engine's defaults."""
 import json
 import pathlib
 import shutil
@@ -14,13 +15,18 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 SPARK_SUBMIT = shutil.which("spark-submit")
 
 
-@pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
-def test_spark_submit_pyfiles_job_and_resume(tmp_path):
+def _make_zip(tmp_path):
     zip_path = tmp_path / "osml10n_spark.zip"
     subprocess.run([sys.executable, str(REPO / "run_job.py"),
                     "--make-zip", str(zip_path)],
                    check=True, cwd=str(REPO), capture_output=True)
     assert zip_path.exists()
+    return zip_path
+
+
+@pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
+def test_spark_submit_pyfiles_job_and_resume(tmp_path):
+    zip_path = _make_zip(tmp_path)
 
     store = tmp_path / "store"
     script = tmp_path / "run_job.py"
@@ -51,22 +57,27 @@ def test_spark_submit_pyfiles_job_and_resume(tmp_path):
     assert summary2["resumed_from"] >= 1
 
 
-def test_run_job_hex_res_flag(tmp_path):
-    """--hex-res adds the H3-analog cell column on the localize path,
-    bit-identical to the numpy kernel on the written rows."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from osml10n_spark.spatial.hexindex import hexcell_from_lonlat
-
-    out = tmp_path / "localized"
+@pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
+def test_spark_submit_conf_wins(tmp_path):
+    """Under spark-submit, build_session applies an engine default only
+    where --master / --conf left the key unset."""
+    zip_path = _make_zip(tmp_path)
+    script = tmp_path / "conf_probe.py"
+    script.write_text(
+        "import json\n"
+        "from osml10n_spark.engine.session import build_session\n"
+        "c = build_session('conf-probe').conf\n"
+        "print(json.dumps({k: c.get(k) for k in ('spark.master', "
+        "'spark.sql.session.timeZone', "
+        "'spark.sql.autoBroadcastJoinThreshold')}))\n")
     r = subprocess.run(
-        [sys.executable, str(REPO / "run_job.py"), "--generate", "200",
-         "--output", str(out), "--hex-res", "8"],
-        cwd=str(REPO), capture_output=True, text=True, timeout=420,
-        env={**__import__("os").environ, "PYSPARK_PYTHON": sys.executable})
+        [SPARK_SUBMIT, "--master", "local[1]",
+         "--conf", "spark.sql.session.timeZone=America/New_York",
+         "--py-files", str(zip_path), str(script)],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-3000:]
-    t = pq.read_table(str(out), columns=["lon", "lat", "hexcell"]).to_pydict()
-    assert len(t["hexcell"]) == 200
-    want = hexcell_from_lonlat(np.array(t["lon"]), np.array(t["lat"]), 8)
-    assert np.array_equal(want, np.array(t["hexcell"]))
+    got = json.loads([l for l in r.stdout.splitlines()
+                      if l.startswith("{")][-1])
+    assert got == {"spark.master": "local[1]",
+                   "spark.sql.session.timeZone": "America/New_York",
+                   "spark.sql.autoBroadcastJoinThreshold": "67108864"}
